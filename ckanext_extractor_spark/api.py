@@ -57,6 +57,7 @@ import re
 import time
 import uuid
 from collections import OrderedDict
+from contextlib import contextmanager
 
 import numpy as np
 from dataclasses import dataclass, field
@@ -77,14 +78,16 @@ from ckanext_extractor_spark.manifest import (
     STATUS_IGNORED,
     STATUS_NEW,
     STATUS_UPDATE,
+    STATUS_UNCHANGED,
     append_lineage,
     compute_statuses,
+    lineage_from_raw,
     read_doc_manifest,
     read_lineage,
-    split_raw_postings,
     tokenize_with_lineage,
 )
 from ckanext_extractor_spark.operators.build import (
+    POSTINGS_SCHEMA,
     build_corpus_stats,
     build_dictionary,
     build_doc_stats,
@@ -109,6 +112,21 @@ class ValidationError(ValueError):
     ckan.logic.ValidationError raised by the action schemas,
     logic/schema.py:58-67 — mandatory non-empty id, boolean force;
     pinned by tests logic/test_action.py:193-200)."""
+
+
+def _query_cache_key(
+    query, k, conjunctive, mode, exclude, min_match, fq, start
+) -> tuple:
+    """search()'s result-cache key: every argument next to its type, so
+    values that compare equal across types (True == 1, 2.0 == 2) get
+    distinct keys and a cache hit is always a call that passed
+    validation. A flat tuple: it is built on every search. Raises
+    TypeError/AttributeError on a malformed ``fq``."""
+    return (
+        type(query), query, type(k), k, type(conjunctive), conjunctive,
+        type(mode), mode, type(exclude), exclude, type(min_match), min_match,
+        type(fq), tuple(sorted(fq.items())) if fq else None, type(start), start,
+    )
 
 
 def _require_bool(name: str, v) -> bool:
@@ -556,7 +574,7 @@ class ExtractorEngine:
         immediately with ``in_progress=True`` (reference: duplicate task
         refusal, action.py:121-123).
         """
-        t0 = time.time()
+        t0 = time.perf_counter()
         self._check_access("extractor_extract")
         _require_bool("force", force)
         if build_id is not None and (
@@ -566,7 +584,8 @@ class ExtractorEngine:
         build_id = build_id or uuid.uuid4().hex[:12]
         if not self._acquire_lock(build_id):
             return BuildReport(
-                build_id=build_id, in_progress=True, wall_sec=time.time() - t0
+                build_id=build_id, in_progress=True,
+                wall_sec=time.perf_counter() - t0,
             )
         try:
             return self._extract_locked(corpus, force, build_id, t0)
@@ -576,7 +595,6 @@ class ExtractorEngine:
     def _extract_locked(
         self, corpus: DataFrame, force: bool, build_id: str, t0: float
     ) -> BuildReport:
-        spark = self.spark
         prepared = prepare_corpus(corpus, ("*",))  # keep all; lang gates status
         if self.hooks.before_tokenize:
             prepared = self.hooks.before_tokenize(prepared)
@@ -584,40 +602,57 @@ class ExtractorEngine:
         lang_ok = glob_filter_expr(F.col("lang"), self.indexed_langs)
         if self.ignore_where:
             lang_ok = lang_ok & ~F.expr(self.ignore_where)
-        manifest = read_doc_manifest(spark, self.root)
-
-        # Slim metadata pass: everything after this point that isn't the
-        # tokenize kernel operates on content-free rows. The corpus content
-        # is scanned exactly twice per build — once here (sha/fidelity) and
-        # once inside tokenize — never cached, never carried through joins.
-        meta_slim = prepared.drop("content").cache()
+        mpath = self._p("doc_manifest")
+        manifest = (
+            read_doc_manifest(self.spark, self.root)
+            if self.fs.exists(mpath) and self._has_part_files(mpath)
+            else None
+        )
+        # `statused` is the build's one cached per-doc frame: content-free
+        # rows plus their status, filled by the status collect. Every later
+        # bookkeeping job (gen docs, doc_stats, field sidecars, manifest)
+        # reads it instead of re-planning the manifest join. The corpus
+        # content is scanned exactly twice per build — once here
+        # (sha/fidelity) and once inside tokenize — never cached, never
+        # carried through joins.
+        statused = compute_statuses(
+            prepared.drop("content"), manifest, lang_ok, force=force
+        ).cache()
         try:
             return self._extract_body(
-                spark, prepared, meta_slim, manifest, lang_ok, force,
-                build_id, t0,
+                prepared, statused, manifest, build_id, t0
             )
         finally:
-            meta_slim.unpersist()
+            statused.unpersist()
 
     def _extract_body(
-        self, spark, prepared, meta_slim, manifest, lang_ok, force,
-        build_id, t0,
+        self, prepared, statused, manifest, build_id, t0
     ) -> BuildReport:
+        spark = self.spark
         stage_sec: dict[str, float] = {}
-        _t = time.time()
-        statused = compute_statuses(meta_slim, manifest, lang_ok, force=force)
-        # one collect yields the status histogram AND the changed-bytes
-        # estimate the tokenize-spread rule needs (no extra job)
-        _sz = (
-            F.sum("size_bytes") if "size_bytes" in statused.columns
-            else F.lit(None)
-        )
-        _status_rows = statused.groupBy("status").agg(
-            F.count("*").alias("n"), _sz.alias("b")
-        ).collect()
+
+        def stage(name):
+            return _build_stage(spark, build_id, name, stage_sec)
+
+        with stage("status"):
+            # one collect yields the status histogram AND the changed-bytes
+            # estimate the tokenize-spread rule needs (no extra job)
+            _sz = (
+                F.sum("size_bytes") if "size_bytes" in statused.columns
+                else F.lit(None)
+            )
+            # under AQE the cache fills in a query stage of its own, at
+            # full parallelism; one partition then serves the 3-row
+            # histogram with no exchange (one job fewer). Without AQE a
+            # coalesce would pull the cache fill into a single task.
+            hist = statused
+            if spark.conf.get("spark.sql.adaptive.enabled", "true") == "true":
+                hist = statused.coalesce(1)
+            _status_rows = hist.groupBy("status").agg(
+                F.count("*").alias("n"), _sz.alias("b")
+            ).collect()
         counts = {r["status"]: r["n"] for r in _status_rows}
         bytes_by_status = {r["status"]: r["b"] or 0 for r in _status_rows}
-        stage_sec["status"] = time.time() - _t
         n_changed = counts.get(STATUS_NEW, 0) + counts.get(STATUS_UPDATE, 0)
         n_ignored = counts.get(STATUS_IGNORED, 0)
         if n_changed == 0 and n_ignored == 0:
@@ -627,92 +662,47 @@ class ExtractorEngine:
                 build_id=build_id,
                 status_counts=counts,
                 n_indexed=0,
-                wall_sec=time.time() - t0,
+                wall_sec=time.perf_counter() - t0,
             )
 
-        to_index_ids = statused.where(
+        # whole batch changed (fresh build / force): the changed-doc
+        # filters below are no-ops — skip them
+        whole_batch = n_changed == sum(counts.values())
+        changed_meta = statused if whole_batch else statused.where(
             F.col("status").isin(STATUS_NEW, STATUS_UPDATE)
-        ).select("doc_id")
-        # second content scan: only changed docs reach the kernel. Selecting
-        # just (doc_id, content, lang) lets Catalyst prune the sha/size
-        # expressions out of this pass; hook transforms stay applied.
-        _t = time.time()
-        if n_changed == sum(counts.values()):
-            # whole batch changed (fresh build / force): skip the semi-join
-            # — it would shuffle the full CONTENT column for a no-op filter
-            to_index = prepared.select("doc_id", "content", "lang")
-        else:
-            to_index = prepared.join(
-                to_index_ids, "doc_id", "left_semi"
-            ).select("doc_id", "content", "lang")
-        # scale-adaptive tokenize spread (see TOKENIZE_TASK_BYTES): only
-        # fires when the input has fewer partitions than cores AND the
-        # changed bytes justify more tasks — at scale the scan partition
-        # count already exceeds parallelism and this is a no-op
-        changed_bytes = int(
-            bytes_by_status.get(STATUS_NEW, 0)
-            + bytes_by_status.get(STATUS_UPDATE, 0)
         )
-        if changed_bytes:
-            target = self._tokenize_spread_target(
-                changed_bytes,
-                to_index.rdd.getNumPartitions(),
-                spark.sparkContext.defaultParallelism,
-            )
-            if target:
-                to_index = to_index.repartition(target)
+        to_index_ids = changed_meta.select("doc_id")
+        # docs whose stored rows this build replaces or purges
+        dropped_ids = statused.where(
+            F.col("status") != STATUS_UNCHANGED
+        ).select("doc_id")
 
         # ---- tokenize delta (resume-aware staging checkpoint) ------------
         staging_rel = os.path.join("staging", "raw_postings", build_id)
         staging = self._p(staging_rel)
         resumed = self.fs.exists(os.path.join(staging, "_SUCCESS"))
-        if not resumed:
-            raw, _, _ = tokenize_with_lineage(to_index, build_id, self.analyzer)
-            tmp = staging + ".inprogress"
-            raw.write.mode("overwrite").parquet(tmp)
-            if self.fs.exists(staging):
-                self.fs.rmtree(staging)
-            self.fs.rename(tmp, staging)  # atomic publish of the stage
-        stage_sec["tokenize_stage"] = time.time() - _t; _t = time.time()
-        raw = spark.read.parquet(staging)
-        delta_postings, lineage = split_raw_postings(raw, build_id)
-        gen_postings_rel = staging_rel
-        if self.hooks.after_extract:
-            delta_postings = self.hooks.after_extract(delta_postings)
-            gen_postings_rel = os.path.join("gens", build_id, "postings")
-            _atomic_overwrite(
-                delta_postings, self._p(gen_postings_rel), spark
-            )
-            delta_postings = spark.read.parquet(
-                self._p(gen_postings_rel)
-            ).where(F.col("term").isNotNull())
-        # Delta sizing (feeds _encode_tasks, approximate by contract): on
-        # a local root the staging parquet FOOTERS give the row count with
-        # zero data pages and zero Spark jobs; the marker rows (~one per
-        # changed doc + one per task) are subtracted estimate-wise. The
-        # lineage collect itself moves into the overlapped group
-        # (t_gen_docs) — it was a serialized ~0.3-0.5 s job between
-        # tokenize and the group (optimization r6, guide §2.6).
-        lin_schema = lineage.schema
-        lin_rows: list | None = None
-        n_delta_rows: int | None = None
-        if self.fs.is_local:
-            try:
-                from ckanext_extractor_spark.operators.segread import (
-                    count_rows,
+        with stage("tokenize_stage"):
+            if not resumed:
+                self._write_tokenize_staging(
+                    prepared, to_index_ids, whole_batch, bytes_by_status,
+                    staging,
                 )
 
-                n_delta_rows = max(0, count_rows(staging) - int(n_changed))
-            except Exception:
-                n_delta_rows = None
-        if n_delta_rows is None:
-            # non-local root: one marker scan yields both the lineage
-            # rows and the exact delta size (pre-r6 behavior)
-            lin_rows = lineage.collect()
-            n_delta_rows = int(
-                sum(int(r["n_postings"] or 0) for r in lin_rows)
-            )
-        stage_sec["lineage_markers"] = time.time() - _t; _t = time.time()
+        with stage("lineage_markers"):
+            raw = spark.read.schema(POSTINGS_SCHEMA).parquet(staging)
+            delta_postings = raw.where(F.col("term").isNotNull())
+            lineage = lineage_from_raw(raw, build_id)
+            gen_postings_rel = staging_rel
+            if self.hooks.after_extract:
+                delta_postings = self.hooks.after_extract(delta_postings)
+                gen_postings_rel = os.path.join("gens", build_id, "postings")
+                _atomic_overwrite(
+                    delta_postings, self._p(gen_postings_rel), spark
+                )
+                delta_postings = spark.read.parquet(
+                    self._p(gen_postings_rel)
+                ).where(F.col("term").isNotNull())
+            n_delta_rows = self._staged_posting_rows(staging, lineage)
 
         next_seq = self._seq + 1
         gen = {
@@ -723,44 +713,54 @@ class ExtractorEngine:
         }
 
         # ---- tombstones: kill older postings of re-indexed/purged docs ---
-        upd_ids = statused.where(F.col("status") == STATUS_UPDATE).select("doc_id")
-        # ignored docs that WERE indexed (private flip / lang change):
-        # their stored postings + metadata are purged (tasks.py:61-68)
-        re_ignored = statused.where(F.col("status") == STATUS_IGNORED).join(
-            manifest.where(F.col("status") == "indexed").select("doc_id"),
-            "doc_id",
-            "left_semi",
-        )
+        # (a fresh index has no older postings to kill)
         n_upd = counts.get(STATUS_UPDATE, 0)
-        if n_upd or n_ignored:
-            tombs = (
-                upd_ids.unionByName(re_ignored.select("doc_id"))
-                .distinct()
-                .select("doc_id", F.lit(next_seq).cast("long").alias("seq"))
-            )
-            tombs.write.mode("append").parquet(self._p("tombstones"))
-            self._dead_cache = None
-            self._tomb_count = None
-        stage_sec["tombstones"] = time.time() - _t; _t = time.time()
+        if manifest is not None and (n_upd or n_ignored):
+            with stage("tombstones"):
+                upd_ids = statused.where(
+                    F.col("status") == STATUS_UPDATE
+                ).select("doc_id")
+                # ignored docs that WERE indexed (private flip / lang
+                # change): their stored postings + metadata are purged
+                # (tasks.py:61-68)
+                re_ignored = statused.where(
+                    F.col("status") == STATUS_IGNORED
+                ).join(
+                    manifest.where(F.col("status") == "indexed").select(
+                        "doc_id"
+                    ),
+                    "doc_id",
+                    "left_semi",
+                )
+                tombs = (
+                    upd_ids.unionByName(re_ignored.select("doc_id"))
+                    .distinct()
+                    .select(
+                        "doc_id", F.lit(next_seq).cast("long").alias("seq")
+                    )
+                )
+                tombs.write.mode("append").parquet(self._p("tombstones"))
+                self._dead_cache = None
+                self._tomb_count = None
 
-        # ---- overlapped stage group (optimization r6, guide §2.6) ---------
-        # Everything below up to the generation commit is a set of
-        # INDEPENDENT Spark jobs over immutable inputs (the published
-        # staging parquet, the cached meta_slim, the OLD index tables):
-        # delta segment encode, gen-docs/lineage bookkeeping, doc_stats →
-        # corpus_stats, field sidecars + manifest, doc_store. Serialized,
-        # their fixed per-job overhead dominated the build at bench scale
-        # (measured: 3.1 s of small-job tail vs 3.8 s of real work per
-        # 50k-doc build); submitted from a thread pool, the small jobs
-        # back-fill the encode stage's tail. Sequential-equivalence:
-        #   * every task reads only OLD table files or the staging dir,
-        #     both immutable during the group;
-        #   * the one table a SIBLING's lazy plan may re-read while its
-        #     own replacement is being written — doc_manifest, via the
-        #     `statused` plan — is written to a temp dir in-task and
-        #     SWAPPED only after every task joined (deferred publish), so
-        #     concurrent reads always see the old files, exactly like the
-        #     sequential order (manifest published last);
+        # ---- overlapped stage group: encode beside the bookkeeping -------
+        # Segment encode runs on this thread while the bookkeeping tables
+        # (gen docs + lineage, doc_stats -> corpus_stats, field sidecars +
+        # manifest, doc_store) run from a thread pool and back-fill the
+        # encode chain's one-task stages and inter-job gaps: in paired
+        # runs this beat running the same side jobs after encode. The side
+        # work is small by construction — its per-doc input is the cached
+        # `statused` frame, staging is read with its known schema, lineage
+        # is appended straight from the staging marker scan — so a fresh
+        # build stays within the job budget in the README.
+        # Sequential-equivalence:
+        #   * every task reads only OLD table files, the staging dir or the
+        #     cached `statused`, all immutable during the group;
+        #   * the manifest is written to a temp dir in-task and SWAPPED
+        #     only after every task joined (deferred publish): a cache
+        #     block recomputed mid-group still reads the old manifest, and
+        #     a failed task leaves the old manifest in place, so a re-run
+        #     of the build_id re-indexes the same docs;
         #   * avgdl is pre-read (corpus_stats is replaced by a task);
         #   * publish order within each dependency chain is unchanged
         #     (norms before field_postings, doc_stats before corpus_stats).
@@ -772,14 +772,8 @@ class ExtractorEngine:
 
         from ckanext_extractor_spark.manifest import doc_lens_from_raw
 
-        avgdl_est = self._avgdl_estimate(meta_slim, lang_ok)
-        # whole batch changed: the to_index_ids semi-joins below are
-        # no-op filters — skip them (fresh-build fast path, same
-        # condition as the to_index branch above)
-        whole_batch = n_changed == sum(counts.values())
-        ignored_ids = statused.where(
-            F.col("status") == STATUS_IGNORED
-        ).select("doc_id")
+        _t = time.perf_counter()
+        avgdl_est = self._avgdl_estimate()
         if resumed:
             # a staging dir from an older build may lack per-doc markers;
             # probe (one tiny job) and fall back to the postings groupBy
@@ -790,26 +784,8 @@ class ExtractorEngine:
             doc_lens = raw.where(
                 F.col("term").isNull() & (F.col("tf") < 0)
             ).select("doc_id", "doc_len")
-        mpath = self._p("doc_manifest")
-        has_prev_manifest = self.fs.exists(mpath) and self._has_part_files(
-            mpath
-        )
-        par_sec: dict[str, float] = {}
-        deferred: list = []
-
-        def _timed(name, fn):
-            t0 = time.time()
-            spark.sparkContext.setJobDescription(
-                f"build {build_id}: {name}"
-            )
-            try:
-                fn()
-            finally:
-                spark.sparkContext.setJobDescription(None)
-            par_sec[name] = round(time.time() - t0, 3)
 
         def t_encode():
-            # ---- delta segments --------------------------------------
             # df-driven salting within this generation: hot terms split
             # by doc-hash so no single encode task owns a whole hot
             # list. Direct partitioned write from the encode tasks — NO
@@ -829,80 +805,66 @@ class ExtractorEngine:
             )
 
         def t_gen_docs():
-            # generation doc set (compaction accounting) + lineage append
+            # generation doc set (compaction accounting) + lineage append,
+            # straight from the staging marker scan
             if n_changed:
                 to_index_ids.write.mode("overwrite").parquet(
                     self._p("gens", build_id, "docs")
                 )
-            rows = lin_rows if lin_rows is not None else lineage.collect()
-            append_lineage(
-                spark.createDataFrame(rows, lin_schema), self.root
-            )
+            append_lineage(lineage, self.root)
 
         def t_doc_stats():
             # doc_stats: changed docs re-derived, unchanged rows kept;
             # doc_len from the kernel's per-doc marker rows (tiny scan)
-            changed_meta = meta_slim if whole_batch else meta_slim.join(
-                to_index_ids, "doc_id", "left_semi"
-            )
             batch_stats = build_doc_stats(
                 changed_meta, delta_postings, doc_lens=doc_lens
             )
             prev_ds = self._read_or_none("doc_stats")
             if prev_ds is not None:
-                dropped = to_index_ids.unionByName(ignored_ids)
-                kept_ds = prev_ds.join(dropped, "doc_id", "left_anti")
+                kept_ds = prev_ds.join(dropped_ids, "doc_id", "left_anti")
                 batch_stats = kept_ds.unionByName(
                     batch_stats, allowMissingColumns=True
                 )
-            _atomic_overwrite(batch_stats, self._p("doc_stats"), spark)
+            ds_path = self._p("doc_stats")
+            _atomic_overwrite(batch_stats, ds_path, spark)
             stats = build_corpus_stats(
-                spark.read.parquet(self._p("doc_stats"))
+                spark.read.schema(batch_stats.schema).parquet(ds_path)
             )
             _atomic_overwrite(stats, self._p("corpus_stats"), spark)
 
         def t_fields_manifest():
-            if "metadata" in meta_slim.columns:
+            if "metadata" in statused.columns:
                 from ckanext_extractor_spark.operators.fields import (
                     build_field_norms,
                     build_field_postings,
                 )
 
-                changed_meta = (
-                    meta_slim if whole_batch else meta_slim.join(
-                        to_index_ids, "doc_id", "left_semi"
-                    )
-                )
                 batch_fp = build_field_postings(changed_meta)
-                # per-(doc, field) norms ride the same build (Lucene
-                # writes norms at flush time; dismax reads them instead
-                # of re-aggregating the whole field table per query) —
-                # merged incrementally with the same kept/dropped
-                # discipline as field_postings so the two never drift
+                # per-(doc, field) norms ride the same build (Lucene writes
+                # norms at flush time; dismax reads them instead of
+                # re-aggregating the whole field table per query) — merged
+                # incrementally with the same kept/dropped discipline as
+                # field_postings so the two never drift
                 batch_norms = build_field_norms(batch_fp)
                 prev_fp = self._read_or_none("field_postings")
                 if prev_fp is not None:
-                    dropped_fp = to_index_ids.unionByName(ignored_ids)
-                    kept_fp = prev_fp.join(
-                        dropped_fp, "doc_id", "left_anti"
-                    )
+                    kept_fp = prev_fp.join(dropped_ids, "doc_id", "left_anti")
                     prev_norms = self._read_or_none("field_norms")
                     if prev_norms is None:
                         # pre-norms store: derive kept docs' norms once
                         kept_norms = build_field_norms(kept_fp)
                     else:
                         kept_norms = prev_norms.join(
-                            dropped_fp, "doc_id", "left_anti"
+                            dropped_ids, "doc_id", "left_anti"
                         )
                     batch_fp = kept_fp.unionByName(batch_fp)
                     batch_norms = kept_norms.unionByName(batch_norms)
-                # norms publish FIRST: the pre-norms upgrade branch
-                # derives kept docs' norms from the OLD field_postings
-                # files, which the postings publish below replaces
+                # norms publish FIRST: the pre-norms upgrade branch derives
+                # kept docs' norms from the OLD field_postings files, which
+                # the postings publish below replaces
                 _atomic_overwrite(batch_norms, self._p("field_norms"), spark)
                 _atomic_overwrite(batch_fp, self._p("field_postings"), spark)
-            # manifest: heavy write now, swap deferred past the group
-            # join (siblings' statused plans re-read the old files)
+            # manifest: heavy write now, swap deferred past the group join
             new_manifest = statused.select(
                 "doc_id",
                 "content_sha256",
@@ -913,9 +875,9 @@ class ExtractorEngine:
                 F.lit(build_id).alias("build_id"),
             )
             # merge: keep manifest rows for docs not in this batch
-            if has_prev_manifest:
+            if manifest is not None:
                 kept_m = manifest.join(
-                    meta_slim.select("doc_id"), "doc_id", "left_anti"
+                    statused.select("doc_id"), "doc_id", "left_anti"
                 )
                 new_manifest = kept_m.unionByName(new_manifest)
             if self.hooks.after_save:
@@ -945,12 +907,11 @@ class ExtractorEngine:
                 )
             prev_store = self._read_or_none("doc_store")
             if prev_store is not None:
-                dropped_st = to_index_ids.unionByName(ignored_ids)
                 # allowMissingColumns: a store written before (or after)
                 # offsets were enabled merges with null blobs — snippet
                 # lookups fall back to the analyzer re-scan there
                 batch_store = prev_store.join(
-                    dropped_st, "doc_id", "left_anti"
+                    dropped_ids, "doc_id", "left_anti"
                 ).unionByName(batch_store, allowMissingColumns=True)
             # fulltext compresses ~3-5x under zstd; the doc store is
             # read only for show()/snippets() point lookups
@@ -959,23 +920,27 @@ class ExtractorEngine:
                 compression="zstd",
             )
 
+        mpath = self._p("doc_manifest")
+        deferred: list = []
         side_tasks = [("gen_docs", t_gen_docs), ("doc_stats", t_doc_stats),
                       ("fields_manifest", t_fields_manifest)]
         if self.store_content:
             side_tasks.append(("doc_store", t_doc_store))
+
+        def timed(name, fn):
+            with stage(name):
+                fn()
+
         with ThreadPoolExecutor(max_workers=len(side_tasks)) as pool:
-            futs = [
-                pool.submit(_timed, name, fn) for name, fn in side_tasks
-            ]
+            futs = [pool.submit(timed, name, fn) for name, fn in side_tasks]
             if n_changed:
-                _timed("encode_segments", t_encode)
+                timed("encode_segments", t_encode)
             for f in futs:
                 f.result()
         for publish in deferred:
             publish()
-        stage_sec["overlap_group_wall"] = round(time.time() - _t, 3)
-        stage_sec.update(par_sec)
-        _t = time.time()
+        stage_sec["overlap_group_wall"] = time.perf_counter() - _t
+        _t = time.perf_counter()
         self._stats_cache = None  # N/avgdl changed
 
         # ---- commit generation --------------------------------------------
@@ -985,7 +950,7 @@ class ExtractorEngine:
         self._write_meta()
         self.cool()  # cached segments are stale after a rebuild
         compacted = self.maybe_compact()
-        stage_sec["compact_gc"] = time.time() - _t
+        stage_sec["compact_gc"] = time.perf_counter() - _t
         self._gc_staging()
         self._gc_orphan_gens()
         if self.hooks.after_index:
@@ -995,10 +960,70 @@ class ExtractorEngine:
             build_id=build_id,
             status_counts=counts,
             n_indexed=n_changed,
-            wall_sec=time.time() - t0,
+            wall_sec=time.perf_counter() - t0,
             resumed=resumed,
             compacted=compacted,
             stage_sec={k: round(v, 3) for k, v in stage_sec.items()},
+        )
+
+    def _write_tokenize_staging(
+        self, prepared, to_index_ids, whole_batch, bytes_by_status, staging
+    ) -> None:
+        """Tokenize the changed docs into ``staging`` (published atomically;
+        a later run of the same build_id resumes from it). Only changed docs
+        reach the kernel; selecting just (doc_id, content, lang) lets
+        Catalyst prune the sha/size expressions out of this second content
+        scan, and hook transforms stay applied."""
+        if whole_batch:
+            # skip the semi-join — it would shuffle the full CONTENT column
+            # for a no-op filter
+            to_index = prepared.select("doc_id", "content", "lang")
+        else:
+            to_index = prepared.join(
+                to_index_ids, "doc_id", "left_semi"
+            ).select("doc_id", "content", "lang")
+        # scale-adaptive tokenize spread (see TOKENIZE_TASK_BYTES): only
+        # fires when the input has fewer partitions than cores AND the
+        # changed bytes justify more tasks — at scale the scan partition
+        # count already exceeds parallelism and this is a no-op
+        changed_bytes = int(
+            bytes_by_status.get(STATUS_NEW, 0)
+            + bytes_by_status.get(STATUS_UPDATE, 0)
+        )
+        if changed_bytes:
+            target = self._tokenize_spread_target(
+                changed_bytes,
+                to_index.rdd.getNumPartitions(),
+                self.spark.sparkContext.defaultParallelism,
+            )
+            if target:
+                to_index = to_index.repartition(target)
+        raw = tokenize_with_lineage(to_index, self.analyzer)
+        tmp = staging + ".inprogress"
+        raw.write.mode("overwrite").parquet(tmp)
+        if self.fs.exists(staging):
+            self.fs.rmtree(staging)
+        self.fs.rename(tmp, staging)  # atomic publish of the stage
+
+    def _staged_posting_rows(self, staging: str, lineage: DataFrame) -> int:
+        """Posting rows in a staging dir (sizes the encode shuffle). On a
+        local root the parquet footers give it exactly — rows minus `term`
+        nulls per row group counts out both marker kinds — with no data
+        page and no Spark job, and independent of this run's status counts
+        (a resumed build may stage an older corpus slice). Other roots sum
+        the partition markers' posting counts."""
+        if self.fs.is_local:
+            from ckanext_extractor_spark.operators.segread import (
+                count_non_null,
+            )
+
+            try:
+                return count_non_null(staging, "term")
+            except (OSError, ValueError):  # unreadable footer / no null count
+                pass
+        return sum(
+            int(r["n_postings"] or 0)
+            for r in lineage.select("n_postings").collect()
         )
 
     def _tokenize_spread_target(
@@ -1046,7 +1071,7 @@ class ExtractorEngine:
         )
         return prepared.withColumn("metadata", mcol)
 
-    def _avgdl_estimate(self, meta_slim, lang_ok) -> float:
+    def _avgdl_estimate(self) -> float:
         """avgdl for the delta encode's block-max metadata. Query paths
         rebuild block maxes from decoded (tf, dl) with the CURRENT avgdl
         (wand.term_postings_from_rows), so this value affects no result —
@@ -1081,9 +1106,10 @@ class ExtractorEngine:
         spark.read.parquet re-lists files and re-reads footers (~0.2 s
         per call on local[32]) for an identical logical plan. No data is
         cached — every action still computes from the parquet files; the
-        memo is dropped by cool(), which every index mutation (extract
-        commit, delete, compaction, metadata update) already calls, so a
-        mutated index never serves a stale file listing."""
+        memo is dropped by cool(), which every postings mutation (extract
+        commit, delete, compaction) calls, so a mutated index never serves
+        a stale file listing. Metadata updates touch no postings file and
+        clear only the result cache."""
         if self._live_postings_cache is not None:
             return self._live_postings_cache
         dfs = []
@@ -1976,6 +2002,8 @@ class ExtractorEngine:
             batch_norms = kept_norms.unionByName(batch_norms)
         _atomic_overwrite(batch_norms, self._p("field_norms"), spark)
         _atomic_overwrite(batch_fp, self._p("field_postings"), spark)
+        # fq-filtered hits depend on the metadata just rewritten
+        self._query_cache.clear()
 
     # -- compaction ---------------------------------------------------------
     def snapshot(self, dest_root: str) -> dict:
@@ -2190,7 +2218,7 @@ class ExtractorEngine:
             )
             self._encode_and_write_segments(
                 salted,
-                self._avgdl_estimate(None, None),
+                self._avgdl_estimate(),
                 self._encode_tasks(None),
                 self._p("gens", new_id, "segments"),
             )
@@ -2392,24 +2420,25 @@ class ExtractorEngine:
 
         Results are memoized per (query, k, conjunctive, mode) — the Solr
         queryResultCache analog — and invalidated by any index mutation
-        (extract/delete/compact all call cool())."""
+        (extract/delete/compact call cool(); metadata updates clear it)."""
         self._check_access("extractor_search")
         # cache-hit fast path (optimization r6): a hit means this EXACT
         # argument tuple already passed every validation below on its
         # first (computing) call — the key covers all arguments that
         # reach _search_uncached — so repeat queries skip straight to
-        # the memo. Unhashable/malformed arguments can't produce a key
-        # that exists in the cache; they fall through to the validators,
-        # which raise the same errors as before.
+        # the memo. Keys tag every argument with its type, so a value
+        # that hashes equal across types (True == 1, 2.0 == 2) can't hit
+        # a validated entry; unhashable/malformed arguments fall through
+        # to the validators, which raise the same errors as before.
         if synonyms is None and (
             fq is None or (isinstance(fq, dict) and fq)
         ):
             # (a falsy non-None fq — {} or [] — must NOT alias the
             # fq=None cache key; it falls through to the validator)
             try:
-                _fast_ck = (
-                    query, k, conjunctive, mode, exclude, min_match,
-                    tuple(sorted(fq.items())) if fq else None, start,
+                _fast_ck = _query_cache_key(
+                    query, k, conjunctive, mode, exclude, min_match, fq,
+                    start,
                 )
                 hit = self._query_cache.get(_fast_ck)
             except (TypeError, AttributeError):
@@ -2466,9 +2495,10 @@ class ExtractorEngine:
             raise ValidationError(
                 f"start must be a non-negative integer, got {start!r}"
             )
-        fq_key = tuple(sorted(fq.items())) if fq else None
         ck = (
-            (query, k, conjunctive, mode, exclude, min_match, fq_key, start)
+            _query_cache_key(
+                query, k, conjunctive, mode, exclude, min_match, fq, start
+            )
             if synonyms is None
             else None
         )
@@ -2748,15 +2778,16 @@ class ExtractorEngine:
         # document, and the result is discarded).
         postings = self._live_postings()
         dictionary = self._dictionary_df()
-        wt = self._warming_terms() if postings is not None else []
-        if postings is not None and dictionary is not None and wt:
+        if postings is not None and dictionary is not None:
             try:
-                st = self.corpus_stats()
-                bm25_search(
-                    postings, dictionary, st["n_docs"], st["avgdl"],
-                    " ".join(wt), k=1, conjunctive=True,
-                    config=query_config_for(self.analyzer),
-                ).collect()
+                wt = self._warming_terms()
+                if wt:
+                    st = self.corpus_stats()
+                    bm25_search(
+                        postings, dictionary, st["n_docs"], st["avgdl"],
+                        " ".join(wt), k=1, conjunctive=True,
+                        config=query_config_for(self.analyzer),
+                    ).collect()
             except Exception:  # noqa: BLE001 — warming must never fail warm()
                 pass
         return self
@@ -7689,6 +7720,20 @@ class ExtractorEngine:
 
 def read_parquet_if(spark: SparkSession, path: str) -> DataFrame:
     return spark.read.parquet(path)
+
+
+@contextmanager
+def _build_stage(spark, build_id: str, name: str, stage_sec: dict):
+    """Label the stage's Spark jobs ``build <id>: <stage>`` in the status
+    store and time it on the monotonic clock into ``stage_sec[name]``."""
+    sc = spark.sparkContext
+    sc.setJobDescription(f"build {build_id}: {name}")
+    t = time.perf_counter()
+    try:
+        yield
+    finally:
+        stage_sec[name] = time.perf_counter() - t
+        sc.setJobDescription(None)
 
 
 def _atomic_overwrite_staged(

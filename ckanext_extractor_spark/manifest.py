@@ -76,7 +76,7 @@ def read_lineage(spark: SparkSession, path: str) -> DataFrame:
 
 def compute_statuses(
     prepared: DataFrame,
-    doc_manifest: DataFrame,
+    doc_manifest: DataFrame | None,
     indexed_langs_pred=None,
     force: bool = False,
 ) -> DataFrame:
@@ -90,14 +90,21 @@ def compute_statuses(
                                           the caller, action.py:124-128)
     The join is doc_id-equi, manifest side is the small/compacted table;
     broadcast when it fits, else a shuffled join AQE handles.
+    ``doc_manifest=None`` (a fresh index) skips the join: every indexable
+    doc is new, and no shuffle of the corpus side runs for it.
     """
+    lang_ok = indexed_langs_pred if indexed_langs_pred is not None else F.lit(True)
+    if doc_manifest is None:
+        status = F.when(~lang_ok, F.lit(STATUS_IGNORED)).otherwise(
+            F.lit(STATUS_NEW)
+        )
+        return prepared.withColumn("status", status)
     m = doc_manifest.select(
         F.col("doc_id"),
         F.col("content_sha256").alias("_m_sha"),
         F.col("status").alias("_m_status"),
     )
     joined = prepared.join(m, "doc_id", "left")
-    lang_ok = indexed_langs_pred if indexed_langs_pred is not None else F.lit(True)
     status = (
         F.when(~lang_ok, F.lit(STATUS_IGNORED))
         .when(F.col("_m_sha").isNull(), F.lit(STATUS_NEW))
@@ -117,16 +124,12 @@ def compute_statuses(
     return joined.withColumn("status", status).drop("_m_sha", "_m_status")
 
 
-def tokenize_with_lineage(
-    corpus: DataFrame,
-    build_id: str,
-    config=None,
-):
+def tokenize_with_lineage(corpus: DataFrame, config=None) -> DataFrame:
     """tokenize_postings variant that also emits per-partition lineage rows.
 
-    Returns (raw, postings_df, lineage_df); ``raw`` is the single
-    mapInPandas output (postings + marker rows). Callers that consume both
-    branches should checkpoint ``raw`` (write to staging parquet) first so
+    Returns ``raw``, the single mapInPandas output (postings + marker
+    rows). Callers checkpoint it (write to staging parquet) and split the
+    re-read table with :func:`lineage_from_raw` / ``term IS NOT NULL``, so
     tokenization runs once — that staging write doubles as the build's
     resume point (B3).  Metrics are measured executor-side, where the work
     happens, not estimated driver-side.
@@ -207,15 +210,13 @@ def tokenize_with_lineage(
     from ckanext_extractor_spark.operators.build import POSTINGS_SCHEMA
 
     schema = POSTINGS_SCHEMA
-    raw = corpus.select("doc_id", "content", "lang").mapInPandas(kernel, schema)
-    return (raw,) + split_raw_postings(raw, build_id)
+    return corpus.select("doc_id", "content", "lang").mapInPandas(kernel, schema)
 
 
-def split_raw_postings(raw: DataFrame, build_id: str):
-    """Split a raw tokenize output (possibly re-read from staging parquet)
-    into (postings, lineage)."""
-    postings = raw.where(F.col("term").isNotNull())
-    lineage = raw.where(F.col("term").isNull() & (F.col("tf") >= 0)).select(
+def lineage_from_raw(raw: DataFrame, build_id: str) -> DataFrame:
+    """The lineage rows of a raw tokenize output (possibly re-read from
+    staging parquet): one per partition marker, decoded."""
+    return raw.where(F.col("term").isNull() & (F.col("tf") >= 0)).select(
         F.lit(build_id).alias("build_id"),
         F.lit("tokenize").alias("stage"),
         F.col("doc_id").cast("int").alias("partition_id"),
@@ -233,7 +234,6 @@ def split_raw_postings(raw: DataFrame, build_id: str):
     ).withColumn(
         "bytes_per_sec", F.col("bytes_in") / F.greatest(F.col("wall_sec"), F.lit(1e-3))
     )
-    return postings, lineage
 
 
 def doc_lens_from_raw(raw: DataFrame) -> DataFrame | None:

@@ -95,6 +95,29 @@ def count_rows(path: str) -> int:
     )
 
 
+def count_non_null(path: str, column: str) -> int:
+    """Non-null values of ``column`` from parquet footer statistics: the
+    sum over row groups of (rows - null count) — zero data pages read.
+    Raises ValueError when a row group lacks the column's null count."""
+    import pyarrow.dataset as pads
+
+    total = 0
+    ds = pads.dataset(_local_path(path), format="parquet", partitioning="hive")
+    for frag in ds.get_fragments():
+        md = frag.metadata
+        for i in range(md.num_row_groups):
+            rg = md.row_group(i)
+            cols = [rg.column(j) for j in range(rg.num_columns)]
+            st = next(
+                (c.statistics for c in cols if c.path_in_schema == column),
+                None,
+            )
+            if st is None or not st.has_null_count:
+                raise ValueError(f"no null count for {column!r} in {path}")
+            total += rg.num_rows - st.null_count
+    return total
+
+
 def read_bucket_term_stats(path: str, bucket: int = 0) -> list[tuple]:
     """(term, n_postings) pairs of ONE term_bucket partition — metadata
     columns only, zero blob pages (serves warm()'s warming-term pick)."""

@@ -21,7 +21,7 @@ from ckanext_extractor_spark.corpus import corpus_df
 from ckanext_extractor_spark.manifest import (
     compute_statuses,
     empty_doc_manifest,
-    split_raw_postings,
+    lineage_from_raw,
     tokenize_with_lineage,
 )
 from ckanext_extractor_spark.operators.build import (
@@ -69,13 +69,14 @@ def main() -> None:
         to_index = prepared.join(ids, "doc_id", "left_semi").select(
             "doc_id", "content", "lang"
         )
-        raw, _, _ = tokenize_with_lineage(to_index, "prof")
+        raw = tokenize_with_lineage(to_index)
         staging = os.path.join(root, "staging")
         raw.write.mode("overwrite").parquet(staging)
         t0 = tick("tokenize_stage_write", t0)
 
         raw = spark.read.parquet(staging)
-        postings, lineage = split_raw_postings(raw, "prof")
+        postings = raw.where(F.col("term").isNotNull())
+        lineage = lineage_from_raw(raw, "prof")
         lineage.write.mode("append").parquet(os.path.join(root, "lineage"))
         t0 = tick("lineage_append", t0)
 

@@ -46,9 +46,7 @@ def main() -> None:
         from ckanext_extractor_spark.operators.build import prepare_corpus
 
         synth = prepare_corpus(corpus_df(spark, n_docs), ("*",))
-        raw, _, _ = tokenize_with_lineage(
-            synth.select("doc_id", "content", "lang"), "prof"
-        )
+        raw = tokenize_with_lineage(synth.select("doc_id", "content", "lang"))
         t = time.time()
         raw.write.mode("overwrite").parquet(staging)
         out["tokenize_write"] = round(time.time() - t, 1)
