@@ -544,6 +544,17 @@ FROM tf JOIN dl ON tf.doc_id = dl.doc_id
 """
 
 
+def _postings_gen_docs(postings: DataFrame):
+    """The one-generation doc set (ids + lengths) segments of ``postings``
+    store ordinals into."""
+    from ckanext_extractor_spark.operators.codec import GenDocs
+
+    lens = postings.select("doc_id", "doc_len").distinct().collect()
+    return GenDocs.of(
+        [r["doc_id"] for r in lens], [r["doc_len"] for r in lens]
+    )
+
+
 def _engine_segment_topk(
     spark: SparkSession,
     sf_dir: str,
@@ -596,7 +607,8 @@ def _engine_segment_topk(
         avgdl = float(tot or 0) / float(n_docs)
         salted = salted_postings(postings, dictionary, n_buckets=8,
                                  salt_threshold=500)
-        segments = encode_segments(salted, avgdl, n_buckets=8)
+        docs = _postings_gen_docs(postings)
+        segments = encode_segments(salted, docs, n_buckets=8)
         if prefix is not None:
             rows = segments.where(
                 F.col("term").startswith(prefix)
@@ -636,7 +648,7 @@ def _engine_segment_topk(
         postings.unpersist()
     by_term: dict[str, list] = {}
     for r in rows:
-        by_term.setdefault(r["term"], []).append(r)
+        by_term.setdefault(r["term"], []).append(dict(r.asDict(), docs=docs))
     ex_ids = None
     if exclude_terms:
         import numpy as _np
@@ -807,13 +819,14 @@ def _q_phrase_segments_simple(spark: SparkSession, sf_dir: str) -> DataFrame:
         avgdl = float(tot or 0) / float(n_docs)
         salted = salted_postings(postings, dictionary, n_buckets=8,
                                  salt_threshold=500)
-        segments = encode_segments(salted, avgdl, n_buckets=8)
+        docs = _postings_gen_docs(postings)
+        segments = encode_segments(salted, docs, n_buckets=8)
         rows = segments.where(F.col("term").isin(terms)).collect()
     finally:
         postings.unpersist()
     by_term: dict[str, list] = {}
     for r in rows:
-        by_term.setdefault(r["term"], []).append(r)
+        by_term.setdefault(r["term"], []).append(dict(r.asDict(), docs=docs))
     tls = [
         term_postings_from_rows(t, rs, n_docs, avgdl)
         for t, rs in by_term.items()

@@ -14,7 +14,9 @@ slot-in would change only the read/write format strings):
     gens/<gen_id>/postings/            postings of a generation (hook-
                                        transformed or compacted builds)
     gens/<gen_id>/segments/            encoded blobs, partitioned term_bucket
-    gens/<gen_id>/docs/                doc_ids the generation covers
+    gens/<gen_id>/docs/                (doc_id, doc_len) of the generation's
+                                       docs; postings store ordinals into
+                                       its sorted doc ids
     tombstones/                        (doc_id, seq): postings of doc in any
                                        generation with gen_seq < seq are dead
     doc_stats/                         per-doc metadata + doc_len
@@ -99,7 +101,13 @@ from ckanext_extractor_spark.operators.segments import (
     encode_segments,
     salted_postings_auto,
 )
+from ckanext_extractor_spark.operators.codec import GenDocs
 from ckanext_extractor_spark.operators.wand import DeadDocs
+
+#: on-disk segment format, recorded in index_meta.json: 2 = postings store
+#: doc ordinals and doc lengths live in ``gens/<g>/docs`` (codec.py). An
+#: index without it is rewritten by compact() before it can serve queries.
+SEGMENT_FORMAT = 2
 
 
 class BuildInProgressError(RuntimeError):
@@ -419,6 +427,11 @@ class ExtractorEngine:
         self._query_cache: "OrderedDict[tuple, list]" = OrderedDict()
         self._gens: list[dict] = []
         self._seq = 0
+        self._segment_format = SEGMENT_FORMAT
+        # GenDocs per generation, keyed (gen id, seq) — a generation never
+        # changes once written, so no mutation invalidates an entry
+        self._gen_docs_memo: dict[tuple, GenDocs] = {}
+        self._gen_docs_bc: "tuple | None" = None
         self.fs = FsIO(spark, index_root)
         self.fs.makedirs(index_root)
         # structural index properties are INDEX state, not caller options:
@@ -432,6 +445,9 @@ class ExtractorEngine:
             self.indexed_langs = tuple(meta["indexed_langs"])
             self._gens = list(meta.get("generations", []))
             self._seq = int(meta.get("seq", 0))
+            self._segment_format = int(
+                meta.get("segment_format", 1 if self._gens else SEGMENT_FORMAT)
+            )
             self.store_content = bool(
                 meta.get("store_content", self.store_content)
             )
@@ -477,6 +493,7 @@ class ExtractorEngine:
                     "store_content": self.store_content,
                     "store_offsets": self.store_offsets,
                     "seq": self._seq,
+                    "segment_format": self._segment_format,
                     "generations": self._gens,
                 }
             ),
@@ -494,6 +511,51 @@ class ExtractorEngine:
 
     def _gen_docs_path(self, g: dict) -> str:
         return self._p("gens", g["gen"], "docs")
+
+    def _require_segment_format(self) -> None:
+        if self._segment_format != SEGMENT_FORMAT:
+            raise ValidationError(
+                f"index {self.root} uses segment format "
+                f"{self._segment_format}; this engine reads only format "
+                f"{SEGMENT_FORMAT}. Run compact() to rewrite it (or rebuild "
+                "the index)."
+            )
+
+    def _gen_docs(self, g: dict) -> GenDocs:
+        """The generation's doc ids and lengths (postings' ordinals index
+        them), memoized by (gen id, seq)."""
+        self._require_segment_format()
+        key = (g["gen"], int(g["seq"]))
+        docs = self._gen_docs_memo.get(key)
+        if docs is None:
+            live = {(x["gen"], int(x["seq"])) for x in self._gens}
+            for k in [k for k in self._gen_docs_memo if k not in live]:
+                del self._gen_docs_memo[k]
+            docs = self._read_gen_docs(self._gen_docs_path(g))
+            self._gen_docs_memo[key] = docs
+        return docs
+
+    def _read_gen_docs(self, path: str) -> GenDocs:
+        if self.fs.is_local:
+            from ckanext_extractor_spark.operators.segread import (
+                read_gen_docs,
+            )
+
+            return read_gen_docs(path)
+        return _collect_gen_docs(self.spark.read.parquet(path))
+
+    def _docs_by_gen(self) -> "dict[str, GenDocs]":
+        return {g["gen"]: self._gen_docs(g) for g in self._gens}
+
+    def _gen_docs_broadcast(self):
+        """Broadcast of ``_docs_by_gen()`` for the distributed decoders,
+        kept while the generation list is unchanged."""
+        key = tuple((g["gen"], int(g["seq"])) for g in self._gens)
+        if self._gen_docs_bc is None or self._gen_docs_bc[0] != key:
+            self._gen_docs_bc = (
+                key, self.spark.sparkContext.broadcast(self._docs_by_gen())
+            )
+        return self._gen_docs_bc[1]
 
     # -- concurrency lock (B4: inprogress, action.py:121-123) --------------
     def _lock_path(self) -> str:
@@ -692,6 +754,14 @@ class ExtractorEngine:
             raw = spark.read.schema(POSTINGS_SCHEMA).parquet(staging)
             delta_postings = raw.where(F.col("term").isNotNull())
             lineage = lineage_from_raw(raw, build_id)
+            # per-doc marker rows: the generation's doc set and norms
+            doc_lens = raw.where(
+                F.col("term").isNull() & (F.col("tf") < 0)
+            ).select("doc_id", "doc_len")
+            gen_docs = (
+                self._staged_gen_docs(staging, doc_lens) if n_changed
+                else None
+            )
             gen_postings_rel = staging_rel
             if self.hooks.after_extract:
                 delta_postings = self.hooks.after_extract(delta_postings)
@@ -770,20 +840,7 @@ class ExtractorEngine:
         # every table idempotently.
         from concurrent.futures import ThreadPoolExecutor
 
-        from ckanext_extractor_spark.manifest import doc_lens_from_raw
-
         _t = time.perf_counter()
-        avgdl_est = self._avgdl_estimate()
-        if resumed:
-            # a staging dir from an older build may lack per-doc markers;
-            # probe (one tiny job) and fall back to the postings groupBy
-            doc_lens = doc_lens_from_raw(raw)
-        else:
-            # markers are written by the current kernel unconditionally —
-            # no probe job needed
-            doc_lens = raw.where(
-                F.col("term").isNull() & (F.col("tf") < 0)
-            ).select("doc_id", "doc_len")
 
         def t_encode():
             # df-driven salting within this generation: hot terms split
@@ -799,16 +856,16 @@ class ExtractorEngine:
             )
             self._encode_and_write_segments(
                 salted,
-                avgdl_est,
+                gen_docs,
                 self._encode_tasks(n_delta_rows),
                 self._p("gens", build_id, "segments"),
             )
 
         def t_gen_docs():
-            # generation doc set (compaction accounting) + lineage append,
-            # straight from the staging marker scan
+            # generation doc set (ordinals, norms, compaction accounting)
+            # + lineage append, straight from the staging marker scan
             if n_changed:
-                to_index_ids.write.mode("overwrite").parquet(
+                doc_lens.write.mode("overwrite").parquet(
                     self._p("gens", build_id, "docs")
                 )
             append_lineage(lineage, self.root)
@@ -947,6 +1004,7 @@ class ExtractorEngine:
         self._seq = next_seq
         if n_changed:
             self._gens.append(gen)
+            self._gen_docs_memo[(build_id, next_seq)] = gen_docs
         self._write_meta()
         self.cool()  # cached segments are stale after a rebuild
         compacted = self.maybe_compact()
@@ -1026,6 +1084,18 @@ class ExtractorEngine:
             for r in lineage.select("n_postings").collect()
         )
 
+    def _staged_gen_docs(self, staging: str, doc_lens: DataFrame) -> GenDocs:
+        """The generation's GenDocs from the staging per-doc markers: a
+        streamed pyarrow read on a local root (no Spark job), else a
+        collect of ``doc_lens``."""
+        if self.fs.is_local:
+            from ckanext_extractor_spark.operators.segread import (
+                read_doc_markers,
+            )
+
+            return read_doc_markers(staging)
+        return _collect_gen_docs(doc_lens)
+
     def _tokenize_spread_target(
         self, changed_bytes: int, cur_partitions: int, parallelism: int
     ) -> int | None:
@@ -1070,19 +1140,6 @@ class ExtractorEngine:
             clean_metadata_keys(mcol), self.indexed_fields
         )
         return prepared.withColumn("metadata", mcol)
-
-    def _avgdl_estimate(self) -> float:
-        """avgdl for the delta encode's block-max metadata. Query paths
-        rebuild block maxes from decoded (tf, dl) with the CURRENT avgdl
-        (wand.term_postings_from_rows), so this value affects no result —
-        the previous build's avgdl (or 1.0 on a fresh index) is fine and
-        costs zero jobs."""
-        if not self.fs.exists(self._p("corpus_stats")):
-            return 1.0
-        try:
-            return float(self.corpus_stats()["avgdl"] or 1.0)
-        except Exception:
-            return 1.0
 
     # -- introspection -----------------------------------------------------
     def _read_or_none(self, name: str) -> DataFrame | None:
@@ -2087,11 +2144,16 @@ class ExtractorEngine:
         """Merge generations whose tombstone fraction crosses ``dead_frac``
         and enforce the ``max_gens`` generation-count bound. Returns merged
         gen ids. Only victim generations are read/rewritten — the rest of
-        the index is untouched (byte-identical files)."""
+        the index is untouched (byte-identical files). An index in an
+        older segment format is rewritten whole, into one generation."""
         dead_frac = self.DEAD_FRAC if dead_frac is None else dead_frac
         max_gens = self.MAX_GENS if max_gens is None else max_gens
         if not self._gens:
             return []
+        if self._segment_format != SEGMENT_FORMAT:
+            victims = list(self._gens)
+            self._compact(victims)
+            return [g["gen"] for g in victims]
         n_tomb = self._tombstone_count()
         victims: list[dict] = []
         if n_tomb:
@@ -2165,6 +2227,12 @@ class ExtractorEngine:
         vset = {g["gen"] for g in victims}
         new_id = "compact-" + uuid.uuid4().hex[:10]
         new_seq = max(int(g["seq"]) for g in victims)
+        # rewriting every generation (from postings, which carry no segment
+        # format) leaves the index in the current format
+        new_format = (
+            SEGMENT_FORMAT if len(victims) == len(self._gens)
+            else self._segment_format
+        )
         # live postings of the victim generations only
         dfs = []
         for g in victims:
@@ -2178,6 +2246,7 @@ class ExtractorEngine:
             )
         if not dfs:
             self._gens = [g for g in self._gens if g["gen"] not in vset]
+            self._segment_format = new_format
             self._write_meta()
             return
         merged = dfs[0]
@@ -2207,18 +2276,17 @@ class ExtractorEngine:
             live = spark.read.parquet(self._p(new_rel)).where(
                 F.col("term").isNotNull()
             )
-            live.select("doc_id").distinct().write.mode("overwrite").parquet(
-                self._p("gens", new_id, "docs")
-            )
-            n_docs = spark.read.parquet(
-                self._p("gens", new_id, "docs")
-            ).count()
+            docs_path = self._p("gens", new_id, "docs")
+            live.groupBy("doc_id").agg(
+                F.max("doc_len").alias("doc_len")
+            ).write.mode("overwrite").parquet(docs_path)
+            docs = self._read_gen_docs(docs_path)
             salted = salted_postings_auto(
                 live, self.n_buckets, self.salt_threshold
             )
             self._encode_and_write_segments(
                 salted,
-                self._avgdl_estimate(),
+                docs,
                 self._encode_tasks(None),
                 self._p("gens", new_id, "segments"),
             )
@@ -2227,9 +2295,10 @@ class ExtractorEngine:
                     "gen": new_id,
                     "seq": new_seq,
                     "postings_rel": new_rel,
-                    "n_docs": int(n_docs),
+                    "n_docs": int(docs.doc_ids.size),
                 }
             )
+            self._gen_docs_memo[(new_id, new_seq)] = docs
         survivors.sort(key=lambda g: int(g["seq"]))
         self._gens = survivors
         # tombstone GC: a row (d, s) still matters only if some remaining
@@ -2240,7 +2309,7 @@ class ExtractorEngine:
                 p = self._gen_docs_path(g)
                 if self.fs.exists(p) and self._has_part_files(p):
                     gen_docs.append(
-                        spark.read.parquet(p).withColumn(
+                        spark.read.parquet(p).select("doc_id").withColumn(
                             "gen_seq", F.lit(int(g["seq"]))
                         )
                     )
@@ -2258,6 +2327,7 @@ class ExtractorEngine:
                 _atomic_overwrite(needed, self._p("tombstones"), spark)
             else:
                 self.fs.rmtree(self._p("tombstones"))
+        self._segment_format = new_format
         self._write_meta()
         self._dead_cache = None
         self._tomb_count = None
@@ -2446,6 +2516,7 @@ class ExtractorEngine:
             if hit is not None:
                 self._query_cache.move_to_end(_fast_ck)
                 return list(hit)
+        self._require_segment_format()
         _require_query(query)
         _require_k(k)
         _require_bool("conjunctive", conjunctive)
@@ -2635,15 +2706,14 @@ class ExtractorEngine:
                 and not all(t in self._decoded_cache for t in terms)
             ):
                 ltls = self._lazy_term_postings(terms, st)
-                if ltls is not None:
-                    union_rows = sum(len(tp) for tp in ltls)
-                    if (
-                        mode == "maxscore"
-                        or union_rows > self.MAXSCORE_AUTO_ROWS
-                    ):
-                        return maxscore_topk_lazy(
-                            ltls, k, st["avgdl"], conjunctive=False
-                        )
+                union_rows = sum(len(tp) for tp in ltls)
+                if (
+                    mode == "maxscore"
+                    or union_rows > self.MAXSCORE_AUTO_ROWS
+                ):
+                    return maxscore_topk_lazy(
+                        ltls, k, st["avgdl"], conjunctive=False
+                    )
             tls = self._term_postings(terms, st)
             if ex_ids.size:
                 from ckanext_extractor_spark.operators.wand import (
@@ -2703,7 +2773,9 @@ class ExtractorEngine:
     # -- serving caches ------------------------------------------------------
     def _segments_union(self, terms: list[str] | None = None) -> DataFrame | None:
         """All generations' segment tables (bucket/term pruned when terms
-        given), each row tagged with its generation seq."""
+        given), each row tagged with its generation seq (``gen_seq``, the
+        tombstone clock) and id (``gen``, whose doc set its ordinals
+        index)."""
         from ckanext_extractor_spark.operators.segments import read_segments
 
         dfs = []
@@ -2712,16 +2784,15 @@ class ExtractorEngine:
             if not self.fs.exists(p) or not self._has_part_files(p):
                 continue
             df = read_segments(self.spark, p, terms, self.n_buckets)
-            dfs.append(df.withColumn("gen_seq", F.lit(int(g["seq"]))))
+            dfs.append(
+                df.withColumn("gen_seq", F.lit(int(g["seq"])))
+                .withColumn("gen", F.lit(g["gen"]))
+            )
         if not dfs:
             return None
         out = dfs[0]
         for d in dfs[1:]:
-            # allowMissingColumns: generations written before block_offs
-            # (lazy block decode, r3) union with new ones — the missing
-            # column reads as null and the lazy path falls back to eager
-            # decode (_lazy_term_postings checks for None)
-            out = out.unionByName(d, allowMissingColumns=True)
+            out = out.unionByName(d)
         return out
 
     def warm(self, max_cache_bytes: int | None = None) -> "ExtractorEngine":
@@ -2745,15 +2816,8 @@ class ExtractorEngine:
         preload_cap = min(self.RAW_PRELOAD_BYTES, budget)
         if disk <= preload_cap:
             cache: dict[str, list] = {}
-            local = self._local_segment_rows(None)
-            if local is not None:
-                for r in local:
-                    cache.setdefault(r["term"], []).append(r)
-            else:
-                seg = self._segments_union()
-                if seg is not None:
-                    for r in seg.collect():
-                        cache.setdefault(r["term"], []).append(r)
+            for r in self._read_rows(None):
+                cache.setdefault(r["term"], []).append(r)
             self._rows_cache = cache
             self._lazy_serve = False
         else:
@@ -2858,9 +2922,10 @@ class ExtractorEngine:
         return min(want, 4096)
 
     def _encode_and_write_segments(
-        self, salted: DataFrame, avgdl: float, n_tasks: int, path: str
+        self, salted: DataFrame, docs: GenDocs, n_tasks: int, path: str
     ) -> None:
-        """Encode + atomically publish one generation's segments.
+        """Encode + atomically publish one generation's segments (doc set
+        ``docs``).
 
         Uses the hash-keyed exchange (posting rows ship xxhash64(term);
         term strings cross once per shard as sentinel dictionary rows —
@@ -2871,7 +2936,7 @@ class ExtractorEngine:
         tried_hash = self.with_positions
         segments = encode_segments(
             salted,
-            avgdl,
+            docs,
             with_positions=self.with_positions,
             n_tasks=n_tasks,
             n_buckets=self.n_buckets,
@@ -2886,7 +2951,7 @@ class ExtractorEngine:
                 raise
             segments = encode_segments(
                 salted,
-                avgdl,
+                docs,
                 with_positions=self.with_positions,
                 n_tasks=n_tasks,
                 n_buckets=self.n_buckets,
@@ -2896,9 +2961,7 @@ class ExtractorEngine:
                 segments, path, spark=self.spark, partition_by="term_bucket"
             )
 
-    #: canonical segment-row columns (pyarrow rows materialize all of
-    #: them, with None for columns a pre-block_offs generation lacks —
-    #: the allowMissingColumns contract of the Spark union path)
+    #: canonical segment-row columns (what the Spark union path collects)
     _SEGMENT_ROW_COLUMNS = (
         "term", "salt_id", "n_postings", "blob", "block_last_doc",
         "block_max_tfn", "block_offs", "term_bucket",
@@ -2916,7 +2979,8 @@ class ExtractorEngine:
         budgets); serving them with pyarrow reads the same files with the
         same hive-partition + row-group pruning, minus a full Spark job
         of overhead per lookup (~0.25 s on local[32] — measured as ~95%
-        of cold-query latency)."""
+        of cold-query latency). Full rows (``columns`` None) carry their
+        generation's GenDocs under ``"docs"``."""
         if not self.fs.is_local:
             return None
         from ckanext_extractor_spark.operators.segread import (
@@ -2931,25 +2995,33 @@ class ExtractorEngine:
             p = self._gen_segments_path(g)
             if not self.fs.exists(p) or not self._has_part_files(p):
                 continue
-            out.extend(
-                read_segment_rows(
-                    p, terms, self.n_buckets, int(g["seq"]), columns=want
-                )
+            rows = read_segment_rows(
+                p, terms, self.n_buckets, int(g["seq"]), columns=want
             )
+            if columns is None and rows:
+                docs = self._gen_docs(g)
+                for r in rows:
+                    r["docs"] = docs
+            out.extend(rows)
         return out
+
+    def _read_rows(self, terms: "list[str] | None") -> list[dict]:
+        """Every generation's (bucket/term-pruned) segment rows as dicts,
+        each carrying its generation's GenDocs under ``"docs"`` — what
+        the driver-side decoders resolve ordinals through."""
+        rows = self._local_segment_rows(terms)
+        if rows is None:
+            seg = self._segments_union(terms)
+            docs = self._docs_by_gen()
+            rows = [] if seg is None else [
+                dict(r.asDict(), docs=docs[r["gen"]]) for r in seg.collect()
+            ]
+        return rows
 
     def _fetch_rows(self, terms: list[str]) -> dict[str, list]:
         """Cold bucket-pruned segment read for `terms` across generations."""
         out: dict[str, list] = {t: [] for t in terms}
-        local = self._local_segment_rows(terms)
-        if local is not None:
-            for r in local:
-                out.setdefault(r["term"], []).append(r)
-            return out
-        seg = self._segments_union(terms)
-        if seg is None:
-            return out
-        for r in seg.collect():
+        for r in self._read_rows(terms):
             out.setdefault(r["term"], []).append(r)
         return out
 
@@ -3567,6 +3639,7 @@ class ExtractorEngine:
             for t in terms
         }
         dead_pairs, dead_df = self._dead_for_distributed()
+        docs_bc = self._gen_docs_broadcast()
         exclude_df = None
         if exclude:
             ex_terms = list(
@@ -3582,7 +3655,7 @@ class ExtractorEngine:
                 # distributed kernel in its k=None disjunctive form
                 # (scores unused — idf placeholder); stays cluster-side
                 exclude_df = query_segments_distributed(
-                    self.spark, ex_seg, {t: 1.0 for t in ex_terms},
+                    self.spark, ex_seg, docs_bc, {t: 1.0 for t in ex_terms},
                     st["avgdl"], k=None, conjunctive=False,
                     dead_pairs=dead_pairs, dead_df=dead_df,
                 ).select("doc_id")
@@ -3590,7 +3663,7 @@ class ExtractorEngine:
         if fq is not None and include_df is None:
             return []
         rows = query_segments_distributed(
-            self.spark, seg, terms_idf, st["avgdl"],
+            self.spark, seg, docs_bc, terms_idf, st["avgdl"],
             k=k, conjunctive=conjunctive, n_query_terms=len(terms),
             dead_pairs=dead_pairs, dead_df=dead_df, min_match=min_match,
             include_df=include_df, exclude_df=exclude_df, after=after,
@@ -3924,7 +3997,7 @@ class ExtractorEngine:
                 }
                 dead_pairs, dead_df = self._dead_for_distributed()
                 ts_df = scored_terms_distributed(
-                    seg, terms_idf, st["avgdl"],
+                    seg, self._gen_docs_broadcast(), terms_idf, st["avgdl"],
                     dead_pairs=dead_pairs, dead_df=dead_df,
                 )
                 cmap = self.spark.createDataFrame(
@@ -4798,7 +4871,8 @@ class ExtractorEngine:
                 }
                 dead_pairs, dead_df = self._dead_for_distributed()
                 scored = scored_terms_distributed(
-                    seg, terms_idf, float(st["avgdl"]),
+                    seg, self._gen_docs_broadcast(), terms_idf,
+                    float(st["avgdl"]),
                     dead_pairs=dead_pairs, dead_df=dead_df,
                 )
                 # explicit pivot values: one shuffle, no discovery job;
@@ -5278,8 +5352,8 @@ class ExtractorEngine:
             terms_idf = {t: 1.0 for t in terms}
         dead_pairs, dead_df = self._dead_for_distributed()
         return query_segments_distributed(
-            self.spark, seg, terms_idf, st["avgdl"],
-            k=None, conjunctive=conjunctive, n_query_terms=len(terms),
+            self.spark, seg, self._gen_docs_broadcast(), terms_idf,
+            st["avgdl"], k=None, conjunctive=conjunctive, n_query_terms=len(terms),
             dead_pairs=dead_pairs, dead_df=dead_df, min_match=min_match,
         )
 
@@ -7638,9 +7712,8 @@ class ExtractorEngine:
     def _lazy_term_postings(self, terms: list[str], st: dict):
         """LazyTermPostings per term from raw segment rows (warm cache,
         lazy LRU, or a cold bucket-pruned read) — metadata-only until the
-        scorer decodes blocks on demand. Returns None when the index
-        predates block_offs (legacy segments fall back to eager decode).
-        Only valid on a tombstone-free index (caller checks)."""
+        scorer decodes blocks on demand. Only valid on a tombstone-free
+        index (caller checks)."""
         from ckanext_extractor_spark.operators.wand import LazyTermPostings
 
         if self._rows_cache is not None and not self._lazy_serve:
@@ -7662,21 +7735,17 @@ class ExtractorEngine:
         out = []
         for t in terms:
             rows = rows_by_term.get(t) or []
-            if not rows:
-                continue
-            try:
-                if any(r["block_offs"] is None for r in rows):
-                    return None
-            except (KeyError, ValueError):
-                return None  # pre-block_offs segment schema
-            out.append(LazyTermPostings(t, rows, st["n_docs"], st["avgdl"]))
+            if rows:
+                out.append(
+                    LazyTermPostings(t, rows, st["n_docs"], st["avgdl"])
+                )
         return out
 
     @staticmethod
     def _raw_rows_bytes(rows: list) -> int:
-        # blob + block metadata (last_doc 8B, max_tfn 8B, offs 3x8B) + slop
+        # blob + block metadata (last_doc 8B, max_tfn 8B, offs 2x8B) + slop
         return sum(
-            len(r["blob"]) + 40 * len(r["block_last_doc"]) + 256 for r in rows
+            len(r["blob"]) + 32 * len(r["block_last_doc"]) + 256 for r in rows
         )
 
     def _raw_put(self, term: str, rows: list) -> None:
@@ -7716,6 +7785,13 @@ class ExtractorEngine:
                 old.doc_ids.nbytes + old.tfs.nbytes + old.doc_lens.nbytes
                 + old.block_last_doc.nbytes + old.block_max_tfn.nbytes + 128
             )
+
+
+def _collect_gen_docs(df: DataFrame) -> GenDocs:
+    rows = df.select("doc_id", "doc_len").collect()
+    return GenDocs.of(
+        [r["doc_id"] for r in rows], [r["doc_len"] for r in rows]
+    )
 
 
 def read_parquet_if(spark: SparkSession, path: str) -> DataFrame:

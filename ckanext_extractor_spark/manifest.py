@@ -235,19 +235,3 @@ def lineage_from_raw(raw: DataFrame, build_id: str) -> DataFrame:
         "bytes_per_sec", F.col("bytes_in") / F.greatest(F.col("wall_sec"), F.lit(1e-3))
     )
 
-
-def doc_lens_from_raw(raw: DataFrame) -> DataFrame | None:
-    """(doc_id, doc_len) from the kernel's per-doc marker rows (tf == -1).
-
-    Returns None when the staging table carries no per-doc markers (a
-    resume of a staging dir written by an older build) — callers fall back
-    to aggregating the posting rows. The marker filter is pushed to the
-    parquet scan; markers live in the tail row groups of each task file,
-    so null-count stats skip nearly all of the table.
-    """
-    lens = raw.where(F.col("term").isNull() & (F.col("tf") < 0)).select(
-        "doc_id", "doc_len"
-    )
-    if not lens.take(1):
-        return None
-    return lens

@@ -37,7 +37,8 @@ from ckanext_extractor_spark.operators.codec import decode_posting_list
 
 
 def _positions_by_doc(row, dead, wanted=None) -> dict[int, np.ndarray]:
-    """Positions of one segment row as doc_id -> array. ``wanted``
+    """Positions of one segment row (ordinals resolved through the row's
+    ``"docs"``, its generation's GenDocs) as doc_id -> array. ``wanted``
     (a sorted np.int64 array of candidate doc ids) switches to the
     selective decode (codec.decode_posting_list_selective): per-doc
     position arrays materialize only for candidates — the phrase
@@ -52,7 +53,7 @@ def _positions_by_doc(row, dead, wanted=None) -> dict[int, np.ndarray]:
         )
 
         ids, tfs, dls, posmap = decode_posting_list_selective(
-            bytes(row["blob"]), wanted
+            bytes(row["blob"]), row["docs"], wanted
         )
         if dead is not None and len(dead):
             keep = dead.live_mask(ids, _row_gen_seq(row))
@@ -60,7 +61,7 @@ def _positions_by_doc(row, dead, wanted=None) -> dict[int, np.ndarray]:
             return {d: p for d, p in posmap.items() if d not in deadset}
         return posmap
     ids, tfs, dls, pos = decode_posting_list(
-        bytes(row["blob"]), with_positions=True
+        bytes(row["blob"]), row["docs"], with_positions=True
     )
     if dead is not None and len(dead):
         keep = dead.live_mask(ids, _row_gen_seq(row))
@@ -239,7 +240,9 @@ def phrase_tf_by_doc(
     for slot, t in enumerate(ordered_terms):
         parts = []
         for row in term_shard_rows.get(t, []):
-            ids, tfs, dls = decode_posting_list(bytes(row["blob"]))
+            ids, tfs, dls = decode_posting_list(
+                bytes(row["blob"]), row["docs"]
+            )
             if dead is not None and len(dead):
                 keep = dead.live_mask(ids, _row_gen_seq(row))
                 ids, dls = ids[keep], dls[keep]
@@ -624,12 +627,14 @@ def phrase_matched_df(engine, terms: list, slop: int = 0,
     # dict ever serializes into tasks (VERDICT r2 weak #2).
     dead_pairs, dead_df = engine._dead_for_distributed()
     use_join = dead_df is not None
+    docs_bc = engine._gen_docs_broadcast()
     slot_of = {t: i for i, t in enumerate(uniq)}
     n_slots = len(uniq)
     k1, b = BM25_K1, BM25_B
 
     def decode_part(batches):
         dead = DeadDocs(dead_pairs) if dead_pairs else None
+        gen_docs = docs_bc.value
         for pdf in batches:
             frames = []
             has_gen = "gen_seq" in pdf.columns
@@ -637,10 +642,11 @@ def phrase_matched_df(engine, terms: list, slop: int = 0,
                 slot = slot_of.get(row["term"])
                 if slot is None:
                     continue
-                ids, tfs, dls, pos = decode_posting_list(
-                    bytes(row["blob"]), with_positions=True
-                )
                 gseq = int(row["gen_seq"]) if has_gen else 0
+                ids, tfs, dls, pos = decode_posting_list(
+                    bytes(row["blob"]), gen_docs[row["gen"]],
+                    with_positions=True,
+                )
                 if dead is not None and len(dead):
                     keep = dead.live_mask(ids, gseq)
                     ids, tfs, dls = ids[keep], tfs[keep], dls[keep]
@@ -688,6 +694,7 @@ def phrase_matched_df(engine, terms: list, slop: int = 0,
     # only need live (doc, slot) rows (code-review r5 finding).
     def count_part(batches):
         dead = DeadDocs(dead_pairs) if dead_pairs else None
+        gen_docs = docs_bc.value
         for pdf in batches:
             frames = []
             has_gen = "gen_seq" in pdf.columns
@@ -695,8 +702,10 @@ def phrase_matched_df(engine, terms: list, slop: int = 0,
                 slot = slot_of.get(row["term"])
                 if slot is None:
                     continue
-                ids, _tfs, _dls = decode_posting_list(bytes(row["blob"]))
                 gseq = int(row["gen_seq"]) if has_gen else 0
+                ids, _tfs, _dls = decode_posting_list(
+                    bytes(row["blob"]), gen_docs[row["gen"]]
+                )
                 if dead is not None and len(dead):
                     ids = ids[dead.live_mask(ids, gseq)]
                 if not len(ids):

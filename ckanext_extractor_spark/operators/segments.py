@@ -10,16 +10,21 @@ task owns a whole hot posting list while encoding: the north rule's
 per term comes from the dictionary (a broadcast join — dictionary
 cardinality ≪ postings).
 
-B2 — per-(bucket, salt) `applyInPandas` encodes each term's postings with
-the delta+varbyte codec + block-max metadata (operators/codec.py).  A
+B2 — per-(bucket, salt) `mapInArrow` encodes each term's postings with
+the delta+varbyte codec + block-max metadata (operators/codec.py). Postings
+store doc ORDINALS into the generation's sorted doc-id array, which the
+kernel receives by broadcast together with the doc lengths.  A
 salted hot term yields one segment row per salt shard; shards carry
 `salt_id` and are merged at read time (doc-id ranges of shards may
 interleave; the decoder re-sorts — determinism comes from the codec's
 internal doc_id sort, pinned by test_encoding_is_order_independent).
 
 Output table `segments`:
-    (term, term_bucket, salt_id, n_postings, df_shard, blob binary,
-     block_last_doc array<long>, block_max_tfn array<double>)
+    (term, term_bucket, salt_id, n_postings, blob binary,
+     block_last_doc array<long>, block_max_tfn array<double>,
+     block_offs array<long>)
+block_last_doc holds doc ordinals; all three block arrays are empty for a
+list of at most one block (codec.py).
 written as Parquet partitioned by term_bucket -> query-time partition
 pruning reads only the buckets of the query's terms.
 """
@@ -33,7 +38,7 @@ from pyspark.sql import functions as F
 
 from ckanext_extractor_spark.operators.build import BM25_B, BM25_K1
 from ckanext_extractor_spark.operators.codec import (
-    encode_posting_list,  # noqa: F401 (single-list API, tests/tools)
+    GenDocs,
     encode_posting_lists_grouped,
 )
 
@@ -116,7 +121,7 @@ def salted_postings_auto(
 
 def encode_segments(
     salted: DataFrame,
-    avgdl: float,
+    docs: GenDocs,
     k1: float = BM25_K1,
     b: float = BM25_B,
     with_positions: bool = True,
@@ -126,13 +131,17 @@ def encode_segments(
 ) -> DataFrame:
     """Encode posting blobs: repartition by (term_bucket, salt_id), then a
     mapInArrow kernel that sorts and encodes each partition in one
-    vectorized pass.
+    vectorized pass. ``docs`` is the generation's doc set (every posting's
+    doc must be in it); it is broadcast once, and the kernel maps doc ids
+    to ordinals by ``searchsorted`` and takes doc lengths from it. Block
+    maxima use the generation's own avgdl (``docs.avgdl``), so segment
+    bytes depend on nothing but the generation.
 
     The exchange payload is SLIM by design: term_bucket and salt_id act
     only as repartition KEY EXPRESSIONS (projected away before the
-    shuffle), and tf/doc_len travel packed into one long — measured on
-    this host, the post-shuffle UnsafeRow->Arrow transpose that feeds
-    mapInArrow costs per CELL, so 4 columns (term, doc_id, packed,
+    shuffle), and doc_len stays out of it (the broadcast doc set carries
+    it) — the post-shuffle UnsafeRow->Arrow transpose that feeds
+    mapInArrow costs per CELL, so 4 columns (term, doc_id, tf,
     positions) instead of 7 is the single biggest lever on the encode
     stage's wall time AND its multi-worker scaling (the transpose is
     memory-bandwidth-bound). The kernel recovers grouping from the term
@@ -166,12 +175,12 @@ def encode_segments(
     caps any single (bucket, salt) key, so "the whole partition" is tens
     of MB, same order as one sort buffer.
 
-    Packing bound: doc_len < 2^31 tokens per doc and tf < 2^32 (packed =
-    doc_len << 32 | tf) — far beyond any real document.
-
     ``n_buckets`` MUST equal the n_buckets used by salted_postings /
     query-time pruning (read_segments) — it re-derives the term_bucket
     partition column on the kernel output."""
+
+    docs_bc = salted.sparkSession.sparkContext.broadcast(docs)
+    avgdl = docs.avgdl
 
     def encode_stream(batches):
         import pyarrow as pa
@@ -241,11 +250,13 @@ def encode_segments(
         tbl = tbl.combine_chunks()
         import pyarrow.compute as pc
 
+        gd = docs_bc.value
         docs_all = tbl.column("doc_id").chunk(0).to_numpy()
+        tfs_all = tbl.column("tf").chunk(0).to_numpy()
         if hash_terms:
             # hash-keyed exchange: posting rows carry xxhash64(term), the
             # term STRING crossed the shuffle only once per (term, shard)
-            # as a sentinel dictionary row (packed == -1, UTF-8 term
+            # as a sentinel dictionary row (tf == -1, UTF-8 term
             # bytes in the positions column). Recover term strings from
             # the dictionary rows, rank them lexically (UTF-8 byte order
             # == code-point order), map postings th -> lexical code via
@@ -254,8 +265,7 @@ def encode_segments(
             # shard) and aborts the build — the caller retries with the
             # string exchange.
             th_all = tbl.column("th").chunk(0).to_numpy()
-            packed_all = tbl.column("packed").chunk(0).to_numpy()
-            dmask = packed_all == -1
+            dmask = tfs_all == -1
             dict_idx = np.flatnonzero(dmask)
             post_idx = np.flatnonzero(~dmask)
             if post_idx.size == 0:
@@ -290,11 +300,10 @@ def encode_segments(
                     "posting row with no dictionary row for its term hash"
                 )
             codes = rank[pos_in]
-            docs = docs_all[post_idx]
-            order_local = np.lexsort((docs, codes))
+            ords = gd.ordinals(docs_all[post_idx])
+            order_local = np.lexsort((ords, codes))
             order = post_idx[order_local]
-            codes_unsorted = None
-            docs_s = docs[order_local]
+            ords_s = ords[order_local]
             codes = codes[order_local]
             sorted_dict = pa.array(
                 uterms[lex].tolist(), type=pa.binary()
@@ -310,13 +319,16 @@ def encode_segments(
             dict_order = pc.sort_indices(denc.dictionary)
             rank = np.empty(len(denc.dictionary), dtype=np.int64)
             rank[dict_order.to_numpy()] = np.arange(len(denc.dictionary))
-            codes_unsorted = rank[denc.indices.to_numpy()]
-            # grouped sort: term (lexical), doc_id within. Shards of the
+            codes = rank[denc.indices.to_numpy()]
+            # grouped sort: term (lexical), doc ordinal within. Shards of the
             # same term that hash-collide into this task merge into one
             # group — read-time shard merging makes that equivalent (and
             # the codec sorts per group, so the blob is deterministic
             # either way).
-            order = np.lexsort((docs_all, codes_unsorted))
+            ords = gd.ordinals(docs_all)
+            order = np.lexsort((ords, codes))
+            ords_s = ords[order]
+            codes = codes[order]
             sorted_dict = pc.take(denc.dictionary, dict_order).cast(
                 pa.string()
             )
@@ -325,17 +337,11 @@ def encode_segments(
         # only group heads ever need one — positions is the lone column
         # whose bytes genuinely must be gathered (memory bandwidth is
         # this kernel's scaling ceiling at >1 concurrent worker)
-        if codes_unsorted is not None:
-            docs_s = docs_all[order]
-        packed_s = tbl.column("packed").chunk(0).to_numpy()[order]
-        tfs_s = (packed_s & np.int64(0xFFFFFFFF)).astype(np.int64)
-        dls_s = (packed_s >> np.int64(32)).astype(np.int64)
-        if codes_unsorted is not None:
-            codes = codes_unsorted[order]
+        tfs_s = tfs_all[order].astype(np.int64)
         change = codes[1:] != codes[:-1]
         bounds = np.flatnonzero(change) + 1
         g_starts = np.concatenate(([0], bounds))
-        g_ends = np.concatenate((bounds, [len(docs_s)]))
+        g_ends = np.concatenate((bounds, [len(ords_s)]))
         if with_positions:
             pos_data, pos_offsets = binary_buffer(
                 tbl.column("positions").chunk(0).take(
@@ -344,12 +350,13 @@ def encode_segments(
             )
         else:
             pos_data, pos_offsets = None, None
-        blobs, ns, last_docs, max_tfns, block_offs = encode_posting_lists_grouped(
-            docs_s, tfs_s, dls_s,
+        blobs, ns, blk_cum, last, max_tfn, offs = encode_posting_lists_grouped(
+            ords_s, tfs_s, gd.doc_lens[ords_s],
             None,
             g_starts, g_ends, avgdl, k1=k1, b=b,
             pos_data=pos_data, pos_offsets=pos_offsets,
         )
+        blk_off = pa.array(blk_cum, type=pa.int32())
         # group-head term strings: codes are lexical ranks into the
         # sorted dictionary, so one ~#groups-sized take resolves them
         yield pa.record_batch(
@@ -363,23 +370,22 @@ def encode_segments(
                 ),
                 pa.array(ns, type=pa.int64()),
                 pa.array(blobs, type=pa.binary()),
-                pa.array(last_docs, type=pa.list_(pa.int64())),
-                pa.array(max_tfns, type=pa.list_(pa.float64())),
-                pa.array(block_offs, type=pa.list_(pa.int64())),
+                pa.ListArray.from_arrays(blk_off, pa.array(last)),
+                pa.ListArray.from_arrays(blk_off, pa.array(max_tfn)),
+                pa.ListArray.from_arrays(
+                    pa.array(2 * blk_cum, type=pa.int32()), pa.array(offs)
+                ),
             ],
             schema=out_schema,
         )
 
     nt = n_tasks or salted.sparkSession.conf.get("spark.sql.shuffle.partitions")
-    packed_expr = (
-        F.shiftleft(F.col("doc_len").cast("long"), 32)
-        + F.col("tf").cast("long")
-    ).alias("packed")
+    tf_expr = F.col("tf").cast("long").alias("tf")
     if hash_terms and with_positions:
         # slimmest exchange: 4 columns, all but positions fixed-width —
         # the term STRING rides the shuffle once per (term, shard) as a
-        # sentinel dictionary row (packed == -1, term bytes in the
-        # positions column; real packed is always > 0 since tf >= 1), not
+        # sentinel dictionary row (tf == -1, term bytes in the positions
+        # column; a real posting always has tf >= 1), not
         # once per posting row. The dictionary branch re-scans staging
         # but projects only (term_bucket, salt_id, term) and its partial
         # distinct collapses map-side to ~vocabulary rows.
@@ -388,7 +394,7 @@ def encode_segments(
             "salt_id",
             F.xxhash64("term").alias("th"),
             F.col("doc_id"),
-            packed_expr,
+            tf_expr,
             F.col("positions"),
         )
         dict_rows = (
@@ -399,18 +405,18 @@ def encode_segments(
                 "salt_id",
                 F.xxhash64("term").alias("th"),
                 F.lit(0).cast("long").alias("doc_id"),
-                F.lit(-1).cast("long").alias("packed"),
+                F.lit(-1).cast("long").alias("tf"),
                 F.encode(F.col("term"), "UTF-8").alias("positions"),
             )
         )
         arranged = (
             posting_rows.unionByName(dict_rows)
             .repartition(int(nt), "term_bucket", "salt_id")
-            .select("th", "doc_id", "packed", "positions")
+            .select("th", "doc_id", "tf", "positions")
         )
     else:
         hash_terms = False  # positions column is the dict-row carrier
-        cols = [F.col("term"), F.col("doc_id"), packed_expr]
+        cols = [F.col("term"), F.col("doc_id"), tf_expr]
         if with_positions:
             cols.append(F.col("positions"))
         arranged = (

@@ -56,9 +56,7 @@ def read_segment_rows(
     Mirrors ``read_segments(...).collect()``: hive partition pruning on
     ``term_bucket`` for the query terms' buckets, residual exact
     ``term IN`` filter (row-group pruned via parquet min/max on the
-    lexically-sorted term column), ``gen_seq`` attached. Generations
-    written before ``block_offs`` existed yield ``block_offs=None`` rows
-    (the allowMissingColumns contract of the Spark union).
+    lexically-sorted term column), ``gen_seq`` attached.
     """
     import pyarrow.dataset as pads
 
@@ -72,15 +70,8 @@ def read_segment_rows(
         filt = pads.field("term_bucket").isin(buckets) & pads.field(
             "term"
         ).isin(list(terms))
-    names = dataset.schema.names
-    want = columns if columns is not None else names
-    present = [c for c in want if c in names]
-    tbl = dataset.to_table(filter=filt, columns=present)
-    rows = tbl.to_pylist()
-    missing = [c for c in want if c not in names]
+    rows = dataset.to_table(filter=filt, columns=columns).to_pylist()
     for r in rows:
-        for c in missing:
-            r[c] = None
         r["gen_seq"] = gen_seq
     return rows
 
@@ -146,3 +137,36 @@ def read_small_table(path: str, columns: list[str] | None = None) -> list[dict]:
     lp = _local_path(path)
     tbl = pq.read_table(lp, columns=columns)
     return tbl.to_pylist()
+
+
+def read_gen_docs(path: str):
+    """A generation's ``gens/<g>/docs`` table as a GenDocs."""
+    import pyarrow.parquet as pq
+
+    from ckanext_extractor_spark.operators.codec import GenDocs
+
+    tbl = pq.read_table(_local_path(path), columns=["doc_id", "doc_len"])
+    return GenDocs.of(
+        tbl.column("doc_id").to_numpy(), tbl.column("doc_len").to_numpy()
+    )
+
+
+def read_doc_markers(staging: str):
+    """The per-doc marker rows (``tf == -1``: doc_id, doc_len) of a
+    tokenize staging dir as a GenDocs. Batches stream through the filter,
+    so only the marker rows are ever held, never the posting rows."""
+    import numpy as np
+    import pyarrow.dataset as pads
+
+    from ckanext_extractor_spark.operators.codec import GenDocs
+
+    ds = pads.dataset(_local_path(staging), format="parquet")
+    ids, lens = [], []
+    for rb in ds.to_batches(
+        columns=["doc_id", "doc_len"], filter=pads.field("tf") == -1
+    ):
+        ids.append(rb.column("doc_id").to_numpy())
+        lens.append(rb.column("doc_len").to_numpy())
+    if not ids:
+        return GenDocs.of([], [])
+    return GenDocs.of(np.concatenate(ids), np.concatenate(lens))

@@ -33,6 +33,7 @@ from pyspark.sql import functions as F
 from ckanext_extractor_spark.operators.build import BM25_B, BM25_K1
 from ckanext_extractor_spark.operators.codec import (
     BLOCK_SIZE,
+    GenDocs,
     decode_posting_blocks,
     decode_posting_list,
 )
@@ -104,14 +105,16 @@ class TermPostings:
 def load_term_postings(
     spark,
     segments: "str | DataFrame",
+    docs: GenDocs,
     terms: list[str],
     n_docs: int,
     avgdl: float,
     n_buckets: int = 64,
     dead: "DeadDocs | None" = None,
 ) -> list[TermPostings]:
-    """Read the query terms' segment rows, decode, and merge salt shards
-    per term. idf from the decoded df (= n live postings).
+    """Read the query terms' segment rows of ONE generation (doc set
+    ``docs``), decode, and merge salt shards per term. idf from the
+    decoded df (= n live postings).
 
     ``segments`` is a parquet path (cold: bucket-pruned directory read) or
     an already-cached segments DataFrame (warm: in-memory term filter —
@@ -122,10 +125,9 @@ def load_term_postings(
         seg_df = read_segments(spark, segments, terms, n_buckets)
     else:
         seg_df = segments.where(F.col("term").isin(terms))
-    rows = seg_df.collect()
     by_term: dict[str, list] = {}
-    for r in rows:
-        by_term.setdefault(r["term"], []).append(r)
+    for r in seg_df.collect():
+        by_term.setdefault(r["term"], []).append(dict(r.asDict(), docs=docs))
     return [
         term_postings_from_rows(term, shard_rows, n_docs, avgdl, dead=dead)
         for term, shard_rows in by_term.items()
@@ -141,10 +143,11 @@ def term_postings_from_rows(
 ) -> TermPostings:
     """Decode one term's segment rows (salt shards and/or generation
     shards) into a merged TermPostings, dropping tombstoned postings.
-    Pure driver-side numpy."""
+    Each row carries its generation's :class:`GenDocs` under ``"docs"``
+    (ordinals resolve through it). Pure driver-side numpy."""
     ids, tfs, dls = [], [], []
     for r in shard_rows:
-        i, t, d = decode_posting_list(bytes(r["blob"]))
+        i, t, d = decode_posting_list(bytes(r["blob"]), r["docs"])
         if dead is not None and len(dead):
             keep = dead.live_mask(i, _row_gen_seq(r))
             i, t, d = i[keep], t[keep], d[keep]
@@ -162,13 +165,9 @@ def term_postings_from_rows(
     df = len(doc_ids)
     idf = float(np.log(1.0 + (n_docs - df + 0.5) / (df + 0.5)))
     tfn = tfv / (tfv + k1 * (1.0 - b + b * dlv / avgdl))
-    nb = (df + BLOCK_SIZE - 1) // BLOCK_SIZE
-    bl = np.empty(nb, dtype=np.int64)
-    bm = np.empty(nb, dtype=np.float64)
-    for bi in range(nb):
-        sl = slice(bi * BLOCK_SIZE, (bi + 1) * BLOCK_SIZE)
-        bl[bi] = doc_ids[sl][-1]
-        bm[bi] = tfn[sl].max()
+    starts = np.arange(0, df, BLOCK_SIZE)
+    bl = doc_ids[np.minimum(starts + BLOCK_SIZE, df) - 1]
+    bm = np.maximum.reduceat(tfn, starts) if df else tfn
     return TermPostings(term, idf, doc_ids, tfv, dlv, bl, bm)
 
 
@@ -182,42 +181,57 @@ class LazyTermPostings:
     (for non-essential lists — the common-term case where most of a huge
     list is skipped; VERDICT r2 next #3; Lucene analog: impact-sorted
     skip data lets scorers seek without scanning the postings file).
+    A row of at most one block carries no block metadata; it is decoded
+    whole here (at most BLOCK_SIZE postings).
+
+    Upper bounds: a row's block_max_tfn was encoded with its
+    generation's avgdl (``GenDocs.avgdl``). tfn grows with avgdl, at
+    most in proportion, so the stored maxima scaled by
+    max(1, avgdl / generation avgdl) bound the scores at the current
+    avgdl.
 
     Valid ONLY when the index has no tombstones: df (hence idf) comes
     from the rows' n_postings metadata, which counts dead postings too —
     callers route tombstoned indexes to the eager decode path instead.
     """
 
-    __slots__ = ("term", "n", "idf", "avgdl", "_shards", "_max_tfn",
-                 "_n_docs")
+    __slots__ = ("term", "n", "idf", "avgdl", "_rows", "_shards", "_small",
+                 "_max_tfn", "_n_docs")
 
     def __init__(self, term: str, shard_rows: list, n_docs: int,
                  avgdl: float):
         self.term = term
         self.avgdl = avgdl
-        shards = []
-        n = 0
+        self._rows = [r for r in shard_rows if int(r["n_postings"])]
+        shards, small = [], []
         max_tfn = 0.0
-        for r in shard_rows:
-            np_r = int(r["n_postings"])
-            if not np_r:
-                continue
-            bm = np.asarray(r["block_max_tfn"], dtype=np.float64)
-            shards.append(
-                (
+        for r in self._rows:
+            docs = r["docs"]
+            if len(r["block_offs"]):
+                bm = np.asarray(r["block_max_tfn"], dtype=np.float64)
+                scale = max(1.0, avgdl / docs.avgdl)
+                max_tfn = max(max_tfn, float(bm.max()) * scale)
+                shards.append((
                     bytes(r["blob"]),
-                    np_r,
+                    int(r["n_postings"]),
                     np.asarray(r["block_last_doc"], dtype=np.int64),
                     np.asarray(r["block_offs"], dtype=np.int64),
+                    docs,
+                ))
+            else:
+                ids, tfs, dls = decode_posting_list(bytes(r["blob"]), docs)
+                tfn = tfs / (
+                    tfs + BM25_K1 * (1.0 - BM25_B + BM25_B * dls / avgdl)
                 )
-            )
-            n += np_r
-            if bm.size:
-                max_tfn = max(max_tfn, float(bm.max()))
+                max_tfn = max(max_tfn, float(tfn.max()))
+                small.append((ids, tfs, dls))
         self._shards = shards
-        self.n = n
+        self._small = small
+        self.n = sum(int(r["n_postings"]) for r in self._rows)
         self._n_docs = n_docs
-        self.idf = float(np.log(1.0 + (n_docs - n + 0.5) / (n + 0.5)))
+        self.idf = float(
+            np.log(1.0 + (n_docs - self.n + 0.5) / (self.n + 0.5))
+        )
         self._max_tfn = max_tfn
 
     def __len__(self) -> int:
@@ -237,23 +251,28 @@ class LazyTermPostings:
         construction) so the merge/argsort/block-max-rebuild logic
         exists exactly once and cannot drift between the lazy and
         eager paths (code-review r5 finding)."""
-        rows = [{"blob": blob} for blob, _, _, _ in self._shards]
         return term_postings_from_rows(
-            self.term, rows, self._n_docs, self.avgdl, dead=None)
+            self.term, self._rows, self._n_docs, self.avgdl, dead=None)
 
     def probe_scores(self, cand: np.ndarray, k1: float = BM25_K1,
                      b: float = BM25_B) -> np.ndarray:
         """BM25 contributions of this term at the sorted candidate docs
-        (0.0 where absent), decoding only blocks whose doc range
-        intersects ``cand``. Each doc lives in exactly one salt shard, so
-        per-shard contributions sum without overlap."""
+        (0.0 where absent), decoding only blocks whose ordinal range
+        holds a candidate of the block's generation. Each doc lives in
+        exactly one shard, so per-shard contributions sum without
+        overlap."""
         total = np.zeros(cand.size, dtype=np.float64)
-        for blob, n_post, bl, bo in self._shards:
-            sel = np.unique(np.searchsorted(bl, cand))
+        parts = list(self._small)
+        for blob, n_post, bl, bo, docs in self._shards:
+            ords = np.searchsorted(docs.doc_ids, cand)
+            in_gen = docs.doc_ids[np.minimum(ords, docs.doc_ids.size - 1)] == cand
+            sel = np.unique(np.searchsorted(bl, ords[in_gen]))
             sel = sel[sel < bl.size]
-            if sel.size == 0:
-                continue
-            ids, tfs, dls = decode_posting_blocks(blob, n_post, sel, bo, bl)
+            if sel.size:
+                parts.append(
+                    decode_posting_blocks(blob, n_post, sel, bo, bl, docs)
+                )
+        for ids, tfs, dls in parts:
             idx = np.searchsorted(ids, cand)
             idxc = np.minimum(idx, ids.size - 1)
             hit = ids[idxc] == cand
@@ -733,6 +752,7 @@ def wand_topk_daat(
 
 def scored_terms_distributed(
     segments: DataFrame,
+    docs_bc,
     terms_idf: dict[str, float],
     avgdl: float,
     dead_pairs: dict | None = None,
@@ -745,7 +765,8 @@ def scored_terms_distributed(
     expression evaluator builds its per-leaf flag/score columns from
     this ONE scan: the whole AST then compiles to a single Catalyst
     expression over the per-doc pivot, so an arbitrarily nested query
-    costs one segments scan + one shuffle regardless of clause count."""
+    costs one segments scan + one shuffle regardless of clause count.
+    ``docs_bc``: see :func:`query_segments_distributed`."""
     import pandas as pd
 
     k1, b = BM25_K1, BM25_B
@@ -754,6 +775,7 @@ def scored_terms_distributed(
 
     def score_part(batches):
         dead = DeadDocs(dead_local) if dead_local else None
+        gen_docs = docs_bc.value
         for pdf in batches:
             frames = []
             has_gen = "gen_seq" in pdf.columns
@@ -761,8 +783,10 @@ def scored_terms_distributed(
                 idf = terms_idf.get(row["term"])
                 if idf is None:
                     continue
-                ids, tfs, dls = decode_posting_list(bytes(row["blob"]))
                 gseq = int(row["gen_seq"]) if has_gen else 0
+                ids, tfs, dls = decode_posting_list(
+                    bytes(row["blob"]), gen_docs[row["gen"]]
+                )
                 if dead is not None:
                     keep = dead.live_mask(ids, gseq)
                     ids, tfs, dls = ids[keep], tfs[keep], dls[keep]
@@ -803,6 +827,7 @@ def scored_terms_distributed(
 def query_segments_distributed(
     spark,
     segments: DataFrame,
+    docs_bc,
     terms_idf: dict[str, float],
     avgdl: float,
     k: "int | None",
@@ -829,7 +854,10 @@ def query_segments_distributed(
     recomputed scores.
 
     Used when posting lists are too large to collect; the per-bucket
-    kernel is the same vectorized scorer as exact_topk.
+    kernel is the same vectorized scorer as exact_topk. ``docs_bc`` is a
+    Spark broadcast of ``{generation id: GenDocs}``: each row's ordinals
+    resolve through the doc set of its ``gen`` column (``gen_seq`` stays
+    the tombstone clock).
 
     Tombstones, by backlog size (ExtractorEngine._dead_for_distributed):
     ``dead_pairs`` (doc_id -> kill_seq) ships in the task closure — right
@@ -854,6 +882,7 @@ def query_segments_distributed(
 
     def score_part(batches):
         dead = DeadDocs(dead_local) if dead_local else None
+        gen_docs = docs_bc.value
         for pdf in batches:
             frames = []
             has_gen = "gen_seq" in pdf.columns
@@ -861,8 +890,10 @@ def query_segments_distributed(
                 idf = terms_idf.get(row["term"])
                 if idf is None:
                     continue
-                ids, tfs, dls = decode_posting_list(bytes(row["blob"]))
                 gseq = int(row["gen_seq"]) if has_gen else 0
+                ids, tfs, dls = decode_posting_list(
+                    bytes(row["blob"]), gen_docs[row["gen"]]
+                )
                 if dead is not None:
                     keep = dead.live_mask(ids, gseq)
                     ids, tfs, dls = ids[keep], tfs[keep], dls[keep]

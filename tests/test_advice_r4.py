@@ -40,7 +40,10 @@ def engine(spark, tmp_path_factory):
 
 
 def test_scored_terms_dedupes_duplicate_generations(spark):
-    from ckanext_extractor_spark.operators.codec import encode_posting_list
+    from ckanext_extractor_spark.operators.codec import (
+        GenDocs,
+        encode_posting_list,
+    )
     from ckanext_extractor_spark.operators.wand import (
         scored_terms_distributed,
     )
@@ -48,54 +51,61 @@ def test_scored_terms_dedupes_duplicate_generations(spark):
     ids = np.array([5, 9], dtype=np.int64)
     tfs = np.array([2, 1], dtype=np.int64)
     dls = np.array([10, 10], dtype=np.int64)
-    enc = encode_posting_list(ids, tfs, None, dls, avgdl=10.0)
+    docs = GenDocs.of(ids, dls)
+    docs_bc = spark.sparkContext.broadcast({"g0": docs, "g1": docs})
+    enc = encode_posting_list(ids, tfs, None, docs, avgdl=10.0)
     rows = [
-        ("spark", bytearray(enc["blob"]), 0),
+        ("spark", bytearray(enc["blob"]), 0, "g0"),
         # invariant violation: a SECOND live generation carries the
         # same (doc, term) postings — must not double the score
-        ("spark", bytearray(enc["blob"]), 1),
+        ("spark", bytearray(enc["blob"]), 1, "g1"),
     ]
     seg = spark.createDataFrame(
-        rows, "term string, blob binary, gen_seq long"
+        rows, "term string, blob binary, gen_seq long, gen string"
     )
     out = {
         (r["doc_id"], r["term"]): r["term_score"]
         for r in scored_terms_distributed(
-            seg, {"spark": 1.0}, avgdl=10.0
+            seg, docs_bc, {"spark": 1.0}, avgdl=10.0
         ).collect()
     }
     single = spark.createDataFrame(
-        rows[:1], "term string, blob binary, gen_seq long"
+        rows[:1], "term string, blob binary, gen_seq long, gen string"
     )
     base = {
         (r["doc_id"], r["term"]): r["term_score"]
         for r in scored_terms_distributed(
-            single, {"spark": 1.0}, avgdl=10.0
+            single, docs_bc, {"spark": 1.0}, avgdl=10.0
         ).collect()
     }
     assert out == base  # newest-generation wins, never a 2x sum
 
 
 def test_scored_terms_dedupes_with_tombstone_join(spark):
-    from ckanext_extractor_spark.operators.codec import encode_posting_list
+    from ckanext_extractor_spark.operators.codec import (
+        GenDocs,
+        encode_posting_list,
+    )
     from ckanext_extractor_spark.operators.wand import (
         scored_terms_distributed,
     )
 
     ids = np.array([5], dtype=np.int64)
+    docs = GenDocs.of(ids, np.array([10], dtype=np.int64))
     enc = encode_posting_list(
-        ids, np.array([2], dtype=np.int64), None,
-        np.array([10], dtype=np.int64), avgdl=10.0,
+        ids, np.array([2], dtype=np.int64), None, docs, avgdl=10.0,
     )
     seg = spark.createDataFrame(
-        [("spark", bytearray(enc["blob"]), 0),
-         ("spark", bytearray(enc["blob"]), 1)],
-        "term string, blob binary, gen_seq long",
+        [("spark", bytearray(enc["blob"]), 0, "g0"),
+         ("spark", bytearray(enc["blob"]), 1, "g1")],
+        "term string, blob binary, gen_seq long, gen string",
     )
     # tombstone kills gen 0 of doc 5; gen 1 survives — exactly one row
     dead = spark.createDataFrame([(5, 1)], "doc_id long, _kill_seq long")
     out = scored_terms_distributed(
-        seg, {"spark": 1.0}, avgdl=10.0, dead_df=dead
+        seg, spark.sparkContext.broadcast({"g0": docs, "g1": docs}),
+        {"spark": 1.0}, avgdl=10.0,
+        dead_df=dead,
     ).collect()
     assert len(out) == 1 and out[0]["doc_id"] == 5
 

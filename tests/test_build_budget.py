@@ -1,6 +1,6 @@
 """Build-path accounting: a fresh build stays within its Spark job budget,
-every build job carries its stage label, and the encode shuffle is sized
-from the exact staged posting count."""
+every build job carries its stage label, the encode shuffle is sized
+from the exact staged posting count, and posting blobs stay compact."""
 
 from __future__ import annotations
 
@@ -78,3 +78,29 @@ def test_resumed_build_sizes_encode_from_staged_rows(
     assert rep.resumed and rep.n_indexed == 50
     assert sized == [want]
     assert engB.index_stats()["n_postings"] == want
+
+
+# Upper bound on posting-blob bytes per posting of the fixture build. Blobs
+# store doc ordinals (1-byte gaps here) and no per-posting doc_len; 64-bit
+# doc-id gaps or per-posting norms would put it back near 14 B.
+BLOB_BYTES_PER_POSTING_MAX = 6.0
+
+
+def test_blob_bytes_per_posting(spark, tmp_path):
+    import pyarrow.dataset as pads
+
+    eng = ExtractorEngine(
+        spark, str(tmp_path / "bpp"), n_buckets=8, salt_threshold=50
+    )
+    eng.extract(spark.createDataFrame(corpus_pdf(120)), build_id="bpp1")
+    blob_bytes = n_postings = 0
+    for g in eng._gens:
+        tbl = pads.dataset(
+            eng._gen_segments_path(g), format="parquet", partitioning="hive"
+        ).to_table(columns=["blob", "n_postings"])
+        blob_bytes += sum(len(b) for b in tbl.column("blob").to_pylist())
+        n_postings += sum(tbl.column("n_postings").to_pylist())
+    assert n_postings == eng.index_stats()["n_postings"] > 0
+    assert blob_bytes / n_postings <= BLOB_BYTES_PER_POSTING_MAX, (
+        blob_bytes / n_postings
+    )

@@ -8,6 +8,7 @@ from hypothesis import given, settings
 from hypothesis import strategies as st
 
 from ckanext_extractor_spark.operators.codec import (
+    GenDocs,
     decode_posting_list,
     encode_posting_list,
     varbyte_decode,
@@ -52,9 +53,10 @@ def test_posting_list_roundtrip(rows):
     tfs = np.array([r[1] for r in rows], dtype=np.int64)
     doc_lens = np.array([r[2] for r in rows], dtype=np.int64)
     positions = [np.cumsum(rng.randint(1, 50, size=tf)) for tf in tfs]
-    enc = encode_posting_list(doc_ids, tfs, positions, doc_lens, avgdl=100.0)
+    docs = GenDocs.of(doc_ids, doc_lens)
+    enc = encode_posting_list(doc_ids, tfs, positions, docs, avgdl=100.0)
     got_ids, got_tfs, got_dls, got_pos = decode_posting_list(
-        enc["blob"], with_positions=True
+        enc["blob"], docs, with_positions=True
     )
     order = np.argsort(doc_ids, kind="stable")
     assert np.array_equal(got_ids, doc_ids[order])
@@ -71,8 +73,9 @@ def test_encoding_is_order_independent():
     tfs = rng.randint(1, 50, size=1000).astype(np.int64)
     doc_lens = rng.randint(10, 500, size=1000).astype(np.int64)
     perm = rng.permutation(1000)
-    e1 = encode_posting_list(doc_ids, tfs, None, doc_lens, avgdl=50.0)
-    e2 = encode_posting_list(doc_ids[perm], tfs[perm], None, doc_lens[perm], avgdl=50.0)
+    docs = GenDocs.of(doc_ids, doc_lens)
+    e1 = encode_posting_list(doc_ids, tfs, None, docs, avgdl=50.0)
+    e2 = encode_posting_list(doc_ids[perm], tfs[perm], None, docs, avgdl=50.0)
     assert e1["blob"] == e2["blob"]
     assert np.array_equal(e1["block_last_doc"], e2["block_last_doc"])
     assert np.allclose(e1["block_max_tfn"], e2["block_max_tfn"])
@@ -85,19 +88,23 @@ def test_block_max_bounds_scores():
     tfs = rng.randint(1, 100, size=n).astype(np.int64)
     doc_lens = rng.randint(5, 2000, size=n).astype(np.int64)
     k1, b, avgdl = 1.2, 0.75, 321.5
-    enc = encode_posting_list(doc_ids, tfs, None, doc_lens, avgdl, k1=k1, b=b)
+    docs = GenDocs.of(doc_ids, doc_lens)
+    enc = encode_posting_list(doc_ids, tfs, None, docs, avgdl, k1=k1, b=b)
     tfn = tfs / (tfs + k1 * (1 - b + b * doc_lens / avgdl))
     from ckanext_extractor_spark.operators.codec import BLOCK_SIZE
 
+    assert len(enc["block_last_doc"]) == (n + BLOCK_SIZE - 1) // BLOCK_SIZE
     for bi, (last, mx) in enumerate(zip(enc["block_last_doc"], enc["block_max_tfn"])):
         sl = slice(bi * BLOCK_SIZE, (bi + 1) * BLOCK_SIZE)
-        assert doc_ids[sl][-1] == last
+        # block_last_doc holds the block's last doc ORDINAL
+        assert docs.doc_ids[last] == doc_ids[sl][-1]
         assert tfn[sl].max() <= mx + 1e-15
 
 
 def test_grouped_encoder_matches_single():
-    """encode_posting_lists_grouped must produce byte-identical blobs to
-    per-term encode_posting_list (the format contract)."""
+    """encode_posting_lists_grouped must produce byte-identical blobs and
+    block metadata to per-term encode_posting_list (the format contract),
+    with lists of more than one block only carrying block arrays."""
     from ckanext_extractor_spark.operators.codec import (
         encode_posting_lists_grouped,
         varbyte_encode,
@@ -105,14 +112,15 @@ def test_grouped_encoder_matches_single():
 
     rng = np.random.RandomState(11)
     n_terms, avgdl = 50, 77.0
-    rows_ids, rows_tf, rows_dl, rows_pos, gs, ge = [], [], [], [], [], []
+    all_ids = np.sort(rng.choice(10**6, size=5000, replace=False)) - 500_000
+    docs = GenDocs.of(all_ids, rng.randint(5, 500, size=all_ids.size))
+    rows_ords, rows_tf, rows_pos, gs, ge = [], [], [], [], []
     cursor = 0
     singles = []
     for t in range(n_terms):
         df = rng.randint(1, 300)
-        ids = np.sort(rng.choice(10**6, size=df, replace=False)).astype(np.int64) - 500_000
+        ids = np.sort(rng.choice(all_ids, size=df, replace=False))
         tfs = rng.randint(1, 9, size=df).astype(np.int64)
-        dls = rng.randint(5, 500, size=df).astype(np.int64)
         positions = [np.cumsum(rng.randint(1, 30, size=tf)) for tf in tfs]
         pos_blobs = []
         for p in positions:
@@ -121,19 +129,19 @@ def test_grouped_encoder_matches_single():
             d[1:] = np.diff(p)
             pos_blobs.append(varbyte_encode(d.astype(np.uint64)))
         singles.append(
-            encode_posting_list(ids, tfs, None, dls, avgdl, positions_blobs=pos_blobs)
+            encode_posting_list(ids, tfs, None, docs, avgdl, positions_blobs=pos_blobs)
         )
-        rows_ids.append(ids)
+        rows_ords.append(docs.ordinals(ids))
         rows_tf.append(tfs)
-        rows_dl.append(dls)
         rows_pos.extend(pos_blobs)
         gs.append(cursor)
         ge.append(cursor + df)
         cursor += df
-    blobs, ns, last_docs, max_tfns, block_offs = encode_posting_lists_grouped(
-        np.concatenate(rows_ids),
+    ords = np.concatenate(rows_ords)
+    blobs, ns, blk_cum, last, max_tfn, offs = encode_posting_lists_grouped(
+        ords,
         np.concatenate(rows_tf),
-        np.concatenate(rows_dl),
+        docs.doc_lens[ords],
         np.array(rows_pos, dtype=object),
         np.array(gs),
         np.array(ge),
@@ -142,9 +150,11 @@ def test_grouped_encoder_matches_single():
     for t in range(n_terms):
         assert blobs[t] == singles[t]["blob"], f"term {t} blob mismatch"
         assert ns[t] == singles[t]["n_postings"]
-        assert last_docs[t] == singles[t]["block_last_doc"].tolist()
-        assert np.allclose(max_tfns[t], singles[t]["block_max_tfn"])
-        assert block_offs[t] == singles[t]["block_offs"].tolist()
+        b0, b1 = blk_cum[t], blk_cum[t + 1]
+        assert (b1 > b0) == (ns[t] > 128)
+        assert last[b0:b1].tolist() == singles[t]["block_last_doc"].tolist()
+        assert np.allclose(max_tfn[b0:b1], singles[t]["block_max_tfn"])
+        assert offs[2 * b0:2 * b1].tolist() == singles[t]["block_offs"].tolist()
 
 
 @given(
@@ -174,16 +184,17 @@ def test_selective_decode_matches_full(rows, rnd):
     tfs = np.array([r[1] for r in rows], dtype=np.int64)
     doc_lens = np.array([r[2] for r in rows], dtype=np.int64)
     positions = [np.cumsum(rng.randint(1, 50, size=tf)) for tf in tfs]
-    enc = encode_posting_list(doc_ids, tfs, positions, doc_lens, avgdl=80.0)
+    docs = GenDocs.of(doc_ids, doc_lens)
+    enc = encode_posting_list(doc_ids, tfs, positions, docs, avgdl=80.0)
     f_ids, f_tfs, f_dls, f_pos = decode_posting_list(
-        enc["blob"], with_positions=True
+        enc["blob"], docs, with_positions=True
     )
     full = {int(d): p for d, p in zip(f_ids, f_pos)}
     subset = [int(d) for d in doc_ids if rnd.random() < 0.4]
     subset += [999_999_999_999]  # an id the list does not contain
     wanted = np.unique(np.array(subset, dtype=np.int64))
     s_ids, s_tfs, s_dls, posmap = decode_posting_list_selective(
-        enc["blob"], wanted
+        enc["blob"], docs, wanted
     )
     assert np.array_equal(s_ids, f_ids)
     assert np.array_equal(s_tfs, f_tfs)
@@ -194,6 +205,41 @@ def test_selective_decode_matches_full(rows, rnd):
         assert np.array_equal(posmap[d], full[d])
     # empty selection
     _, _, _, empty = decode_posting_list_selective(
-        enc["blob"], np.array([], dtype=np.int64)
+        enc["blob"], docs, np.array([], dtype=np.int64)
     )
     assert empty == {}
+
+
+def test_block_decode_matches_full_decode():
+    """decode_posting_blocks restarts each run's ordinal chain from the
+    previous block's last ordinal and resolves it through the
+    generation's doc set; a list of at most one block has no blocks."""
+    from ckanext_extractor_spark.operators.codec import (
+        BLOCK_SIZE,
+        decode_posting_blocks,
+    )
+
+    rng = np.random.RandomState(5)
+    gen_ids = np.unique(rng.randint(-(2**62), 2**62, size=3000))
+    docs = GenDocs.of(gen_ids, rng.randint(1, 900, size=gen_ids.size))
+    small = encode_posting_list(gen_ids[:BLOCK_SIZE], np.ones(BLOCK_SIZE),
+                                None, docs, avgdl=50.0)
+    for key in ("block_last_doc", "block_max_tfn", "block_offs"):
+        assert len(small[key]) == 0
+    ids = np.sort(rng.choice(gen_ids, size=1000, replace=False))
+    tfs = rng.randint(1, 30, size=ids.size)
+    enc = encode_posting_list(ids, tfs, None, docs, avgdl=50.0)
+    full_ids, full_tfs, full_dls = decode_posting_list(enc["blob"], docs)
+    nb = len(enc["block_last_doc"])
+    assert nb == 8 and len(enc["block_offs"]) == 2 * nb
+    for sel in ([0], [nb - 1], [1, 2, 5], list(range(nb))):
+        got = decode_posting_blocks(
+            enc["blob"], ids.size, np.array(sel), enc["block_offs"],
+            enc["block_last_doc"], docs,
+        )
+        rows = np.concatenate(
+            [np.arange(b * BLOCK_SIZE, min((b + 1) * BLOCK_SIZE, ids.size))
+             for b in sel]
+        )
+        for g, f in zip(got, (full_ids, full_tfs, full_dls)):
+            assert np.array_equal(g, f[rows])

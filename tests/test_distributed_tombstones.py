@@ -107,11 +107,13 @@ def test_distributed_query_join_path_matches_closure(engine_with_tombstones):
     dd = eng._dead_docs()
     dead_pairs = {int(d): int(s) for d, s in zip(dd.doc_ids, dd.kill_seqs)}
     got_closure = query_segments_distributed(
-        eng.spark, seg, terms_idf, st["avgdl"], 10, conjunctive=True,
+        eng.spark, seg, eng._gen_docs_broadcast(), terms_idf, st["avgdl"], 10,
+        conjunctive=True,
         n_query_terms=len(terms), dead_pairs=dead_pairs,
     ).collect()
     got_join = query_segments_distributed(
-        eng.spark, seg, terms_idf, st["avgdl"], 10, conjunctive=True,
+        eng.spark, seg, eng._gen_docs_broadcast(), terms_idf, st["avgdl"], 10,
+        conjunctive=True,
         n_query_terms=len(terms), dead_df=eng._kills_df(),
     ).collect()
     assert [r["doc_id"] for r in got_closure] == [r["doc_id"] for r in got_join]

@@ -11,6 +11,7 @@ from __future__ import annotations
 import hashlib
 import json
 import os
+import shutil
 import time
 
 import pandas as pd
@@ -279,3 +280,127 @@ def test_deleted_docs_filtered_in_slow_and_distributed_paths(
     got = eng.search("data value", k=10, mode="slow")
     want = eng.search("data value", k=10)
     assert [d for d, _ in got] == [d for d, _ in want]
+
+
+def _assert_same_ranking(got, want, label):
+    assert [d for d, _ in got] == [d for d, _ in want], label
+    for (_, a), (_, b) in zip(got, want):
+        assert abs(a - b) <= 1e-9 * max(1.0, abs(b)), label
+
+
+def test_cross_generation_fast_paths_match_slow(spark, tmp_path, monkeypatch):
+    """Postings store ordinals into their OWN generation's doc array, so
+    the merge across generations is where a decoding slip would show.
+    Two generations with a salted hot term whose shards span several
+    blocks: the lazy MaxScore probe and distributed search (tombstone-
+    free index), then an update (tombstone) and a delete: exact, phrase
+    and distributed search — every fast path ranks exactly like
+    ``search(mode="slow")``. (With tombstones, search_distributed's idf
+    uses the pre-merge df by design, so there it is held to the slow
+    ranking on single-term queries, where idf cannot reorder docs.)"""
+    import ckanext_extractor_spark.operators.wand as wand
+
+    pdf = corpus_pdf(600)
+    eng = ExtractorEngine(
+        spark, str(tmp_path / "xgen"), n_buckets=8, salt_threshold=200
+    )
+    eng.DEAD_FRAC = 2.0  # keep the tombstones: no compaction
+    eng.extract(make_corpus(spark, pdf.iloc[:450]), build_id="x1")
+    eng.extract(make_corpus(spark, pdf), build_id="x2")  # 150 new docs
+    assert len(eng._gens) == 2
+    rows = eng._fetch_rows(["data"])["data"]
+    assert {r["gen_seq"] for r in rows} == {1, 2}
+    assert len(rows) > 2, "expected a salted hot term"
+    assert any(len(r["block_offs"]) for r in rows), "expected multi-block shards"
+
+    probes = []
+    real_blocks = wand.decode_posting_blocks
+
+    def counting_blocks(*a, **kw):
+        probes.append(1)
+        return real_blocks(*a, **kw)
+
+    monkeypatch.setattr(wand, "decode_posting_blocks", counting_blocks)
+    for q in ("data golden000017x", "value return mergesort",
+              "size golden000460x vector"):
+        eng.cool()
+        got = eng.search(q, k=10, conjunctive=False, mode="maxscore")
+        want = eng.search(q, k=10, conjunctive=False, mode="slow")
+        _assert_same_ranking(got, want, f"lazy {q!r}")
+        _assert_same_ranking(
+            eng.search_distributed(q, k=10, conjunctive=False), want,
+            f"distributed {q!r}")
+    assert probes, "the lazy MaxScore path never probed a block"
+
+    # update one doc of each generation, delete one more
+    pdf2 = pdf.copy()
+    pdf2.loc[pdf2.index[3], "content"] = "data value rewritten zzupdated"
+    pdf2.loc[pdf2.index[500], "content"] = "value data again zzupdated"
+    eng.extract(make_corpus(spark, pdf2), build_id="x3")
+    victim = eng.search("golden000017x", k=1)[0][0]
+    eng.delete([victim])
+    assert eng._tombstone_count() > 0 and len(eng._gens) == 3
+    for q, conj in [("data value", True), ("data value", False),
+                    ("zzupdated data", True), ("return size", False)]:
+        want = eng.search(q, k=20, conjunctive=conj, mode="slow")
+        eng.cool()
+        _assert_same_ranking(
+            eng.search(q, k=20, conjunctive=conj), want, f"exact {q!r}")
+    for q in ("data", "zzupdated", "value"):
+        want = eng.search(q, k=50, mode="slow")
+        got = eng.search_distributed(q, k=50)
+        assert [d for d, _ in got] == [d for d, _ in want], q
+    # phrase hits are the conjunctive ranking filtered to phrase matches
+    conj_rank = eng.search("data value", k=10_000, mode="slow")
+    score_of = dict(conj_rank)
+    phrase = eng.phrase_search("data value", k=10_000)
+    assert phrase
+    assert [d for d, _ in phrase] == [
+        d for d, _ in conj_rank if d in dict(phrase)
+    ]
+    for d, s in phrase:
+        assert abs(s - score_of[d]) <= 1e-9 * max(1.0, abs(s))
+    _assert_same_ranking(
+        eng.phrase_search("data value", k=10_000, distributed=True), phrase,
+        "distributed phrase")
+
+
+def test_older_segment_format_needs_compaction(spark, tmp_path, base_pdf):
+    """An index without ``segment_format: 2`` in its meta refuses to
+    search (naming compact()), and compact() rewrites it from the
+    generations' postings into the current format."""
+    from ckanext_extractor_spark.api import ValidationError
+
+    root = str(tmp_path / "legacy")
+    eng = ExtractorEngine(spark, root, n_buckets=8, salt_threshold=50)
+    eng.extract(make_corpus(spark, base_pdf.head(40)), build_id="l1")
+    eng.extract(make_corpus(spark, base_pdf), build_id="l2")
+    want = eng.search("data value", k=10, mode="slow")
+    # age the index: meta without the format, generation doc tables
+    # without per-doc lengths (as the previous format wrote them)
+    meta_path = os.path.join(root, "index_meta.json")
+    with open(meta_path) as f:
+        meta = json.load(f)
+    assert meta.pop("segment_format") == 2
+    with open(meta_path, "w") as f:
+        json.dump(meta, f)
+    for g in meta["generations"]:
+        p = os.path.join(root, "gens", g["gen"], "docs")
+        ids = spark.read.parquet(p).select("doc_id")
+        ids.write.mode("overwrite").parquet(p + ".ids")
+        shutil.rmtree(p)
+        os.rename(p + ".ids", p)
+
+    old = ExtractorEngine(spark, root)
+    for mode in ("auto", "slow"):
+        with pytest.raises(ValidationError, match=r"compact\(\)"):
+            old.search("data value", k=10, mode=mode)
+    merged = old.compact()
+    assert sorted(merged) == ["l1", "l2"] and len(old._gens) == 1
+    with open(meta_path) as f:
+        assert json.load(f)["segment_format"] == 2
+    reopened = ExtractorEngine(spark, root)
+    for e in (old, reopened):
+        _assert_same_ranking(e.search("data value", k=10), want, "compacted")
+        _assert_same_ranking(
+            e.search("data value", k=10, mode="slow"), want, "compacted slow")

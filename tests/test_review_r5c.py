@@ -161,6 +161,7 @@ def test_distributed_query_dedupes_duplicate_generations(spark):
     import numpy as np
 
     from ckanext_extractor_spark.operators.codec import (
+        GenDocs,
         encode_posting_list,
     )
     from ckanext_extractor_spark.operators.wand import (
@@ -168,14 +169,14 @@ def test_distributed_query_dedupes_duplicate_generations(spark):
     )
 
     avgdl = 10.0
+    docs = GenDocs.of([1, 2], [10, 8])
 
     def seg_row(term, gen, ids, tfs, dls):
         e = encode_posting_list(
             np.asarray(ids, dtype=np.int64),
-            np.asarray(tfs, dtype=np.int64), None,
-            np.asarray(dls, dtype=np.int64), avgdl,
+            np.asarray(tfs, dtype=np.int64), None, docs, avgdl,
         )
-        return (term, e["blob"], int(gen))
+        return (term, e["blob"], int(gen), f"g{gen}")
 
     # doc 1 matches both terms; its 'alpha' posting appears LIVE in
     # generations 0 AND 1 (gen-1 tf differs so the newest-wins rule is
@@ -186,13 +187,15 @@ def test_distributed_query_dedupes_duplicate_generations(spark):
         seg_row("beta", 0, [1, 2], [2, 2], [10, 8]),
     ]
     seg = spark.createDataFrame(
-        rows, "term string, blob binary, gen_seq long"
+        rows, "term string, blob binary, gen_seq long, gen string"
     )
     # empty kills frame -> use_join path (dedup lives there)
     dead_df = spark.createDataFrame([], "doc_id long, _kill_seq long")
     idf = {"alpha": 1.0, "beta": 1.0}
     got = {r["doc_id"]: r for r in query_segments_distributed(
-        spark, seg, idf, avgdl, 10, conjunctive=True,
+        spark, seg, spark.sparkContext.broadcast({"g0": docs, "g1": docs}),
+        idf, avgdl, 10,
+        conjunctive=True,
         n_query_terms=2, dead_df=dead_df,
     ).collect()}
     # doc 1 must SURVIVE the conjunctive gate (n_matched == 2, not 3)

@@ -20,6 +20,7 @@ from ckanext_extractor_spark.operators.build import (
     prepare_corpus,
     tokenize_postings,
 )
+from ckanext_extractor_spark.operators.codec import GenDocs
 from ckanext_extractor_spark.operators.query import bm25_search
 from ckanext_extractor_spark.operators.segments import (
     encode_segments,
@@ -57,17 +58,19 @@ def ctx(spark):
     doc_stats = build_doc_stats(prepared, postings)
     stats = build_corpus_stats(doc_stats).collect()[0]
     seg_dir = tempfile.mkdtemp(prefix="segtest_")
+    lens = postings.select("doc_id", "doc_len").distinct().collect()
+    docs = GenDocs.of([r["doc_id"] for r in lens], [r["doc_len"] for r in lens])
     salted = salted_postings(postings, dictionary, n_buckets=N_BUCKETS,
                              salt_threshold=50)  # low threshold -> salting real
-    segments = encode_segments(salted, stats["avgdl"], with_positions=True,
-                                n_buckets=N_BUCKETS)
+    segments = encode_segments(salted, docs, with_positions=True,
+                               n_buckets=N_BUCKETS)
     write_segments(segments, seg_dir)
-    yield spark, prepared, postings, dictionary, stats, seg_dir
+    yield spark, prepared, postings, dictionary, stats, seg_dir, docs
     shutil.rmtree(seg_dir, ignore_errors=True)
 
 
 def test_segments_cover_dictionary(ctx):
-    spark, _, _, dictionary, _, seg_dir = ctx
+    spark, _, _, dictionary, _, seg_dir, _ = ctx
     segs = read_segments(spark, seg_dir)
     n_terms_seg = segs.select("term").distinct().count()
     n_terms_dict = dictionary.count()
@@ -80,7 +83,7 @@ def test_segments_cover_dictionary(ctx):
 
 
 def test_hot_terms_are_salted(ctx):
-    spark, _, _, dictionary, _, seg_dir = ctx
+    spark, _, _, dictionary, _, seg_dir, _ = ctx
     hot = [
         r["term"]
         for r in dictionary.where(F.col("df") > 50).select("term").collect()
@@ -97,14 +100,14 @@ def test_hot_terms_are_salted(ctx):
 def test_segment_checksums_deterministic(ctx):
     """Rebuild from a differently-partitioned postings frame -> byte-identical
     segment blobs (SURVEY.md §5.2 item 3 / hard part #1)."""
-    spark, prepared, postings, dictionary, stats, seg_dir = ctx
+    spark, prepared, postings, dictionary, stats, seg_dir, docs = ctx
     seg_dir2 = tempfile.mkdtemp(prefix="segtest2_")
     try:
         repartitioned = postings.repartition(7)
         salted = salted_postings(repartitioned, dictionary,
                                  n_buckets=N_BUCKETS, salt_threshold=50)
-        segments2 = encode_segments(salted, stats["avgdl"], with_positions=True,
-                                n_buckets=N_BUCKETS)
+        segments2 = encode_segments(salted, docs, with_positions=True,
+                                    n_buckets=N_BUCKETS)
         write_segments(segments2, seg_dir2)
 
         def blob_digest(path):
@@ -128,7 +131,7 @@ def test_segment_checksums_deterministic(ctx):
 
 @pytest.mark.parametrize("query,conj", WAND_QUERIES)
 def test_wand_and_exact_match_slow_path(ctx, query, conj):
-    spark, _, postings, dictionary, stats, seg_dir = ctx
+    spark, _, postings, dictionary, stats, seg_dir, docs = ctx
     k = 10
     slow = bm25_search(
         postings, dictionary, stats["n_docs"], stats["avgdl"], query,
@@ -138,7 +141,7 @@ def test_wand_and_exact_match_slow_path(ctx, query, conj):
 
     terms = list(dict.fromkeys(analyze_query(query)))
     tls = load_term_postings(
-        spark, seg_dir, terms, stats["n_docs"], stats["avgdl"], N_BUCKETS
+        spark, seg_dir, docs, terms, stats["n_docs"], stats["avgdl"], N_BUCKETS
     )
     if conj and len(tls) < len(terms):
         tls_for_and = []  # missing term -> empty result
@@ -155,7 +158,7 @@ def test_wand_and_exact_match_slow_path(ctx, query, conj):
 
 
 def test_distributed_segment_scoring_matches(ctx):
-    spark, _, postings, dictionary, stats, seg_dir = ctx
+    spark, _, postings, dictionary, stats, seg_dir, docs = ctx
     query, conj, k = "data value", True, 10
     slow = bm25_search(
         postings, dictionary, stats["n_docs"], stats["avgdl"], query,
@@ -169,9 +172,12 @@ def test_distributed_segment_scoring_matches(ctx):
         )
         for r in drows
     }
-    segs = read_segments(spark, seg_dir, terms, N_BUCKETS)
+    segs = read_segments(spark, seg_dir, terms, N_BUCKETS).withColumn(
+        "gen", F.lit("g")
+    )
     got = query_segments_distributed(
-        spark, segs, terms_idf, stats["avgdl"], k, conjunctive=conj,
+        spark, segs, spark.sparkContext.broadcast({"g": docs}), terms_idf,
+        stats["avgdl"], k, conjunctive=conj,
         n_query_terms=len(terms),
     ).collect()
     assert [r["doc_id"] for r in got] == [r["doc_id"] for r in slow]
@@ -185,7 +191,7 @@ def test_hash_keyed_encode_identical_to_string_path(ctx):
     sentinel dictionary rows) but must yield EXACTLY the segment rows of
     the string exchange: same terms, same blobs byte-for-byte, same
     block metadata."""
-    spark, _, postings, dictionary, stats, _ = ctx
+    spark, _, postings, dictionary, stats, _, docs = ctx
     salted = salted_postings(postings, dictionary, n_buckets=N_BUCKETS,
                              salt_threshold=50)
 
@@ -204,9 +210,9 @@ def test_hash_keyed_encode_identical_to_string_path(ctx):
             for r in rows
         )
 
-    a = canon(encode_segments(salted, stats["avgdl"], with_positions=True,
+    a = canon(encode_segments(salted, docs, with_positions=True,
                               n_buckets=N_BUCKETS, hash_terms=False))
-    b = canon(encode_segments(salted, stats["avgdl"], with_positions=True,
+    b = canon(encode_segments(salted, docs, with_positions=True,
                               n_buckets=N_BUCKETS, hash_terms=True))
     # salt_id differs by construction (task id); everything else must not
     assert a == b

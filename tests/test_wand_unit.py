@@ -168,17 +168,21 @@ def test_maxscore_skewed_idf_matches_bruteforce(seed):
 
 def _lazy_rows(doc_ids, tfs, doc_lens, avgdl, n_shards=1):
     """Encode postings into 1..n segment-row dicts (salt-shard shaped)."""
-    from ckanext_extractor_spark.operators.codec import encode_posting_list
+    from ckanext_extractor_spark.operators.codec import (
+        GenDocs,
+        encode_posting_list,
+    )
 
     doc_ids = np.asarray(doc_ids, dtype=np.int64)
     tfs = np.asarray(tfs, dtype=np.int64)
     doc_lens = np.asarray(doc_lens, dtype=np.int64)
+    docs = GenDocs.of(doc_ids, doc_lens)
     rows = []
     for s in range(n_shards):
         m = np.arange(len(doc_ids)) % n_shards == s
         if not m.any():
             continue
-        enc = encode_posting_list(doc_ids[m], tfs[m], None, doc_lens[m],
+        enc = encode_posting_list(doc_ids[m], tfs[m], None, docs,
                                   avgdl=avgdl)
         rows.append({
             "blob": enc["blob"],
@@ -186,6 +190,7 @@ def _lazy_rows(doc_ids, tfs, doc_lens, avgdl, n_shards=1):
             "block_last_doc": enc["block_last_doc"],
             "block_max_tfn": enc["block_max_tfn"],
             "block_offs": enc["block_offs"],
+            "docs": docs,
         })
     return rows
 

@@ -30,6 +30,7 @@ from ckanext_extractor_spark.operators.build import (
     build_doc_stats,
     prepare_corpus,
 )
+from ckanext_extractor_spark.operators.codec import GenDocs
 from ckanext_extractor_spark.operators.segments import (
     encode_segments,
     salted_postings,
@@ -87,13 +88,14 @@ def main() -> None:
 
         doc_stats = build_doc_stats(meta_slim, postings)
         doc_stats.write.mode("overwrite").parquet(os.path.join(root, "ds"))
-        stats = build_corpus_stats(
-            spark.read.parquet(os.path.join(root, "ds"))
-        ).collect()[0]
+        ds = spark.read.parquet(os.path.join(root, "ds"))
+        build_corpus_stats(ds).collect()
         t0 = tick("doc_stats+corpus_stats", t0)
 
+        lens = ds.select("doc_id", "doc_len").collect()
+        docs = GenDocs.of([r[0] for r in lens], [r[1] for r in lens])
         salted = salted_postings(postings, dictionary, 32, 50_000)
-        segs = encode_segments(salted, stats["avgdl"], with_positions=True, n_buckets=64)
+        segs = encode_segments(salted, docs, with_positions=True, n_buckets=64)
         write_segments(segs, os.path.join(root, "segments"))
         t0 = tick("segments", t0)
 
