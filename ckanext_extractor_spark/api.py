@@ -60,6 +60,7 @@ import time
 import uuid
 from collections import OrderedDict
 from contextlib import contextmanager
+from functools import reduce
 
 import numpy as np
 from dataclasses import dataclass, field
@@ -102,7 +103,11 @@ from ckanext_extractor_spark.operators.segments import (
     salted_postings_auto,
 )
 from ckanext_extractor_spark.operators.codec import GenDocs
-from ckanext_extractor_spark.operators.wand import DeadDocs
+from ckanext_extractor_spark.operators.wand import (
+    DeadDocs,
+    drop_killed,
+    tombstoned,
+)
 
 #: on-disk segment format, recorded in index_meta.json: 2 = postings store
 #: doc ordinals and doc lengths live in ``gens/<g>/docs`` (codec.py). An
@@ -276,6 +281,25 @@ def _require_slop(slop) -> int:
             f"slop must be a non-negative integer, got {slop!r}"
         )
     return slop
+
+
+def _filtered_topk(tls, avgdl: float, k: int, keep_docs):
+    """Top-k of the conjunctive BM25 ranking of ``tls`` restricted to the
+    docs ``keep_docs(doc_ids)`` returns (a span filter: it changes the
+    match set, never the scores). Over-fetches 10x; only when filtering
+    leaves fewer than k of a full window does it re-rank every match."""
+    from ckanext_extractor_spark.operators.wand import exact_topk
+
+    out = []
+    for n in (max(k * 10, 100), 10**9):
+        scored = exact_topk(tls, n, avgdl, conjunctive=True)
+        if not scored:
+            break
+        keep = set(keep_docs([d for d, _ in scored]))
+        out = [(d, s) for d, s in scored if d in keep][:k]
+        if len(out) == k or len(scored) < n:
+            break
+    return out
 
 
 @dataclass
@@ -1169,34 +1193,37 @@ class ExtractorEngine:
         clear only the result cache."""
         if self._live_postings_cache is not None:
             return self._live_postings_cache
-        dfs = []
-        for g in self._gens:
-            p = self._gen_postings_path(g)
-            if not self.fs.exists(p) or not self._has_part_files(p):
-                continue
-            dfs.append(
-                self.spark.read.parquet(p)
-                .where(F.col("term").isNotNull())
-                .withColumn("gen_seq", F.lit(int(g["seq"])))
-            )
-        if not dfs:
+        out = self._postings_union(self._gens)
+        if out is None:
             return None
-        out = dfs[0]
-        for d in dfs[1:]:
-            out = out.unionByName(d)
         kills = self._kills_df()
         if kills is not None:
-            out = (
-                out.join(kills, "doc_id", "left")
-                .where(
-                    F.col("_kill_seq").isNull()
-                    | (F.col("_kill_seq") <= F.col("gen_seq"))
-                )
-                .drop("_kill_seq")
-            )
+            out = drop_killed(out, kills)
         out = out.drop("gen_seq")
         self._live_postings_cache = out
         return out
+
+    def _postings_union(self, gens: list[dict]) -> DataFrame | None:
+        """Union of the generations' postings (lineage markers dropped),
+        each row tagged with its generation's ``gen_seq``; None when every
+        generation is empty. A committed generation whose postings dir is
+        missing raises: read as empty, its docs would silently vanish
+        from slow search and from compaction."""
+        dfs = []
+        for g in gens:
+            p = self._gen_postings_path(g)
+            if not self.fs.exists(p):
+                raise FileNotFoundError(
+                    f"generation {g['gen']} of index {self.root} has no "
+                    f"postings at {p}; the index is incomplete"
+                )
+            if self._has_part_files(p):
+                dfs.append(
+                    self.spark.read.parquet(p)
+                    .where(F.col("term").isNotNull())
+                    .withColumn("gen_seq", F.lit(int(g["seq"])))
+                )
+        return reduce(DataFrame.unionByName, dfs) if dfs else None
 
     def _dictionary_df(self) -> DataFrame | None:
         """Live dictionary, derived on demand (the slow/oracle path's
@@ -1274,10 +1301,13 @@ class ExtractorEngine:
         return kills
 
     def _dead_for_distributed(self) -> "tuple[dict | None, DataFrame | None]":
-        """(dead_pairs, dead_df) for the distributed query/phrase plans:
-        exactly one is non-None when tombstones exist. Small backlogs ship
-        as a closure dict; large ones as a DataFrame for an anti-join —
-        never a multi-GB task closure (VERDICT r2 weak #2)."""
+        """(dead_pairs, dead_df), the tombstone arguments of the one
+        cluster-side decode plan (``wand.decode_segments``) that every
+        distributed query, expression and phrase path reads through:
+        exactly one is non-None when tombstones exist. A backlog of up
+        to TOMBSTONE_CLOSURE_MAX docs ships as a closure dict applied at
+        decode; a larger one as the kills DataFrame, joined after decode
+        (``wand.drop_killed``) — never a multi-GB task closure."""
         n = self._tombstone_count()
         if n == 0:
             return None, None
@@ -2069,8 +2099,9 @@ class ExtractorEngine:
         SnapshotDeletionPolicy. Takes the build lock (the copy sees no
         concurrent publish/GC), then copies every table the index root
         holds — generations, doc_stats/doc_store sidecars, manifest,
-        tombstones, ``index_meta.json`` — EXCEPT the transient
-        ``staging/`` area and the lock file itself, via the FsIO
+        tombstones, ``index_meta.json`` — EXCEPT the lock file and the
+        transient ``staging/`` area, of which only the dirs committed
+        generations keep their postings in are copied, via the FsIO
         byte-copy primitive (no Spark job; on HDFS/S3A it is a
         FileUtil.copy through the same FileSystem the engine publishes
         with). The result is a complete standalone index root: point an
@@ -2100,7 +2131,8 @@ class ExtractorEngine:
                 f"{self.in_progress()}"
             )
         try:
-            if self._read_meta() is None:
+            meta = self._read_meta()
+            if meta is None:
                 raise ValidationError(f"no index at {self.root} to snapshot")
             self.fs.makedirs(dest)
             copied = []
@@ -2109,6 +2141,13 @@ class ExtractorEngine:
                     continue
                 self.fs.copytree(self._p(name), os.path.join(dest, name))
                 copied.append(name)
+            # a generation built without an after_extract hook keeps its
+            # postings in its tokenize staging dir
+            for g in meta["generations"]:
+                rel = g["postings_rel"]
+                if rel.startswith("staging"):
+                    self.fs.copytree(self._p(rel), os.path.join(dest, rel))
+                    copied.append(rel)
         finally:
             self._release_lock()
         return {
@@ -2176,22 +2215,17 @@ class ExtractorEngine:
                     self.spark.read.parquet(p)
                     .select("doc_id")
                     .withColumn("_gen", F.lit(g["gen"]))
-                    .withColumn("_gseq", F.lit(int(g["seq"])))
+                    .withColumn("gen_seq", F.lit(int(g["seq"])))
                 )
             if parts:
-                alldocs = parts[0]
-                for d in parts[1:]:
-                    alldocs = alldocs.unionByName(d)
                 agg = (
-                    alldocs.join(kills, "doc_id", "left")
+                    reduce(DataFrame.unionByName, parts)
+                    .join(kills, "doc_id", "left")
                     .groupBy("_gen")
                     .agg(
                         F.count(F.lit(1)).alias("n"),
-                        F.sum(
-                            F.when(
-                                F.col("_kill_seq") > F.col("_gseq"), 1
-                            ).otherwise(0)
-                        ).alias("n_dead"),
+                        F.sum(F.when(tombstoned(), 1).otherwise(0))
+                        .alias("n_dead"),
                     )
                     .collect()
                 )
@@ -2234,35 +2268,16 @@ class ExtractorEngine:
             else self._segment_format
         )
         # live postings of the victim generations only
-        dfs = []
-        for g in victims:
-            p = self._gen_postings_path(g)
-            if not self.fs.exists(p) or not self._has_part_files(p):
-                continue
-            dfs.append(
-                spark.read.parquet(p)
-                .where(F.col("term").isNotNull())
-                .withColumn("gen_seq", F.lit(int(g["seq"])))
-            )
-        if not dfs:
+        merged = self._postings_union(victims)
+        if merged is None:
             self._gens = [g for g in self._gens if g["gen"] not in vset]
             self._segment_format = new_format
             self._write_meta()
             return
-        merged = dfs[0]
-        for d in dfs[1:]:
-            merged = merged.unionByName(d)
         kills = self._kills_df()
         tomb_exists = kills is not None
         if tomb_exists:
-            merged = (
-                merged.join(kills, "doc_id", "left")
-                .where(
-                    F.col("_kill_seq").isNull()
-                    | (F.col("_kill_seq") <= F.col("gen_seq"))
-                )
-                .drop("_kill_seq")
-            )
+            merged = drop_killed(merged, kills)
         merged = merged.drop("gen_seq")
         new_rel = os.path.join("gens", new_id, "postings")
         _atomic_overwrite(merged, self._p(new_rel), spark)
@@ -7428,7 +7443,6 @@ class ExtractorEngine:
         from ckanext_extractor_spark.operators.phrase import (
             span_first_filter_docs,
         )
-        from ckanext_extractor_spark.operators.wand import exact_topk
 
         self._check_access("extractor_search")
         _require_query(term)
@@ -7457,23 +7471,14 @@ class ExtractorEngine:
         tls = self._term_postings(uniq, st)
         if not tls:
             return []
-        overfetch = max(k * 10, 100)
-        scored = exact_topk(tls, overfetch, st["avgdl"], conjunctive=True)
-        if not scored:
-            return []
         rows_by_term = {uniq[0]: self._segment_rows(uniq[0])}
         dead = self._dead_docs()
-        keep = set(span_first_filter_docs(
-            [d for d, _ in scored], rows_by_term, uniq[0], end, dead
-        ))
-        out = [(d, s) for d, s in scored if d in keep][:k]
-        if len(out) < k and len(scored) == overfetch:
-            scored = exact_topk(tls, 10**9, st["avgdl"], conjunctive=True)
-            keep = set(span_first_filter_docs(
-                [d for d, _ in scored], rows_by_term, uniq[0], end, dead
-            ))
-            out = [(d, s) for d, s in scored if d in keep][:k]
-        return out
+        return _filtered_topk(
+            tls, st["avgdl"], k,
+            lambda docs: span_first_filter_docs(
+                docs, rows_by_term, uniq[0], end, dead
+            ),
+        )
 
     def span_near_search(
         self, query: str, slop: int = 0, k: int = 10,
@@ -7502,7 +7507,6 @@ class ExtractorEngine:
         from ckanext_extractor_spark.operators.phrase import (
             span_near_filter_docs,
         )
-        from ckanext_extractor_spark.operators.wand import exact_topk
 
         self._check_access("extractor_search")
         _require_query(query)
@@ -7532,24 +7536,12 @@ class ExtractorEngine:
             return []  # some term absent: the span can't exist
         dead = self._dead_docs()
         rows_by_term = {t: self._segment_rows(t) for t in uniq}
-
-        def _filter(scored):
-            return set(span_near_filter_docs(
-                [d for d, _ in scored], rows_by_term, terms, slop, dead,
-                in_order=in_order,
-            ))
-
-        overfetch = max(k * 10, 100)
-        scored = exact_topk(tls, overfetch, st["avgdl"], conjunctive=True)
-        if not scored:
-            return []
-        keep = _filter(scored)
-        out = [(d, s) for d, s in scored if d in keep][:k]
-        if len(out) < k and len(scored) == overfetch:
-            scored = exact_topk(tls, 10**9, st["avgdl"], conjunctive=True)
-            keep = _filter(scored)
-            out = [(d, s) for d, s in scored if d in keep][:k]
-        return out
+        return _filtered_topk(
+            tls, st["avgdl"], k,
+            lambda docs: span_near_filter_docs(
+                docs, rows_by_term, terms, slop, dead, in_order=in_order,
+            ),
+        )
 
     def span_not_search(
         self, query: str, exclude: str, slop: int = 0, k: int = 10,
@@ -7578,7 +7570,6 @@ class ExtractorEngine:
         from ckanext_extractor_spark.operators.phrase import (
             span_not_filter_docs,
         )
-        from ckanext_extractor_spark.operators.wand import exact_topk
 
         self._check_access("extractor_search")
         _require_query(query)
@@ -7615,24 +7606,12 @@ class ExtractorEngine:
         rows_by_term = {t: self._segment_rows(t) for t in uniq}
         if ex not in rows_by_term:  # setdefault would fetch eagerly
             rows_by_term[ex] = self._segment_rows(ex)
-
-        def _filter(scored):
-            return set(span_not_filter_docs(
-                [d for d, _ in scored], rows_by_term, terms, ex,
-                slop, pre, post, dead,
-            ))
-
-        overfetch = max(k * 10, 100)
-        scored = exact_topk(tls, overfetch, st["avgdl"], conjunctive=True)
-        if not scored:
-            return []
-        keep = _filter(scored)
-        out = [(d, s) for d, s in scored if d in keep][:k]
-        if len(out) < k and len(scored) == overfetch:
-            scored = exact_topk(tls, 10**9, st["avgdl"], conjunctive=True)
-            keep = _filter(scored)
-            out = [(d, s) for d, s in scored if d in keep][:k]
-        return out
+        return _filtered_topk(
+            tls, st["avgdl"], k,
+            lambda docs: span_not_filter_docs(
+                docs, rows_by_term, terms, ex, slop, pre, post, dead,
+            ),
+        )
 
     def _gc_staging(self) -> None:
         """Drop staging dirs not referenced by any live generation."""

@@ -550,8 +550,8 @@ def phrase_search_distributed(engine, query: str, k: int = 10,
 
       1. bucket/term-pruned segment scan (partition pruning on
          term_bucket, row-group min/max on term);
-      2. decode kernel per segment row -> (doc_id, term slot, BM25
-         contribution, positions array) — tombstones dropped at decode;
+      2. the one decode plan (``wand.decode_segments``) -> live rows
+         (doc_id, term slot, tf, doc_len, gen_seq, positions);
       3. ONE exchange keyed doc_id (repartition, not groupBy: the verify
          kernel does its own pandas groupby per partition);
       4. vectorized verify ACROSS docs: all query slots present AND
@@ -604,12 +604,9 @@ def phrase_matched_df(engine, terms: list, slop: int = 0,
     leaves' tokens). Shared by phrase_search_distributed and
     search_expr_distributed so phrase leaves stay cluster-side."""
     import pandas as pd
-    from pyspark.sql import functions as F
 
     from ckanext_extractor_spark.operators.build import BM25_B, BM25_K1
-    from ckanext_extractor_spark.operators.wand import (
-        DeadDocs,
-    )
+    from ckanext_extractor_spark.operators.wand import decode_segments
 
     uniq = list(dict.fromkeys(terms))
     _check_slop_mode(slop_mode, terms, uniq)
@@ -618,123 +615,26 @@ def phrase_matched_df(engine, terms: list, slop: int = 0,
         return None
     st = engine.corpus_stats()
     n_docs, avgdl = int(st["n_docs"]), float(st["avgdl"])
-    # df per unique term for idf (decode-time live counts need a pass; the
-    # driver path's idf uses live df too — compute it from decoded counts
-    # inside the kernel via a first lightweight aggregation).
-    # Tombstone routing: a compaction-bounded backlog ships as a closure
-    # dict (filtered at decode); a bulk-delete backlog becomes a
-    # DataFrame anti-join on the decoded rows instead, so no multi-GB
-    # dict ever serializes into tasks (VERDICT r2 weak #2).
     dead_pairs, dead_df = engine._dead_for_distributed()
-    use_join = dead_df is not None
     docs_bc = engine._gen_docs_broadcast()
     slot_of = {t: i for i, t in enumerate(uniq)}
     n_slots = len(uniq)
     k1, b = BM25_K1, BM25_B
-
-    def decode_part(batches):
-        dead = DeadDocs(dead_pairs) if dead_pairs else None
-        gen_docs = docs_bc.value
-        for pdf in batches:
-            frames = []
-            has_gen = "gen_seq" in pdf.columns
-            for _, row in pdf.iterrows():
-                slot = slot_of.get(row["term"])
-                if slot is None:
-                    continue
-                gseq = int(row["gen_seq"]) if has_gen else 0
-                ids, tfs, dls, pos = decode_posting_list(
-                    bytes(row["blob"]), gen_docs[row["gen"]],
-                    with_positions=True,
-                )
-                if dead is not None and len(dead):
-                    keep = dead.live_mask(ids, gseq)
-                    ids, tfs, dls = ids[keep], tfs[keep], dls[keep]
-                    pos = [p for p, kp in zip(pos, keep) if kp]
-                if not len(ids):
-                    continue
-                frame = {
-                    "doc_id": ids,
-                    "slot": np.full(len(ids), slot, dtype=np.int32),
-                    "tf": tfs,
-                    "dl": dls,
-                    "positions": pd.Series(
-                        [p.astype("int64") for p in pos], dtype=object
-                    ),
-                }
-                frame["gen_seq"] = np.full(len(ids), gseq, dtype=np.int64)
-                frames.append(pd.DataFrame(frame))
-            if frames:
-                yield pd.concat(frames, ignore_index=True)
-
-    # gen_seq always travels with the decoded rows: the verify kernel
-    # dedupes duplicate live (doc, slot) rows on it (max gen wins), so an
+    # gen_seq travels with the decoded rows: the verify kernel dedupes
+    # duplicate live (doc, slot) rows on it (max gen wins), so an
     # invariant violation (two generations both carrying a live posting
-    # for the same doc+term) degrades to last-write-wins like the old
-    # per-doc dict loop instead of silently failing the exact-count gate.
-    decode_schema = (
-        "doc_id long, slot int, tf long, dl long, positions array<long>, "
-        "gen_seq long"
-    )
-    decoded = seg.mapInPandas(decode_part, decode_schema)
-    if use_join:
-        decoded = (
-            decoded.join(dead_df, "doc_id", "left")
-            .where(
-                F.col("_kill_seq").isNull()
-                | (F.col("_kill_seq") <= F.col("gen_seq"))
-            )
-            .drop("_kill_seq")
-        )
-    
-    # live df per slot -> idf (same formula as the driver path).
-    # Counted on a POSITIONS-FREE decode pass: `decoded` is lazy and
-    # its consumer re-evaluates it, so aggregating df on it would run
-    # the expensive with_positions decode twice per query — the counts
-    # only need live (doc, slot) rows (code-review r5 finding).
-    def count_part(batches):
-        dead = DeadDocs(dead_pairs) if dead_pairs else None
-        gen_docs = docs_bc.value
-        for pdf in batches:
-            frames = []
-            has_gen = "gen_seq" in pdf.columns
-            for _, row in pdf.iterrows():
-                slot = slot_of.get(row["term"])
-                if slot is None:
-                    continue
-                gseq = int(row["gen_seq"]) if has_gen else 0
-                ids, _tfs, _dls = decode_posting_list(
-                    bytes(row["blob"]), gen_docs[row["gen"]]
-                )
-                if dead is not None and len(dead):
-                    ids = ids[dead.live_mask(ids, gseq)]
-                if not len(ids):
-                    continue
-                frames.append(pd.DataFrame({
-                    "doc_id": ids,
-                    "slot": np.full(len(ids), slot, dtype=np.int32),
-                    "gen_seq": np.full(len(ids), gseq, dtype=np.int64),
-                }))
-            if frames:
-                yield pd.concat(frames, ignore_index=True)
-
-    counted = seg.mapInPandas(
-        count_part, "doc_id long, slot int, gen_seq long"
-    )
-    if use_join:
-        counted = (
-            counted.join(dead_df, "doc_id", "left")
-            .where(
-                F.col("_kill_seq").isNull()
-                | (F.col("_kill_seq") <= F.col("gen_seq"))
-            )
-            .drop("_kill_seq")
-        )
+    # for the same doc+term) degrades to last-write-wins instead of
+    # silently failing the exact-count gate.
+    decoded = decode_segments(seg, docs_bc, slot_of, dead_pairs, dead_df,
+                              with_positions=True)
+    # live df per slot -> idf (same formula as the driver path), counted
+    # on a POSITIONS-FREE decode: `decoded` is lazy and its consumer
+    # re-evaluates it, so counting on it would run the expensive
+    # positions decode twice per query.
     dfs = {
-        int(r["slot"]): int(r["df"])
-        for r in counted.groupBy("slot").agg(
-            F.count("*").alias("df")
-        ).collect()
+        int(r["slot"]): int(r["count"])
+        for r in decode_segments(seg, docs_bc, slot_of, dead_pairs, dead_df)
+        .groupBy("slot").count().collect()
     }
     idf = {
         s: float(np.log(1.0 + (n_docs - d + 0.5) / (d + 0.5)))
@@ -767,7 +667,7 @@ def phrase_matched_df(engine, terms: list, slop: int = 0,
         slot = slot[order]
         gen = gen[order]
         tf = pdf["tf"].to_numpy()[order].astype(np.float64)
-        dl = pdf["dl"].to_numpy()[order].astype(np.float64)
+        dl = pdf["doc_len"].to_numpy()[order].astype(np.float64)
         pos_obj = pdf["positions"].to_numpy()[order]
         # one live row per (doc, slot): on a duplicate keep the max
         # gen_seq (rows are gen-ascending within each (doc, slot) run)

@@ -1,30 +1,25 @@
-"""Query fast path: block-max WAND top-k over encoded segments
-(SURVEY.md Q2-Q4 fast path; Ding & Suel-style BMW, re-expressed with
-numpy gallops).
+"""Query fast path: BM25 top-k over encoded segments (SURVEY.md Q2-Q4),
+rank-identical to the slow path (operators/query.py); ties by doc_id asc.
 
-Two execution strategies, both rank-identical to the slow path
-(operators/query.py), tie-break score desc then doc_id asc:
+Driver side, over decoded posting lists: ``exact_topk`` is a vectorized
+brute merge (sorted intersection for AND, unique + bincount for OR);
+``maxscore_topk``/``maxscore_topk_lazy`` are batch MaxScore, probing the
+lists that cannot reach the k-th score only at the candidates (the lazy
+form decodes only the blocks it probes); ``wand_topk`` routes AND to
+``exact_topk`` and OR to ``maxscore_topk``, and ``wand_topk_daat`` keeps
+the literal document-at-a-time block-max WAND loop as a reference.
 
-* ``wand_topk`` — driver-side: the query's term segments (pruned to their
-  term_buckets at read) are collected and decoded; document-at-a-time WAND
-  with (a) full-list upper bounds for pivoting, (b) per-block block-max
-  refinement to skip non-competitive pivots, (c) vectorized
-  np.searchsorted cursor gallops. Low-latency path for interactive k≪N.
-
-* ``exact_topk`` — vectorized brute merge (concatenate -> unique ->
-  bincount -> argpartition). No pruning, but every op is numpy; the
-  baseline the WAND path is benchmarked against, and the kernel the
-  distributed per-bucket scorer reuses.
-
-At cluster scale the same kernels run inside mapInPandas per term_bucket
-(segments are bucket-partitioned parquet), followed by a global top-k
-merge — see query_segments_distributed.
+Cluster side, for lists too large to collect: ``decode_segments`` is the
+one per-partition decode of segment rows into live postings, and
+``query_segments_distributed``, ``scored_terms_distributed`` and
+``phrase.phrase_matched_df`` are Catalyst plans over its rows.
 """
 
 from __future__ import annotations
 
 import heapq
 from dataclasses import dataclass
+from itertools import repeat
 
 import numpy as np
 from pyspark.sql import DataFrame
@@ -750,6 +745,119 @@ def wand_topk_daat(
     return [(-d, s) for s, d in out]
 
 
+def tombstoned():
+    """True on a row (``gen_seq``) joined to the kills table (doc_id,
+    _kill_seq: the max tombstone seq per doc) whose doc was killed after
+    the row's generation was written; False where the doc has none."""
+    return F.coalesce(F.col("_kill_seq") > F.col("gen_seq"), F.lit(False))
+
+
+def drop_killed(rows: DataFrame, kills: DataFrame) -> DataFrame:
+    """``rows`` (with ``doc_id`` and ``gen_seq``) minus the rows a
+    tombstone in ``kills`` killed."""
+    return (
+        rows.join(kills, "doc_id", "left").where(~tombstoned())
+        .drop("_kill_seq")
+    )
+
+
+def decode_segments(
+    segments: DataFrame,
+    docs_bc,
+    slot_of: dict[str, int],
+    dead_pairs: dict | None = None,
+    dead_df: "DataFrame | None" = None,
+    with_positions: bool = False,
+) -> DataFrame:
+    """The one cluster-side segment decode: live postings of the segment
+    rows whose term is in ``slot_of``, as rows ``(doc_id, slot, tf,
+    doc_len, gen_seq[, positions])`` with ``slot = slot_of[term]``; one
+    ``decode_posting_list`` call per segment row. ``docs_bc`` broadcasts
+    ``{generation id: GenDocs}``, through which a row's ordinals resolve
+    by its ``gen`` column; ``gen_seq`` is the tombstone clock (0 when
+    absent). Tombstones come as ``ExtractorEngine._dead_for_distributed``
+    routes them: ``dead_pairs`` (doc_id -> kill_seq) in the task closure,
+    applied at decode, or ``dead_df`` (doc_id, _kill_seq) joined after it
+    (:func:`drop_killed`), so a bulk-delete backlog never serializes
+    into every task."""
+    import pandas as pd
+
+    def decode_part(batches):
+        dead = DeadDocs(dead_pairs) if dead_pairs else None
+        gen_docs = docs_bc.value
+        for pdf in batches:
+            gseqs = pdf["gen_seq"] if "gen_seq" in pdf.columns else repeat(0)
+            decoded, slots, seqs = [], [], []
+            for term, blob, gen, gseq in zip(
+                pdf["term"], pdf["blob"], pdf["gen"], gseqs
+            ):
+                slot = slot_of.get(term)
+                if slot is None:
+                    continue
+                cols = decode_posting_list(
+                    bytes(blob), gen_docs[gen], with_positions
+                )
+                if dead is not None:
+                    keep = dead.live_mask(cols[0], int(gseq))
+                    cols = [c[keep] for c in cols[:3]] + [
+                        [p for p, kp in zip(c, keep) if kp] for c in cols[3:]
+                    ]
+                decoded.append(cols)
+                slots.append(slot)
+                seqs.append(gseq)
+            if not decoded:
+                continue
+            lens = [len(cols[0]) for cols in decoded]
+            out = {
+                "doc_id": np.concatenate([cols[0] for cols in decoded]),
+                "slot": np.repeat(np.asarray(slots, dtype=np.int32), lens),
+                "tf": np.concatenate([cols[1] for cols in decoded]),
+                "doc_len": np.concatenate([cols[2] for cols in decoded]),
+                "gen_seq": np.repeat(np.asarray(seqs, dtype=np.int64), lens),
+            }
+            if with_positions:
+                out["positions"] = pd.Series(
+                    [p for cols in decoded for p in cols[3]], dtype=object
+                )
+            yield pd.DataFrame(out)
+
+    schema = "doc_id long, slot int, tf long, doc_len long, gen_seq long"
+    if with_positions:
+        schema += ", positions array<long>"
+    rows = segments.mapInPandas(decode_part, schema)
+    return rows if dead_df is None else drop_killed(rows, dead_df)
+
+
+def _scored_rows(segments, docs_bc, terms_idf, avgdl, dead_pairs,
+                 dead_df) -> DataFrame:
+    """(doc_id, slot, gen_seq, term_score) of the :func:`decode_segments`
+    rows of ``terms_idf``'s terms (slot = position in it): BM25 as one
+    Catalyst expression, in :func:`_scores`' operation order. It is
+    built from SQL text because every Column call is a Py4J round trip,
+    and there are dozens of them in one BM25 tree."""
+    rows = decode_segments(
+        segments, docs_bc, {t: i for i, t in enumerate(terms_idf)},
+        dead_pairs, dead_df,
+    )
+    k1, b = BM25_K1, BM25_B
+    idf = ", ".join(f"{float(v)!r}D" for v in terms_idf.values())
+    score = F.expr(
+        f"array({idf})[slot] * tf * {k1 + 1.0!r}D / (tf + {k1!r}D"
+        f" * ({1.0 - b!r}D + {b!r}D * doc_len / {float(avgdl)!r}D))"
+    )
+    return rows.select("doc_id", "slot", "gen_seq", score.alias("term_score"))
+
+
+def _newest_generation(scored: DataFrame) -> DataFrame:
+    """One ``term_score`` per (doc_id, slot): should a duplicate live
+    generation survive tombstone filtering, the NEWEST wins instead of
+    double-counting (max(struct) partial-aggregates map-side)."""
+    return scored.groupBy("doc_id", "slot").agg(
+        F.max(F.struct("gen_seq", "term_score"))
+        .getField("term_score").alias("term_score")
+    )
+
+
 def scored_terms_distributed(
     segments: DataFrame,
     docs_bc,
@@ -758,69 +866,20 @@ def scored_terms_distributed(
     dead_pairs: dict | None = None,
     dead_df: "DataFrame | None" = None,
 ) -> DataFrame:
-    """Per-(doc, term) BM25 contributions, fully cluster-side — the
-    term-carrying sibling of :func:`query_segments_distributed`'s decode
-    kernel (same vectorized per-bucket scorer, same tombstone routing),
-    aggregated to one row per (doc_id, term). The distributed boolean-
-    expression evaluator builds its per-leaf flag/score columns from
-    this ONE scan: the whole AST then compiles to a single Catalyst
+    """Per-(doc, term) BM25 contributions, fully cluster-side: the
+    scored decode rows of :func:`_scored_rows`, newest generation per
+    (doc, term). ``docs_bc`` and the tombstone arguments are those of
+    :func:`decode_segments`, the one decode plan. The distributed
+    boolean-expression evaluator builds its per-leaf flag/score columns
+    from this ONE scan: the whole AST then compiles to a single Catalyst
     expression over the per-doc pivot, so an arbitrarily nested query
-    costs one segments scan + one shuffle regardless of clause count.
-    ``docs_bc``: see :func:`query_segments_distributed`."""
-    import pandas as pd
-
-    k1, b = BM25_K1, BM25_B
-    use_join = dead_df is not None
-    dead_local = {} if use_join else dict(dead_pairs or {})
-
-    def score_part(batches):
-        dead = DeadDocs(dead_local) if dead_local else None
-        gen_docs = docs_bc.value
-        for pdf in batches:
-            frames = []
-            has_gen = "gen_seq" in pdf.columns
-            for _, row in pdf.iterrows():
-                idf = terms_idf.get(row["term"])
-                if idf is None:
-                    continue
-                gseq = int(row["gen_seq"]) if has_gen else 0
-                ids, tfs, dls = decode_posting_list(
-                    bytes(row["blob"]), gen_docs[row["gen"]]
-                )
-                if dead is not None:
-                    keep = dead.live_mask(ids, gseq)
-                    ids, tfs, dls = ids[keep], tfs[keep], dls[keep]
-                tf = tfs.astype(np.float64)
-                dl = dls.astype(np.float64)
-                s = (
-                    idf * tf * (k1 + 1.0)
-                    / (tf + k1 * (1.0 - b + b * dl / avgdl))
-                )
-                frame = {
-                    "doc_id": ids,
-                    "term": np.full(len(ids), row["term"], dtype=object),
-                    "term_score": s,
-                    "gen_seq": np.full(len(ids), gseq, dtype=np.int64),
-                }
-                frames.append(pd.DataFrame(frame))
-            if frames:
-                yield pd.concat(frames, ignore_index=True)
-
-    out_schema = "doc_id long, term string, term_score double, gen_seq long"
-    scored = segments.mapInPandas(score_part, out_schema)
-    if use_join:
-        scored = scored.join(dead_df, "doc_id", "left").where(
-            F.col("_kill_seq").isNull()
-            | (F.col("_kill_seq") <= F.col("gen_seq"))
-        )
-    # one live generation per (doc, term) after tombstone filtering is
-    # the invariant; if a stray duplicate live generation survives (the
-    # violation the phrase kernel's slot dedup also defends against),
-    # the NEWEST generation wins instead of double-counting a sum —
-    # max(struct) still partial-aggregates map-side
-    return scored.groupBy("doc_id", "term").agg(
-        F.max(F.struct("gen_seq", "term_score"))
-        .getField("term_score").alias("term_score")
+    costs one segments scan + one shuffle regardless of clause count."""
+    scored = _scored_rows(
+        segments, docs_bc, terms_idf, avgdl, dead_pairs, dead_df
+    )
+    term = F.array(*[F.lit(t) for t in terms_idf])[F.col("slot")]
+    return _newest_generation(scored).select(
+        "doc_id", term.alias("term"), "term_score"
     )
 
 
@@ -840,97 +899,26 @@ def query_segments_distributed(
     exclude_df: "DataFrame | None" = None,
     after: "tuple[float, int] | None" = None,
 ) -> DataFrame:
-    """Cluster-scale path: decode+score inside each term_bucket partition
-    (mapInPandas, vectorized), aggregate per doc, global TakeOrdered.
+    """Cluster-scale top-k for lists too large to collect: the scored
+    decode rows of :func:`_scored_rows` summed per doc, then a global
+    TakeOrdered. ``docs_bc`` and the tombstone arguments are those of
+    :func:`decode_segments`, the one decode plan; ``terms_idf`` must be
+    live-df-based. With ``dead_df`` the newest generation per (doc, term)
+    wins first, so a duplicate live generation cannot inflate n_matched
+    past nq and evict true conjunctive matches.
 
     ``after=(score, doc_id)`` is Lucene's searchAfter / Solr cursorMark:
     only docs STRICTLY after the cursor in (score desc, doc_id asc)
-    order survive, so page N+1 costs exactly one k-sized TakeOrdered —
-    never the start+k materialization of offset paging. The comparison
-    uses the exact float score the previous page returned (Lucene's
-    FieldDoc carries the exact score too); a doc whose re-aggregated
-    score differs in the last ulp across jobs could straddle the cursor,
-    which is the same noise floor Lucene accepts for searchAfter on
-    recomputed scores.
-
-    Used when posting lists are too large to collect; the per-bucket
-    kernel is the same vectorized scorer as exact_topk. ``docs_bc`` is a
-    Spark broadcast of ``{generation id: GenDocs}``: each row's ordinals
-    resolve through the doc set of its ``gen`` column (``gen_seq`` stays
-    the tombstone clock).
-
-    Tombstones, by backlog size (ExtractorEngine._dead_for_distributed):
-    ``dead_pairs`` (doc_id -> kill_seq) ships in the task closure — right
-    for the compaction-bounded steady state; ``dead_df`` (columns doc_id,
-    _kill_seq — max kill seq per doc) filters via a DataFrame join AFTER
-    scoring instead, so a bulk-delete backlog of 10^8 docs never
-    serializes into every task (VERDICT r2 weak #2; Lucene analog:
-    liveDocs are per-segment state, never process-global). Pass at most
-    one of the two; idf values in ``terms_idf`` must be live-df-based
-    either way.
-    """
-    import pandas as pd
-
-    k1, b = BM25_K1, BM25_B
+    order survive, so page N+1 costs one k-sized TakeOrdered. It compares
+    the exact float score the previous page returned; a doc whose
+    re-aggregated score differs in the last ulp could straddle the
+    cursor, the noise floor Lucene accepts for searchAfter too."""
     nq = n_query_terms or len(terms_idf)
-    use_join = dead_df is not None
-    dead_local = {} if use_join else dict(dead_pairs or {})
-    # small int ordinal per query term: lets the multi-generation path
-    # dedup per (doc, term) without widening the slimmed exchange with
-    # the term STRING (the r4 hash-exchange win stays intact)
-    tid_map = {t: i for i, t in enumerate(terms_idf)}
-
-    def score_part(batches):
-        dead = DeadDocs(dead_local) if dead_local else None
-        gen_docs = docs_bc.value
-        for pdf in batches:
-            frames = []
-            has_gen = "gen_seq" in pdf.columns
-            for _, row in pdf.iterrows():
-                idf = terms_idf.get(row["term"])
-                if idf is None:
-                    continue
-                gseq = int(row["gen_seq"]) if has_gen else 0
-                ids, tfs, dls = decode_posting_list(
-                    bytes(row["blob"]), gen_docs[row["gen"]]
-                )
-                if dead is not None:
-                    keep = dead.live_mask(ids, gseq)
-                    ids, tfs, dls = ids[keep], tfs[keep], dls[keep]
-                tf = tfs.astype(np.float64)
-                dl = dls.astype(np.float64)
-                s = idf * tf * (k1 + 1.0) / (tf + k1 * (1.0 - b + b * dl / avgdl))
-                frame = {"doc_id": ids, "term_score": s}
-                if use_join:
-                    frame["gen_seq"] = np.full(len(ids), gseq, dtype=np.int64)
-                    frame["_tid"] = np.full(
-                        len(ids), tid_map[row["term"]], dtype=np.int64)
-                frames.append(pd.DataFrame(frame))
-            if frames:
-                yield pd.concat(frames, ignore_index=True)
-
-    out_schema = "doc_id long, term_score double" + (
-        ", gen_seq long, _tid long" if use_join else ""
+    scored = _scored_rows(
+        segments, docs_bc, terms_idf, avgdl, dead_pairs, dead_df
     )
-    scored = segments.mapInPandas(score_part, out_schema)
-    if use_join:
-        # one live generation per (doc, term) after tombstone filtering
-        # is the invariant; a stray duplicate live generation would
-        # double-count score AND inflate n_matched past nq (evicting
-        # true conjunctive matches), so mirror scored_terms_distributed:
-        # the NEWEST generation wins (code-review r5 finding)
-        scored = (
-            scored.join(dead_df, "doc_id", "left")
-            .where(
-                F.col("_kill_seq").isNull()
-                | (F.col("_kill_seq") <= F.col("gen_seq"))
-            )
-            .groupBy("doc_id", "_tid")
-            .agg(
-                F.max(F.struct("gen_seq", "term_score"))
-                .getField("term_score").alias("term_score")
-            )
-        )
+    if dead_df is not None:
+        scored = _newest_generation(scored)
     per_doc = scored.groupBy("doc_id").agg(
         F.sum("term_score").alias("score"),
         F.count("*").cast("int").alias("n_matched"),

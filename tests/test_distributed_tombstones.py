@@ -129,6 +129,29 @@ def test_distributed_query_join_path_matches_closure(engine_with_tombstones):
     )
 
 
+def test_distributed_expr_join_path_matches_closure(engine_with_tombstones):
+    """search_expr_distributed reads the same decode plan: the closure
+    and the join tombstone routes give the same ranking."""
+    eng = engine_with_tombstones
+    assert eng._tombstone_count() > 0
+    exprs = ['data AND value', '(data OR regen003) AND -extra',
+             '"data value" OR regen001']
+    via_closure = [eng.search_expr_distributed(e, k=10) for e in exprs]
+    saved = eng.TOMBSTONE_CLOSURE_MAX
+    try:
+        eng.TOMBSTONE_CLOSURE_MAX = 0  # force the anti-join path
+        dp, ddf = eng._dead_for_distributed()
+        assert dp is None and ddf is not None
+        via_join = [eng.search_expr_distributed(e, k=10) for e in exprs]
+    finally:
+        eng.TOMBSTONE_CLOSURE_MAX = saved
+    for e, c, j in zip(exprs, via_closure, via_join):
+        assert c, e
+        assert [d for d, _ in j] == [d for d, _ in c], e
+        assert np.allclose([s for _, s in j], [s for _, s in c],
+                           rtol=1e-12), e
+
+
 def test_distributed_phrase_rows_spanning_arrow_batches(spark, tmp_path):
     """A doc's slot rows can arrive in different Arrow batches of the same
     partition (maxRecordsPerBatch); the verify kernel must accumulate the

@@ -97,3 +97,61 @@ def test_cli_snapshot(spark, tmp_path, capsys):
                  str(tmp_path / "snap"), "--buckets", "4"]) == 0
     rep = json.loads(capsys.readouterr().out.strip())
     assert rep["generations"] >= 1
+
+
+MORE = [
+    ("r/s", "s3", "c3", "markdown", "alpha epsilon", {"Tag": ["z"]}),
+    ("r/s", "s4", "c4", "markdown", "beta epsilon", {"Tag": ["z"]}),
+]
+
+
+def _two_generations(spark, root):
+    eng = _engine(spark, root)
+    eng.extract(spark.createDataFrame(DOCS, SCHEMA), build_id="s1")
+    eng.extract(spark.createDataFrame(DOCS + MORE, SCHEMA), build_id="s2")
+    assert len(eng._gens) == 2
+    return eng
+
+
+def test_restored_snapshot_keeps_generation_postings(spark, tmp_path):
+    """Generations built without an after_extract hook keep their
+    postings under staging/; a restored copy must still serve them to
+    the slow path, term_vectors and compaction, not only to fast
+    search."""
+    eng = _two_generations(spark, str(tmp_path / "src"))
+    queries = ("alpha beta", "beta", "epsilon", "gamma delta")
+    want = {q: eng.search(q, k=10, conjunctive=False) for q in queries}
+    eng.snapshot(str(tmp_path / "snap"))
+    snap = _engine(spark, str(tmp_path / "snap"))
+    for q in queries:
+        fast = snap.search(q, k=10, conjunctive=False)
+        slow = snap.search(q, k=10, conjunctive=False, mode="slow")
+        assert fast == want[q] and fast
+        assert [d for d, _ in slow] == [d for d, _ in fast]
+        assert [s for _, s in slow] == pytest.approx(
+            [s for _, s in fast], rel=1e-9)
+    for doc, _ in want["alpha beta"]:
+        assert snap.term_vectors(doc)
+    snap.compact(max_gens=1)
+    assert len(snap._gens) == 1
+    assert snap.index_stats()["n_docs"] == 5
+    for q in queries:
+        assert [d for d, _ in snap.search(q, k=10, conjunctive=False)] == [
+            d for d, _ in want[q]
+        ]
+
+
+def test_missing_generation_postings_raise(spark, tmp_path):
+    """A committed generation whose postings dir is gone is a damaged
+    index: the slow path and compaction refuse it instead of reading the
+    generation as empty (which would drop its docs)."""
+    import shutil
+
+    eng = _two_generations(spark, str(tmp_path / "src"))
+    shutil.rmtree(eng._gen_postings_path(eng._gens[0]))
+    eng.cool()
+    with pytest.raises(FileNotFoundError):
+        eng.search("alpha", k=10, mode="slow")
+    with pytest.raises(FileNotFoundError):
+        eng.compact(max_gens=1)
+    assert len(eng._gens) == 2  # nothing dropped
