@@ -9,11 +9,10 @@ Reference API mapping (logic/action.py, paster.py):
 
 Index layout under ``index_root`` (all plain Parquet; an Iceberg catalog
 slot-in would change only the read/write format strings):
-    staging/raw_postings/<build_id>/   tokenize checkpoint (resume point);
-                                       doubles as the generation's postings
-    gens/<gen_id>/postings/            postings of a generation (hook-
-                                       transformed or compacted builds)
-    gens/<gen_id>/segments/            encoded blobs, partitioned term_bucket
+    staging/raw_postings/<build_id>/   tokenize checkpoint (resume point),
+                                       dropped once the generation commits
+    gens/<gen_id>/segments/            encoded blobs, partitioned term_bucket;
+                                       the only stored copy of the postings
     gens/<gen_id>/docs/                (doc_id, doc_len) of the generation's
                                        docs; postings store ordinals into
                                        its sorted doc ids
@@ -101,6 +100,7 @@ from ckanext_extractor_spark.operators.query import bm25_search
 from ckanext_extractor_spark.operators.segments import (
     encode_segments,
     salted_postings_auto,
+    with_position_blobs,
 )
 from ckanext_extractor_spark.operators.codec import GenDocs
 from ckanext_extractor_spark.operators.wand import (
@@ -442,9 +442,6 @@ class ExtractorEngine:
         self._stats_cache: dict | None = None
         self._dead_cache: DeadDocs | None = None
         self._tomb_count: int | None = None
-        # memoized logical PLANS (no data) — see _live_postings()
-        self._live_postings_cache: DataFrame | None = None
-        self._dictionary_cache: DataFrame | None = None
         # memoized top-k results keyed (query, k, conjunctive, mode) —
         # Solr queryResultCache analog (solrconfig.xml queryResultCache);
         # cleared by cool() on every index mutation
@@ -526,9 +523,6 @@ class ExtractorEngine:
     # -- paths ------------------------------------------------------------
     def _p(self, *parts: str) -> str:
         return os.path.join(self.root, *parts)
-
-    def _gen_postings_path(self, g: dict) -> str:
-        return self._p(g["postings_rel"])
 
     def _gen_segments_path(self, g: dict) -> str:
         return self._p("gens", g["gen"], "segments")
@@ -681,6 +675,10 @@ class ExtractorEngine:
     def _extract_locked(
         self, corpus: DataFrame, force: bool, build_id: str, t0: float
     ) -> BuildReport:
+        if self._segment_format != SEGMENT_FORMAT:
+            # rewrite an older-format index before adding to it: its
+            # upgrade reads postings tables only its own generations have
+            self.maybe_compact()
         prepared = prepare_corpus(corpus, ("*",))  # keep all; lang gates status
         if self.hooks.before_tokenize:
             prepared = self.hooks.before_tokenize(prepared)
@@ -764,8 +762,7 @@ class ExtractorEngine:
         ).select("doc_id")
 
         # ---- tokenize delta (resume-aware staging checkpoint) ------------
-        staging_rel = os.path.join("staging", "raw_postings", build_id)
-        staging = self._p(staging_rel)
+        staging = self._p("staging", "raw_postings", build_id)
         resumed = self.fs.exists(os.path.join(staging, "_SUCCESS"))
         with stage("tokenize_stage"):
             if not resumed:
@@ -786,23 +783,22 @@ class ExtractorEngine:
                 self._staged_gen_docs(staging, doc_lens) if n_changed
                 else None
             )
-            gen_postings_rel = staging_rel
             if self.hooks.after_extract:
-                delta_postings = self.hooks.after_extract(delta_postings)
-                gen_postings_rel = os.path.join("gens", build_id, "postings")
+                # encode and doc_stats read one materialized copy of the
+                # hook's output; it goes with the staging dir
+                hooked = staging + ".after_extract"
                 _atomic_overwrite(
-                    delta_postings, self._p(gen_postings_rel), spark
+                    self.hooks.after_extract(delta_postings), hooked, spark
                 )
-                delta_postings = spark.read.parquet(
-                    self._p(gen_postings_rel)
-                ).where(F.col("term").isNotNull())
+                delta_postings = spark.read.parquet(hooked).where(
+                    F.col("term").isNotNull()
+                )
             n_delta_rows = self._staged_posting_rows(staging, lineage)
 
         next_seq = self._seq + 1
         gen = {
             "gen": build_id,
             "seq": next_seq,
-            "postings_rel": gen_postings_rel,
             "n_docs": int(n_changed),
         }
 
@@ -1177,67 +1173,6 @@ class ExtractorEngine:
         partitioned write leaves only _SUCCESS — unreadable schema)."""
         return self.fs.has_part_files(path)
 
-    def _live_postings(self) -> DataFrame | None:
-        """Union of all generations' postings (lineage markers filtered),
-        tombstoned docs removed — the logical current postings table.
-        Used by the slow/synonym query paths and compaction; hot query
-        paths read per-term segment blobs instead.
-
-        The returned PLAN is memoized (optimization r6, guide §1): each
-        spark.read.parquet re-lists files and re-reads footers (~0.2 s
-        per call on local[32]) for an identical logical plan. No data is
-        cached — every action still computes from the parquet files; the
-        memo is dropped by cool(), which every postings mutation (extract
-        commit, delete, compaction) calls, so a mutated index never serves
-        a stale file listing. Metadata updates touch no postings file and
-        clear only the result cache."""
-        if self._live_postings_cache is not None:
-            return self._live_postings_cache
-        out = self._postings_union(self._gens)
-        if out is None:
-            return None
-        kills = self._kills_df()
-        if kills is not None:
-            out = drop_killed(out, kills)
-        out = out.drop("gen_seq")
-        self._live_postings_cache = out
-        return out
-
-    def _postings_union(self, gens: list[dict]) -> DataFrame | None:
-        """Union of the generations' postings (lineage markers dropped),
-        each row tagged with its generation's ``gen_seq``; None when every
-        generation is empty. A committed generation whose postings dir is
-        missing raises: read as empty, its docs would silently vanish
-        from slow search and from compaction."""
-        dfs = []
-        for g in gens:
-            p = self._gen_postings_path(g)
-            if not self.fs.exists(p):
-                raise FileNotFoundError(
-                    f"generation {g['gen']} of index {self.root} has no "
-                    f"postings at {p}; the index is incomplete"
-                )
-            if self._has_part_files(p):
-                dfs.append(
-                    self.spark.read.parquet(p)
-                    .where(F.col("term").isNotNull())
-                    .withColumn("gen_seq", F.lit(int(g["seq"])))
-                )
-        return reduce(DataFrame.unionByName, dfs) if dfs else None
-
-    def _dictionary_df(self) -> DataFrame | None:
-        """Live dictionary, derived on demand (the slow/oracle path's
-        input; the hot paths get df from decoded lists). Plan memoized
-        alongside _live_postings (same cool()-scoped lifetime)."""
-        if self._dictionary_cache is not None:
-            return self._dictionary_cache
-        postings = self._live_postings()
-        if postings is None:
-            return None
-        out = build_dictionary(postings, self.n_buckets)
-        self._dictionary_cache = out
-        return out
-
     def _dead_docs(self) -> DeadDocs:
         if self._dead_cache is None:
             p = self._p("tombstones")
@@ -1416,36 +1351,37 @@ class ExtractorEngine:
         ``Terms.termVectors(doc)``: every indexed term of ``doc_id`` with
         its in-doc tf and (when the index stores positions) its sorted
         position list. Lucene persists term vectors as a doc-keyed
-        forward store written at flush; here the generation postings
-        tables ARE that store — doc-keyed parquet rows
-        (doc_id, term, tf, positions), so the lookup is one
-        predicate-pushed scan bounded by the doc's vocabulary, never an
-        inverted-index sweep. Tombstoned generations are filtered the
-        same way the query paths filter them (:meth:`_live_postings`).
-        Returns [(term, tf, positions)], term asc; [] for unknown or
-        deleted docs, positions [] when built without positions."""
+        forward store written at flush; here the segments are the only
+        copy of the postings, so the lookup decodes the segments of just
+        the generations whose doc set holds the doc: first without
+        positions, for the doc's vocabulary, then with positions for
+        those terms only (bucket-pruned). Tombstoned postings are
+        filtered the same way the query paths filter them
+        (:meth:`postings_frame`). Returns [(term, tf, positions)], term
+        asc; [] for unknown or deleted docs, positions [] when built
+        without positions."""
         self._check_access("extractor_show")
         if isinstance(doc_id, bool) or not isinstance(doc_id, int):
             raise ValidationError(f"doc_id must be an integer, got {doc_id!r}")
-        postings = self._live_postings()
-        if postings is None:
-            return []
-        from ckanext_extractor_spark.operators.codec import varbyte_decode
-
+        gens = [g for g in self._gens if doc_id in self._gen_docs(g).doc_ids]
+        hit = F.col("doc_id") == int(doc_id)
+        vocab = self.postings_frame(gens=gens) if gens else None
         rows = (
-            postings.where(F.col("doc_id") == int(doc_id))
-            .select("term", "tf", "positions")
-            .collect()
+            vocab.where(hit).select("term", "tf").collect() if vocab else []
         )
-        out = []
-        for r in sorted(rows, key=lambda r: r["term"]):
-            pos: list[int] = []
-            if self.with_positions and r["positions"] is not None:
-                gaps, _ = varbyte_decode(bytes(r["positions"]))
-                if len(gaps):
-                    pos = np.cumsum(gaps.astype(np.int64)).tolist()
-            out.append((r["term"], int(r["tf"]), pos))
-        return out
+        if rows and self.with_positions:
+            rows = (
+                self.postings_frame(
+                    [r["term"] for r in rows], with_positions=True,
+                    gens=gens,
+                )
+                .where(hit).select("term", "tf", "positions").collect()
+            )
+        return [
+            (r["term"], int(r["tf"]),
+             list(r["positions"]) if self.with_positions else [])
+            for r in sorted(rows, key=lambda r: r["term"])
+        ]
 
     def explain(
         self,
@@ -2098,11 +2034,11 @@ class ExtractorEngine:
         Solr replication-handler ``command=backup`` / Lucene
         SnapshotDeletionPolicy. Takes the build lock (the copy sees no
         concurrent publish/GC), then copies every table the index root
-        holds — generations, doc_stats/doc_store sidecars, manifest,
-        tombstones, ``index_meta.json`` — EXCEPT the lock file and the
-        transient ``staging/`` area, of which only the dirs committed
-        generations keep their postings in are copied, via the FsIO
-        byte-copy primitive (no Spark job; on HDFS/S3A it is a
+        holds — generations (whose segments are the only copy of the
+        postings), doc_stats/doc_store sidecars, manifest, tombstones,
+        ``index_meta.json`` — EXCEPT the lock file and the transient
+        ``staging/`` area (tokenize checkpoints), via the FsIO byte-copy
+        primitive (no Spark job; on HDFS/S3A it is a
         FileUtil.copy through the same FileSystem the engine publishes
         with). The result is a complete standalone index root: point an
         :class:`ExtractorEngine` at it to restore (it serves queries
@@ -2141,13 +2077,6 @@ class ExtractorEngine:
                     continue
                 self.fs.copytree(self._p(name), os.path.join(dest, name))
                 copied.append(name)
-            # a generation built without an after_extract hook keeps its
-            # postings in its tokenize staging dir
-            for g in meta["generations"]:
-                rel = g["postings_rel"]
-                if rel.startswith("staging"):
-                    self.fs.copytree(self._p(rel), os.path.join(dest, rel))
-                    copied.append(rel)
         finally:
             self._release_lock()
         return {
@@ -2257,68 +2186,64 @@ class ExtractorEngine:
         return [g["gen"] for g in victims]
 
     def _compact(self, victims: list[dict]) -> None:
+        """Merge ``victims`` into one generation: their live postings,
+        decoded from their segments (an older-format index: from its
+        postings tables), re-encoded through the build's encode path
+        against the merged doc set — no re-tokenize."""
         spark = self.spark
         vset = {g["gen"] for g in victims}
         new_id = "compact-" + uuid.uuid4().hex[:10]
         new_seq = max(int(g["seq"]) for g in victims)
-        # rewriting every generation (from postings, which carry no segment
-        # format) leaves the index in the current format
+        # rewriting every generation leaves the index in the current format
         new_format = (
             SEGMENT_FORMAT if len(victims) == len(self._gens)
             else self._segment_format
         )
-        # live postings of the victim generations only
-        merged = self._postings_union(victims)
-        if merged is None:
-            self._gens = [g for g in self._gens if g["gen"] not in vset]
-            self._segment_format = new_format
-            self._write_meta()
-            return
-        kills = self._kills_df()
-        tomb_exists = kills is not None
-        if tomb_exists:
-            merged = drop_killed(merged, kills)
-        merged = merged.drop("gen_seq")
-        new_rel = os.path.join("gens", new_id, "postings")
-        _atomic_overwrite(merged, self._p(new_rel), spark)
-        survivors = [g for g in self._gens if g["gen"] not in vset]
-        if not self._has_part_files(self._p(new_rel)) or not spark.read.parquet(
-            self._p(new_rel)
-        ).take(1):
-            # every victim posting was dead: drop the victims outright
-            self.fs.rmtree(self._p("gens", new_id))
+        if self._segment_format == SEGMENT_FORMAT:
+            live = self.postings_frame(
+                with_positions=self.with_positions, gens=victims
+            )
+            if live is not None and self.with_positions:
+                live = with_position_blobs(live)
         else:
-            live = spark.read.parquet(self._p(new_rel)).where(
-                F.col("term").isNotNull()
-            )
-            docs_path = self._p("gens", new_id, "docs")
-            live.groupBy("doc_id").agg(
-                F.max("doc_len").alias("doc_len")
-            ).write.mode("overwrite").parquet(docs_path)
-            docs = self._read_gen_docs(docs_path)
-            salted = salted_postings_auto(
-                live, self.n_buckets, self.salt_threshold
-            )
-            self._encode_and_write_segments(
-                salted,
-                docs,
-                self._encode_tasks(None),
-                self._p("gens", new_id, "segments"),
-            )
-            survivors.append(
-                {
-                    "gen": new_id,
-                    "seq": new_seq,
-                    "postings_rel": new_rel,
-                    "n_docs": int(docs.doc_ids.size),
-                }
-            )
-            self._gen_docs_memo[(new_id, new_seq)] = docs
+            live = self._format1_postings(victims)
+        survivors = [g for g in self._gens if g["gen"] not in vset]
+        if live is not None:
+            # read by the doc-set write, the hot-term count and the encode
+            live = live.persist()
+            try:
+                docs_path = self._p("gens", new_id, "docs")
+                live.groupBy("doc_id").agg(
+                    F.max("doc_len").alias("doc_len")
+                ).write.mode("overwrite").parquet(docs_path)
+                docs = self._read_gen_docs(docs_path)
+                if docs.doc_ids.size:
+                    self._encode_and_write_segments(
+                        salted_postings_auto(
+                            live, self.n_buckets, self.salt_threshold
+                        ),
+                        docs,
+                        self._encode_tasks(None),
+                        self._p("gens", new_id, "segments"),
+                    )
+                    survivors.append(
+                        {
+                            "gen": new_id,
+                            "seq": new_seq,
+                            "n_docs": int(docs.doc_ids.size),
+                        }
+                    )
+                    self._gen_docs_memo[(new_id, new_seq)] = docs
+                else:
+                    # every victim posting was dead: drop the victims outright
+                    self.fs.rmtree(self._p("gens", new_id))
+            finally:
+                live.unpersist()
         survivors.sort(key=lambda g: int(g["seq"]))
         self._gens = survivors
         # tombstone GC: a row (d, s) still matters only if some remaining
         # generation older than s contains d
-        if tomb_exists:
+        if self.fs.exists(self._p("tombstones")):
             gen_docs = []
             for g in survivors:
                 p = self._gen_docs_path(g)
@@ -2329,9 +2254,7 @@ class ExtractorEngine:
                         )
                     )
             if gen_docs:
-                alldocs = gen_docs[0]
-                for d in gen_docs[1:]:
-                    alldocs = alldocs.unionByName(d)
+                alldocs = reduce(DataFrame.unionByName, gen_docs)
                 tomb2 = read_parquet_if(spark, self._p("tombstones"))
                 needed = tomb2.alias("t").join(
                     alldocs.alias("g"),
@@ -2350,6 +2273,24 @@ class ExtractorEngine:
             self.fs.rmtree(self._p("gens", g["gen"]))
         self.cool()
         self._gc_staging()
+
+    def _format1_postings(self, gens: list[dict]) -> DataFrame | None:
+        """Live postings of an index in the older segment format, from the
+        postings table each of its generations kept (named by its
+        ``postings_rel`` meta key, which nothing else reads)."""
+        dfs = [
+            self.spark.read.parquet(self._p(g["postings_rel"]))
+            .where(F.col("term").isNotNull())
+            .withColumn("gen_seq", F.lit(int(g["seq"])))
+            for g in gens if self._gen_table(g, self._p(g["postings_rel"]))
+        ]
+        if not dfs:
+            return None
+        out = reduce(DataFrame.unionByName, dfs)
+        kills = self._kills_df()
+        if kills is not None:
+            out = drop_killed(out, kills)
+        return out.drop("gen_seq")
 
     # -- search ------------------------------------------------------------
     def _synonym_phrase_rows(
@@ -2499,7 +2440,7 @@ class ExtractorEngine:
           'wand'     — block-max WAND (doc-at-a-time python loop; kept as
                        the literal BMW algorithm, see maxscore for the
                        vectorized skipper),
-          'slow'     — DataFrame algebra over the postings table (oracle),
+          'slow'     — DataFrame algebra over the decoded postings (oracle),
         Synonym queries take the grouped slow path (T6 is a query-rewrite
         feature, not a hot-loop one). All paths are rank-identical.
 
@@ -2647,13 +2588,22 @@ class ExtractorEngine:
                 bm25_search_synonyms,
             )
 
+            qconf = query_config_for(self.analyzer)
+            base = list(dict.fromkeys(analyze_query(query, config=qconf)))
+            phrase_rows = self._synonym_phrase_rows(query, synonyms, st)
+            postings = self.postings_frame(base + [
+                tok for t in base for syn in synonyms.get(t, [])
+                for tok in analyze_query(syn, config=qconf)
+            ])
+            if postings is None:
+                return []
             rows = bm25_search_synonyms(
-                self._live_postings(),
-                self._dictionary_df(),
+                postings,
+                build_dictionary(postings, self.n_buckets),
                 st["n_docs"], st["avgdl"], query, synonyms,
                 k=k, conjunctive=conjunctive,
-                phrase_rows=self._synonym_phrase_rows(query, synonyms, st),
-                config=query_config_for(self.analyzer),
+                phrase_rows=phrase_rows,
+                config=qconf,
             ).collect()
             return [(r["doc_id"], r["score"]) for r in rows]
         kernel = mode in ("auto", "wand", "exact", "maxscore")
@@ -2771,44 +2721,95 @@ class ExtractorEngine:
                 return fn(tls, k, st["avgdl"], conjunctive=conjunctive,
                           min_match=min_match)
             return fn(tls, k, st["avgdl"], conjunctive=conjunctive)
-        postings = self._live_postings()
+        return self._slow_search(
+            query, k, conjunctive, ex_terms, min_match, fq_df, st
+        )
+
+    def _slow_search(
+        self, query, k, conjunctive, ex_terms, min_match, include_df, st
+    ) -> list[tuple[int, float]]:
+        """The DataFrame oracle: ``bm25_search`` over the decoded live
+        postings of the query's and the excluded terms only, with the
+        dictionary (a term's df = its live posting count) built over the
+        same frame."""
+        qconf = query_config_for(self.analyzer)
+        terms = list(dict.fromkeys(analyze_query(query, config=qconf)))
+        postings = self.postings_frame(terms + ex_terms) if terms else None
         if postings is None:
             return []
-        dictionary = self._dictionary_df()
         rows = bm25_search(
-            postings, dictionary, st["n_docs"], st["avgdl"], query,
-            k=k, conjunctive=conjunctive,
-            config=query_config_for(self.analyzer),
+            postings, build_dictionary(postings, self.n_buckets),
+            st["n_docs"], st["avgdl"], query,
+            k=k, conjunctive=conjunctive, config=qconf,
             exclude_terms=ex_terms or None,
             min_match=min_match,
-            include_df=fq_df,
+            include_df=include_df,
         ).collect()
         return [(r["doc_id"], r["score"]) for r in rows]
 
     # -- serving caches ------------------------------------------------------
-    def _segments_union(self, terms: list[str] | None = None) -> DataFrame | None:
-        """All generations' segment tables (bucket/term pruned when terms
-        given), each row tagged with its generation seq (``gen_seq``, the
-        tombstone clock) and id (``gen``, whose doc set its ordinals
-        index)."""
+    def _segments_union(
+        self, terms: list[str] | None = None, gens: list[dict] | None = None
+    ) -> DataFrame | None:
+        """The segment tables of ``gens`` (default: all generations),
+        bucket/term pruned when terms are given, each row tagged with its
+        generation seq (``gen_seq``, the tombstone clock) and id (``gen``,
+        whose doc set its ordinals index). A missing segments dir raises:
+        it is the generation's only copy of the postings (a dir with no
+        part files is an empty generation)."""
         from ckanext_extractor_spark.operators.segments import read_segments
 
-        dfs = []
-        for g in self._gens:
-            p = self._gen_segments_path(g)
-            if not self.fs.exists(p) or not self._has_part_files(p):
-                continue
-            df = read_segments(self.spark, p, terms, self.n_buckets)
-            dfs.append(
-                df.withColumn("gen_seq", F.lit(int(g["seq"])))
-                .withColumn("gen", F.lit(g["gen"]))
+        dfs = [
+            read_segments(
+                self.spark, self._gen_segments_path(g), terms, self.n_buckets
             )
-        if not dfs:
+            .withColumn("gen_seq", F.lit(int(g["seq"])))
+            .withColumn("gen", F.lit(g["gen"]))
+            for g in (self._gens if gens is None else gens)
+            if self._gen_table(g, self._gen_segments_path(g))
+        ]
+        return reduce(DataFrame.unionByName, dfs) if dfs else None
+
+    def _gen_table(self, g: dict, path: str) -> bool:
+        """True when generation ``g``'s table at ``path`` has part files
+        (none: an empty generation); raises when the dir is missing."""
+        if not self.fs.exists(path):
+            raise FileNotFoundError(
+                f"generation {g['gen']} of index {self.root} has no table "
+                f"at {path}; the index is incomplete"
+            )
+        return self._has_part_files(path)
+
+    def postings_frame(
+        self,
+        terms: list[str] | None = None,
+        with_positions: bool = False,
+        gens: list[dict] | None = None,
+    ) -> DataFrame | None:
+        """Live postings ``(term, doc_id, tf, doc_len[, positions])``
+        decoded from the segments of ``gens`` (default: all), restricted
+        to ``terms`` (bucket-pruned) when given: one
+        ``wand.decode_segments`` plan, tombstones routed as on the
+        distributed paths; ``positions`` are sorted in-doc positions.
+        None when no generation holds a segment row."""
+        from ckanext_extractor_spark.operators.wand import decode_segments
+
+        if terms is not None and not terms:
             return None
-        out = dfs[0]
-        for d in dfs[1:]:
-            out = out.unionByName(d)
-        return out
+        seg = self._segments_union(
+            None if terms is None else list(dict.fromkeys(terms)), gens
+        )
+        if seg is None:
+            return None
+        dead_pairs, dead_df = self._dead_for_distributed()
+        rows = decode_segments(
+            seg, self._gen_docs_broadcast(), None, dead_pairs, dead_df,
+            with_positions,
+        )
+        return rows.select(
+            "term", "doc_id", "tf", "doc_len",
+            *(["positions"] if with_positions else []),
+        )
 
     def warm(self, max_cache_bytes: int | None = None) -> "ExtractorEngine":
         """Enable low-latency serving — the analog of Solr's filter/document
@@ -2846,29 +2847,21 @@ class ExtractorEngine:
             self._raw_budget = preload_cap
             self._lazy_serve = True
         self._dead_docs()  # prime the tombstone map
-        # Slow-path warming (Solr firstSearcher analog, optimization
-        # r6): pre-build the oracle path's logical plans (parquet file
-        # listing + schema analysis, ~0.2 s driver work) and execute ONE
-        # zero-match query through the same physical shape so
-        # whole-stage codegen + AQE compile here instead of inside the
-        # first real query (~0.8 s measured). Nothing is cached but
-        # compiled code and plan objects — a real query still computes
-        # entirely from the parquet files (the warming terms match no
-        # document, and the result is discarded).
-        postings = self._live_postings()
-        dictionary = self._dictionary_df()
-        if postings is not None and dictionary is not None:
-            try:
-                wt = self._warming_terms()
-                if wt:
-                    st = self.corpus_stats()
-                    bm25_search(
-                        postings, dictionary, st["n_docs"], st["avgdl"],
-                        " ".join(wt), k=1, conjunctive=True,
-                        config=query_config_for(self.analyzer),
-                    ).collect()
-            except Exception:  # noqa: BLE001 — warming must never fail warm()
-                pass
+        # Slow-path warming (Solr firstSearcher analog): execute ONE
+        # query through the oracle path's physical shape — the decode
+        # plan over the two warming terms' segment rows, then the BM25
+        # aggregate — so whole-stage codegen, AQE and the Python decode
+        # worker start here instead of inside the first real slow query.
+        # Nothing is cached but compiled code; the result is discarded.
+        try:
+            wt = self._warming_terms()
+            if wt:
+                self._slow_search(
+                    " ".join(wt), 1, True, [], None, None,
+                    self.corpus_stats(),
+                )
+        except Exception:  # noqa: BLE001 — warming must never fail warm()
+            pass
         return self
 
     def _warming_terms(self) -> list[str]:
@@ -2912,8 +2905,6 @@ class ExtractorEngine:
         self._stats_cache = None
         self._dead_cache = None
         self._tomb_count = None
-        self._live_postings_cache = None
-        self._dictionary_cache = None
         self._query_cache.clear()
 
     # NOTE on Arrow batch size: 1024 (the session default) wins for the
@@ -6708,13 +6699,13 @@ class ExtractorEngine:
         noise). Returns [(term, fg_df, bg_df, score)] by score desc,
         term asc.
 
-        One distributed plan, k rows to the driver: live postings
-        column-pruned to (term, doc_id) -> semi-join the match kernel's
-        doc set -> per-term distinct count -> join the column-pruned
-        segment-metadata background aggregate -> scored TakeOrdered.
-        The foreground side scans the corpus postings' two columns once
-        (ES pays the same via shard term vectors and caps it with
-        sampling — narrow the query to narrow the cost)."""
+        One distributed plan, k rows to the driver: the positions-free
+        segment decode (:meth:`postings_frame`) as (term, doc_id) ->
+        semi-join the match kernel's doc set -> per-term distinct count
+        -> join the column-pruned segment-metadata background aggregate
+        -> scored TakeOrdered. The foreground side decodes every segment
+        row once (ES pays the same via shard term vectors and caps it
+        with sampling — narrow the query to narrow the cost)."""
         self._check_access("extractor_search")
         _require_query(query)
         _require_k(k)
@@ -6727,7 +6718,7 @@ class ExtractorEngine:
         per_doc = self._match_docs(query, conjunctive, min_match)
         if per_doc is None:
             return []
-        postings = self._live_postings()
+        postings = self.postings_frame()
         if postings is None:
             return []
         n_matched = per_doc.count()
@@ -7614,18 +7605,16 @@ class ExtractorEngine:
         )
 
     def _gc_staging(self) -> None:
-        """Drop staging dirs not referenced by any live generation."""
+        """Drop every tokenize checkpoint once a generation commits, and
+        the per-generation postings tables of an index written while it
+        kept two copies of the postings."""
         st_root = self._p("staging", "raw_postings")
-        if not self.fs.isdir(st_root):
-            return
-        live = {
-            os.path.basename(g["postings_rel"])
-            for g in self._gens
-            if g["postings_rel"].startswith("staging")
-        }
-        for d in self.fs.listdir(st_root):
-            if d not in live:
-                self.fs.rmtree(os.path.join(st_root, d))
+        if self.fs.isdir(st_root):
+            self.fs.rmtree(st_root)
+        for g in self._gens:
+            old = self._p("gens", g["gen"], "postings")
+            if self.fs.exists(old):
+                self.fs.rmtree(old)
 
     def _gc_orphan_gens(self) -> None:
         """Drop gens/ dirs not in the committed generation list (crashed

@@ -35,10 +35,12 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from ckanext_extractor_spark.operators.build import BM25_B, BM25_K1
 from ckanext_extractor_spark.operators.codec import (
     GenDocs,
+    _position_blobs,
     encode_posting_lists_grouped,
 )
 
@@ -117,6 +119,23 @@ def salted_postings_auto(
         )
         .drop("_salt_factor")
     )
+
+
+def with_position_blobs(postings: DataFrame) -> DataFrame:
+    """``postings`` with its ``positions`` arrays (sorted in-doc
+    positions, as a segment decode returns them) turned into the varbyte
+    gap blobs of ``POSTINGS_SCHEMA``, the form the encode kernel reads."""
+    schema = T.StructType([
+        T.StructField("positions", T.BinaryType()) if f.name == "positions"
+        else f
+        for f in postings.schema
+    ])
+
+    def blobs(batches):
+        for pdf in batches:
+            yield pdf.assign(positions=_position_blobs(pdf["positions"]))
+
+    return postings.mapInPandas(blobs, schema)
 
 
 def encode_segments(
@@ -450,19 +469,33 @@ def read_segments(spark, path: str, terms: list[str] | None = None,
                   n_buckets: int = 64) -> DataFrame:
     """Read back, pruning to the buckets of `terms` when given.
 
-    The bucket filter is a partition-pruning predicate (term_bucket is a
-    Hive-style partition column), so only the relevant directories are
-    listed and scanned; the residual term IN filter prunes row groups via
-    parquet min/max on `term`.
+    Only the ``term_bucket=<b>`` directories of the terms' buckets are
+    read, as explicit paths under ``basePath`` with the schema given: the
+    other buckets are never listed and no footer is read for schema
+    inference. A bucket with no directory holds none of the terms. The
+    residual term IN filter prunes row groups via parquet min/max on
+    `term`.
     """
-    df = spark.read.parquet(path)
-    if terms:
-        hashes = _xxhash64_strs(list(terms))
-        buckets = sorted({hashes[t] % n_buckets for t in terms})
-        df = df.where(F.col("term_bucket").isin(buckets)).where(
-            F.col("term").isin(terms)
+    reader = spark.read.schema(SEGMENT_SCHEMA)
+    if not terms:
+        return reader.parquet(path)
+    from ckanext_extractor_spark.fsio import FsIO
+
+    fs = FsIO(spark, path)
+    hashes = _xxhash64_strs(list(terms))
+    dirs = [
+        d for d in (
+            f"{path.rstrip('/')}/term_bucket={b}"
+            for b in sorted({hashes[t] % n_buckets for t in terms})
         )
-    return df
+        if fs.exists(d)
+    ]
+    if not dirs:
+        return spark.createDataFrame([], SEGMENT_SCHEMA)
+    return (
+        reader.option("basePath", path).parquet(*dirs)
+        .where(F.col("term").isin(terms))
+    )
 
 
 _XXHASH_CACHE: dict[str, int] = {}

@@ -764,7 +764,7 @@ def drop_killed(rows: DataFrame, kills: DataFrame) -> DataFrame:
 def decode_segments(
     segments: DataFrame,
     docs_bc,
-    slot_of: dict[str, int],
+    slot_of: "dict[str, int] | None",
     dead_pairs: dict | None = None,
     dead_df: "DataFrame | None" = None,
     with_positions: bool = False,
@@ -772,7 +772,9 @@ def decode_segments(
     """The one cluster-side segment decode: live postings of the segment
     rows whose term is in ``slot_of``, as rows ``(doc_id, slot, tf,
     doc_len, gen_seq[, positions])`` with ``slot = slot_of[term]``; one
-    ``decode_posting_list`` call per segment row. ``docs_bc`` broadcasts
+    ``decode_posting_list`` call per segment row. With ``slot_of=None``
+    every row decodes and carries its ``term`` in place of ``slot`` (no
+    term map ships in the closure). ``docs_bc`` broadcasts
     ``{generation id: GenDocs}``, through which a row's ordinals resolve
     by its ``gen`` column; ``gen_seq`` is the tombstone clock (0 when
     absent). Tombstones come as ``ExtractorEngine._dead_for_distributed``
@@ -781,6 +783,11 @@ def decode_segments(
     (:func:`drop_killed`), so a bulk-delete backlog never serializes
     into every task."""
     import pandas as pd
+
+    key, key_type, key_sql = (
+        ("term", object, "string") if slot_of is None
+        else ("slot", np.int32, "int")
+    )
 
     def decode_part(batches):
         dead = DeadDocs(dead_pairs) if dead_pairs else None
@@ -791,7 +798,7 @@ def decode_segments(
             for term, blob, gen, gseq in zip(
                 pdf["term"], pdf["blob"], pdf["gen"], gseqs
             ):
-                slot = slot_of.get(term)
+                slot = term if slot_of is None else slot_of.get(term)
                 if slot is None:
                     continue
                 cols = decode_posting_list(
@@ -810,7 +817,7 @@ def decode_segments(
             lens = [len(cols[0]) for cols in decoded]
             out = {
                 "doc_id": np.concatenate([cols[0] for cols in decoded]),
-                "slot": np.repeat(np.asarray(slots, dtype=np.int32), lens),
+                key: np.repeat(np.asarray(slots, dtype=key_type), lens),
                 "tf": np.concatenate([cols[1] for cols in decoded]),
                 "doc_len": np.concatenate([cols[2] for cols in decoded]),
                 "gen_seq": np.repeat(np.asarray(seqs, dtype=np.int64), lens),
@@ -821,7 +828,7 @@ def decode_segments(
                 )
             yield pd.DataFrame(out)
 
-    schema = "doc_id long, slot int, tf long, doc_len long, gen_seq long"
+    schema = f"doc_id long, {key} {key_sql}, tf long, doc_len long, gen_seq long"
     if with_positions:
         schema += ", positions array<long>"
     rows = segments.mapInPandas(decode_part, schema)

@@ -57,6 +57,8 @@ def test_resumed_build_sizes_encode_from_staged_rows(
     engA = ExtractorEngine(
         spark, str(tmp_path / "A"), n_buckets=8, salt_threshold=50
     )
+    # keep A's tokenize checkpoint past its commit, to stage it on B
+    monkeypatch.setattr(engA, "_gc_staging", lambda: None)
     engA.extract(spark.createDataFrame(pdf), build_id="bres")
     staged = engA._p("staging", "raw_postings", "bres")
     want = (

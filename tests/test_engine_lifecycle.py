@@ -198,6 +198,8 @@ def test_resume_identical_segments(spark, tmp_path, base_pdf):
     rootB = str(tmp_path / "idxB")
     engA = ExtractorEngine(spark, rootA, n_buckets=8, salt_threshold=50)
     engB = ExtractorEngine(spark, rootB, n_buckets=8, salt_threshold=50)
+    # keep A's tokenize checkpoint past its commit, to stage it on B
+    engA._gc_staging = lambda: None
     repA = engA.extract(corpus, build_id="bfixed")
     assert not repA.resumed
 

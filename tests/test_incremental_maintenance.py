@@ -373,6 +373,9 @@ def test_older_segment_format_needs_compaction(spark, tmp_path, base_pdf):
 
     root = str(tmp_path / "legacy")
     eng = ExtractorEngine(spark, root, n_buckets=8, salt_threshold=50)
+    # the older format kept each generation's tokenize output as its
+    # postings table, named in its meta entry
+    eng._gc_staging = lambda: None
     eng.extract(make_corpus(spark, base_pdf.head(40)), build_id="l1")
     eng.extract(make_corpus(spark, base_pdf), build_id="l2")
     want = eng.search("data value", k=10, mode="slow")
@@ -382,6 +385,8 @@ def test_older_segment_format_needs_compaction(spark, tmp_path, base_pdf):
     with open(meta_path) as f:
         meta = json.load(f)
     assert meta.pop("segment_format") == 2
+    for g in meta["generations"]:
+        g["postings_rel"] = os.path.join("staging", "raw_postings", g["gen"])
     with open(meta_path, "w") as f:
         json.dump(meta, f)
     for g in meta["generations"]:

@@ -142,13 +142,14 @@ def test_restored_snapshot_keeps_generation_postings(spark, tmp_path):
 
 
 def test_missing_generation_postings_raise(spark, tmp_path):
-    """A committed generation whose postings dir is gone is a damaged
-    index: the slow path and compaction refuse it instead of reading the
-    generation as empty (which would drop its docs)."""
+    """A committed generation whose segments dir (its only copy of the
+    postings) is gone is a damaged index: the slow path and compaction
+    refuse it instead of reading the generation as empty (which would
+    drop its docs)."""
     import shutil
 
     eng = _two_generations(spark, str(tmp_path / "src"))
-    shutil.rmtree(eng._gen_postings_path(eng._gens[0]))
+    shutil.rmtree(eng._gen_segments_path(eng._gens[0]))
     eng.cool()
     with pytest.raises(FileNotFoundError):
         eng.search("alpha", k=10, mode="slow")

@@ -41,8 +41,9 @@ def main() -> None:
         corpus = corpus_df(spark, 300)
         eng = ExtractorEngine(spark, root, n_buckets=8, salt_threshold=100)
         eng.extract(corpus, build_id="plans")
-        postings = eng._live_postings()
-        dictionary = eng._dictionary_df()
+        # the slow path's input: the query terms' decoded live postings
+        postings = eng.postings_frame(["data", "value"])
+        dictionary = build_dictionary(postings, 8)
         st = eng.corpus_stats()
 
         sections.append(
@@ -68,10 +69,12 @@ def main() -> None:
         )
         sections.append(
             (
-                "BM25 slow path (term IN -> broadcast dict join -> agg -> top-k)",
-                "Expect: PushedFilters In(term,..) at the postings scan, "
-                "BroadcastHashJoin for the dictionary, TakeOrderedAndProject "
-                "for ORDER BY score DESC LIMIT k.",
+                "BM25 slow path (segment decode -> broadcast dict join -> "
+                "agg -> top-k)",
+                "Expect: PushedFilters In(term,..) at the segments scan, "
+                "MapInPandas (the decode), BroadcastHashJoin for the "
+                "dictionary, TakeOrderedAndProject for ORDER BY score DESC "
+                "LIMIT k.",
                 plan_of(
                     bm25_search(
                         postings, dictionary, st["n_docs"], st["avgdl"],
@@ -83,8 +86,9 @@ def main() -> None:
         sections.append(
             (
                 "Bucket-pruned segment read for a 2-term query",
-                "Expect: PartitionFilters on term_bucket (directory pruning) "
-                "+ PushedFilters In(term,..) (row-group pruning).",
+                "Expect: only the query terms' term_bucket dirs in the scan's "
+                "Location (directory pruning) + PushedFilters In(term,..) "
+                "(row-group pruning).",
                 plan_of(
                     read_segments(
                         spark,
