@@ -7,8 +7,12 @@ Reference API mapping (logic/action.py, paster.py):
     extractor_delete(id)         -> Engine.delete(doc_ids)
     package_search(q=...)        -> Engine.search(query, k=...)
 
-Index layout under ``index_root`` (all plain Parquet; an Iceberg catalog
-slot-in would change only the read/write format strings):
+Index layout under ``index_root``. Every table is Parquet; each one kept
+after a commit is written under ``fsio.PARQUET_WRITE_OPTIONS`` (zstd
+pages, no statistics on the segments' ``blob``), and the staging
+checkpoint under Spark's default codec. Parquet records the codec per
+file, so tables written under another codec still read. An Iceberg
+catalog slot-in would change only the read/write format strings:
     staging/raw_postings/<build_id>/   tokenize checkpoint (resume point),
                                        dropped once the generation commits
     gens/<gen_id>/segments/            encoded blobs, partitioned term_bucket;
@@ -75,7 +79,7 @@ from ckanext_extractor_spark.analysis.tokenizer import (
     analyze_query,
     query_config_for,
 )
-from ckanext_extractor_spark.fsio import FsIO
+from ckanext_extractor_spark.fsio import FsIO, write_table
 from ckanext_extractor_spark.manifest import (
     STATUS_IGNORED,
     STATUS_NEW,
@@ -101,6 +105,7 @@ from ckanext_extractor_spark.operators.segments import (
     encode_segments,
     salted_postings_auto,
     with_position_blobs,
+    write_segments,
 )
 from ckanext_extractor_spark.operators.codec import GenDocs
 from ckanext_extractor_spark.operators.wand import (
@@ -829,7 +834,7 @@ class ExtractorEngine:
                         "doc_id", F.lit(next_seq).cast("long").alias("seq")
                     )
                 )
-                tombs.write.mode("append").parquet(self._p("tombstones"))
+                write_table(tombs, self._p("tombstones"), mode="append")
                 self._dead_cache = None
                 self._tomb_count = None
 
@@ -885,9 +890,7 @@ class ExtractorEngine:
             # generation doc set (ordinals, norms, compaction accounting)
             # + lineage append, straight from the staging marker scan
             if n_changed:
-                doc_lens.write.mode("overwrite").parquet(
-                    self._p("gens", build_id, "docs")
-                )
+                write_table(doc_lens, self._p("gens", build_id, "docs"))
             append_lineage(lineage, self.root)
 
         def t_doc_stats():
@@ -990,12 +993,7 @@ class ExtractorEngine:
                 batch_store = prev_store.join(
                     dropped_ids, "doc_id", "left_anti"
                 ).unionByName(batch_store, allowMissingColumns=True)
-            # fulltext compresses ~3-5x under zstd; the doc store is
-            # read only for show()/snippets() point lookups
-            _atomic_overwrite(
-                batch_store, self._p("doc_store"), spark,
-                compression="zstd",
-            )
+            _atomic_overwrite(batch_store, self._p("doc_store"), spark)
 
         mpath = self._p("doc_manifest")
         deferred: list = []
@@ -1780,9 +1778,11 @@ class ExtractorEngine:
         next_seq = self._seq + 1
         ids = [int(i) for i in doc_ids]
         ids_df = spark.createDataFrame([(i,) for i in ids], "doc_id long")
-        ids_df.select(
-            "doc_id", F.lit(next_seq).cast("long").alias("seq")
-        ).write.mode("append").parquet(self._p("tombstones"))
+        write_table(
+            ids_df.select("doc_id", F.lit(next_seq).cast("long").alias("seq")),
+            self._p("tombstones"),
+            mode="append",
+        )
         # doc_stats / corpus_stats shrink so N and avgdl stay exact
         ds = self._read_or_none("doc_stats")
         if ds is not None:
@@ -1802,8 +1802,7 @@ class ExtractorEngine:
         store = self._read_or_none("doc_store")
         if store is not None:
             st2 = store.join(F.broadcast(ids_df), "doc_id", "left_anti")
-            _atomic_overwrite(st2, self._p("doc_store"), spark,
-                              compression="zstd")
+            _atomic_overwrite(st2, self._p("doc_store"), spark)
         manifest = read_doc_manifest(spark, self.root)
         updated = manifest.withColumn(
             "status",
@@ -2213,9 +2212,12 @@ class ExtractorEngine:
             live = live.persist()
             try:
                 docs_path = self._p("gens", new_id, "docs")
-                live.groupBy("doc_id").agg(
-                    F.max("doc_len").alias("doc_len")
-                ).write.mode("overwrite").parquet(docs_path)
+                write_table(
+                    live.groupBy("doc_id").agg(
+                        F.max("doc_len").alias("doc_len")
+                    ),
+                    docs_path,
+                )
                 docs = self._read_gen_docs(docs_path)
                 if docs.doc_ids.size:
                     self._encode_and_write_segments(
@@ -2597,14 +2599,18 @@ class ExtractorEngine:
             ])
             if postings is None:
                 return []
-            rows = bm25_search_synonyms(
-                postings,
-                build_dictionary(postings, self.n_buckets),
-                st["n_docs"], st["avgdl"], query, synonyms,
-                k=k, conjunctive=conjunctive,
-                phrase_rows=phrase_rows,
-                config=qconf,
-            ).collect()
+            postings = postings.persist()  # decoded once, see _slow_search
+            try:
+                rows = bm25_search_synonyms(
+                    postings,
+                    build_dictionary(postings, self.n_buckets),
+                    st["n_docs"], st["avgdl"], query, synonyms,
+                    k=k, conjunctive=conjunctive,
+                    phrase_rows=phrase_rows,
+                    config=qconf,
+                ).collect()
+            finally:
+                postings.unpersist()
             return [(r["doc_id"], r["score"]) for r in rows]
         kernel = mode in ("auto", "wand", "exact", "maxscore")
         fq_rows: "list | None" = None
@@ -2731,20 +2737,25 @@ class ExtractorEngine:
         """The DataFrame oracle: ``bm25_search`` over the decoded live
         postings of the query's and the excluded terms only, with the
         dictionary (a term's df = its live posting count) built over the
-        same frame."""
+        same frame. The frame is persisted for this one query, so the
+        match branch and the dictionary share one decode."""
         qconf = query_config_for(self.analyzer)
         terms = list(dict.fromkeys(analyze_query(query, config=qconf)))
         postings = self.postings_frame(terms + ex_terms) if terms else None
         if postings is None:
             return []
-        rows = bm25_search(
-            postings, build_dictionary(postings, self.n_buckets),
-            st["n_docs"], st["avgdl"], query,
-            k=k, conjunctive=conjunctive, config=qconf,
-            exclude_terms=ex_terms or None,
-            min_match=min_match,
-            include_df=include_df,
-        ).collect()
+        postings = postings.persist()
+        try:
+            rows = bm25_search(
+                postings, build_dictionary(postings, self.n_buckets),
+                st["n_docs"], st["avgdl"], query,
+                k=k, conjunctive=conjunctive, config=qconf,
+                exclude_terms=ex_terms or None,
+                min_match=min_match,
+                include_df=include_df,
+            ).collect()
+        finally:
+            postings.unpersist()
         return [(r["doc_id"], r["score"]) for r in rows]
 
     # -- serving caches ------------------------------------------------------
@@ -2950,7 +2961,7 @@ class ExtractorEngine:
         )
         try:
             _atomic_overwrite(
-                segments, path, spark=self.spark, partition_by="term_bucket"
+                segments, path, spark=self.spark, write=write_segments
             )
         except Exception as e:  # noqa: BLE001 - routed on message below
             if not (tried_hash and "term-hash collision" in str(e)):
@@ -2964,7 +2975,7 @@ class ExtractorEngine:
                 hash_terms=False,
             )
             _atomic_overwrite(
-                segments, path, spark=self.spark, partition_by="term_bucket"
+                segments, path, spark=self.spark, write=write_segments
             )
 
     #: canonical segment-row columns (what the Spark union path collects)
@@ -7784,24 +7795,19 @@ def _atomic_overwrite_staged(
     df: DataFrame,
     path: str,
     spark: SparkSession,
-    partition_by: str | None = None,
-    fs: FsIO | None = None,
-    compression: str | None = None,
+    write: Callable[[DataFrame, str], None] = write_table,
 ):
     """Write ``df`` to a temp dir NOW; return a callable that atomically
     swaps it into place. Splitting write from publish lets the build's
     overlapped stage group (guide §2.6) run the heavy write concurrently
     with sibling jobs whose lazy plans still read the OLD table, and
     perform the (millisecond) swap only after every sibling has joined —
-    publish order stays exactly the sequential build's."""
-    fs = fs or FsIO(spark, path)
+    publish order stays exactly the sequential build's. ``write`` (default
+    :func:`~ckanext_extractor_spark.fsio.write_table`) writes the temp
+    dir."""
+    fs = FsIO(spark, path)
     tmp = path + ".tmp-" + uuid.uuid4().hex[:8]
-    w = df.write.mode("overwrite")
-    if partition_by:
-        w = w.partitionBy(partition_by)
-    if compression:
-        w = w.option("compression", compression)
-    w.parquet(tmp)
+    write(df, tmp)
 
     def publish() -> None:
         old = path + ".old-" + uuid.uuid4().hex[:8]
@@ -7819,15 +7825,10 @@ def _atomic_overwrite(
     df: DataFrame,
     path: str,
     spark: SparkSession,
-    partition_by: str | None = None,
-    fs: FsIO | None = None,
-    compression: str | None = None,
+    write: Callable[[DataFrame, str], None] = write_table,
 ) -> None:
     """Write to a temp dir, then atomically swap into place (hard part #3:
     exactly-once publish — readers never observe a half-written table).
     Rename-based through fsio (POSIX/HDFS atomic; see the module
     docstring's filesystem note for object stores)."""
-    _atomic_overwrite_staged(
-        df, path, spark, partition_by=partition_by, fs=fs,
-        compression=compression,
-    )()
+    _atomic_overwrite_staged(df, path, spark, write=write)()

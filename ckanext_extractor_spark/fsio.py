@@ -48,6 +48,29 @@ def _lp(path: str) -> str:
     return path
 
 
+#: The Parquet write policy of every table the index keeps after a commit,
+#: passed on the writer (the caller's session conf is left alone). zstd
+#: pages: snappy does no entropy coding, so hex digests and term strings
+#: stayed near raw size. No statistics on the segments' ``blob`` column:
+#: min/max of a blob prunes nothing and filled most of each footer.
+#: ``term`` keeps its statistics for row-group pruning. Parquet records
+#: the codec per file, so tables written under another policy still read.
+PARQUET_WRITE_OPTIONS = {
+    "compression": "zstd",
+    "parquet.column.statistics.enabled#blob": "false",
+}
+
+
+def write_table(
+    df, path: str, mode: str = "overwrite", partition_by: str | None = None
+) -> None:
+    """Write ``df`` as a Parquet table under :data:`PARQUET_WRITE_OPTIONS`."""
+    w = df.write.mode(mode).options(**PARQUET_WRITE_OPTIONS)
+    if partition_by:
+        w = w.partitionBy(partition_by)
+    w.parquet(path)
+
+
 class FsIO:
     """Minimal filesystem ops bound to one root's scheme."""
 

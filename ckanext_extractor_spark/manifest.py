@@ -28,6 +28,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ckanext_extractor_spark.fsio import write_table
+
 STATUS_NEW = "new"
 STATUS_UPDATE = "update"
 STATUS_UNCHANGED = "unchanged"
@@ -59,11 +61,11 @@ def read_doc_manifest(spark: SparkSession, path: str) -> DataFrame:
 
 
 def write_doc_manifest(manifest: DataFrame, path: str) -> None:
-    manifest.write.mode("overwrite").parquet(os.path.join(path, "doc_manifest"))
+    write_table(manifest, os.path.join(path, "doc_manifest"))
 
 
 def append_lineage(lineage: DataFrame, path: str) -> None:
-    lineage.write.mode("append").parquet(os.path.join(path, "lineage"))
+    write_table(lineage, os.path.join(path, "lineage"), mode="append")
 
 
 def read_lineage(spark: SparkSession, path: str) -> DataFrame:

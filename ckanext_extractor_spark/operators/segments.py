@@ -25,8 +25,10 @@ Output table `segments`:
      block_offs array<long>)
 block_last_doc holds doc ordinals; all three block arrays are empty for a
 list of at most one block (codec.py).
-written as Parquet partitioned by term_bucket -> query-time partition
-pruning reads only the buckets of the query's terms.
+written by `write_segments` as Parquet partitioned by term_bucket ->
+query-time partition pruning reads only the buckets of the query's terms.
+Pages are zstd and `blob` carries no column statistics (fsio's
+PARQUET_WRITE_OPTIONS); `term` keeps min/max for row-group pruning.
 """
 
 from __future__ import annotations
@@ -37,6 +39,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ckanext_extractor_spark.fsio import write_table
 from ckanext_extractor_spark.operators.build import BM25_B, BM25_K1
 from ckanext_extractor_spark.operators.codec import (
     GenDocs,
@@ -449,20 +452,16 @@ def encode_segments(
 
 
 def write_segments(segments: DataFrame, path: str, mode: str = "overwrite") -> None:
-    """Persist partitioned by term_bucket (query-time partition pruning).
+    """Persist `encode_segments` output partitioned by term_bucket
+    (query-time partition pruning), under the index's Parquet write policy.
 
-    The encoded rows are tiny relative to postings (compressed blobs), so
-    an extra exchange keyed by term_bucket is cheap — it collapses the
-    [encode_tasks x buckets] small-file explosion into one sorted file per
-    bucket (driver-side file commits were a measurable serial cost), and
-    term-sorted row groups give min/max pruning on `term` at read."""
-    (
-        segments.repartition("term_bucket")
-        .sortWithinPartitions("term", "salt_id")
-        .write.mode(mode)
-        .partitionBy("term_bucket")
-        .parquet(path)
-    )
+    The engine's only segment writer. It writes straight from the encode
+    tasks, with no second exchange: the encode shuffle is keyed by
+    (term_bucket, salt_id), so a bucket gets one file per encode task that
+    holds any of its (bucket, salt) keys. Rows leave the kernel
+    term-lexical within each task, so min/max on `term` prunes row groups
+    at read."""
+    write_table(segments, path, mode=mode, partition_by="term_bucket")
 
 
 def read_segments(spark, path: str, terms: list[str] | None = None,

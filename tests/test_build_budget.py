@@ -106,3 +106,24 @@ def test_blob_bytes_per_posting(spark, tmp_path):
     assert blob_bytes / n_postings <= BLOB_BYTES_PER_POSTING_MAX, (
         blob_bytes / n_postings
     )
+
+
+# Upper bound on the whole fixture index's bytes per input content byte,
+# every table and footer included. zstd pages and blob columns without
+# min/max statistics give ~1.23; snappy pages with blob statistics ~1.49.
+INDEX_BYTES_PER_INPUT_BYTE_MAX = 1.30
+
+
+def test_index_bytes_per_input_byte(spark, tmp_path):
+    pdf = corpus_pdf(120)
+    eng = ExtractorEngine(
+        spark, str(tmp_path / "ibb"), n_buckets=8, salt_threshold=50
+    )
+    eng.extract(spark.createDataFrame(pdf), build_id="ibb1")
+    index_bytes = sum(
+        os.path.getsize(os.path.join(d, f))
+        for d, _, files in os.walk(eng.root)
+        for f in files
+    )
+    ratio = index_bytes / int(pdf["content"].str.len().sum())
+    assert ratio <= INDEX_BYTES_PER_INPUT_BYTE_MAX, ratio

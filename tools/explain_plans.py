@@ -41,8 +41,9 @@ def main() -> None:
         corpus = corpus_df(spark, 300)
         eng = ExtractorEngine(spark, root, n_buckets=8, salt_threshold=100)
         eng.extract(corpus, build_id="plans")
-        # the slow path's input: the query terms' decoded live postings
-        postings = eng.postings_frame(["data", "value"])
+        # the slow path's input: the query terms' decoded live postings,
+        # persisted for the query as _slow_search does
+        postings = eng.postings_frame(["data", "value"]).persist()
         dictionary = build_dictionary(postings, 8)
         st = eng.corpus_stats()
 
@@ -72,9 +73,10 @@ def main() -> None:
                 "BM25 slow path (segment decode -> broadcast dict join -> "
                 "agg -> top-k)",
                 "Expect: PushedFilters In(term,..) at the segments scan, "
-                "MapInPandas (the decode), BroadcastHashJoin for the "
-                "dictionary, TakeOrderedAndProject for ORDER BY score DESC "
-                "LIMIT k.",
+                "MapInPandas (the decode) once, under the InMemoryRelation "
+                "that the match branch and the dictionary both scan, "
+                "BroadcastHashJoin for the dictionary, "
+                "TakeOrderedAndProject for ORDER BY score DESC LIMIT k.",
                 plan_of(
                     bm25_search(
                         postings, dictionary, st["n_docs"], st["avgdl"],

@@ -18,6 +18,7 @@ sys.path.insert(0, "/root/repo")
 from pyspark.sql import functions as F
 
 from ckanext_extractor_spark.corpus import corpus_df
+from ckanext_extractor_spark.fsio import write_table
 from ckanext_extractor_spark.manifest import (
     compute_statuses,
     empty_doc_manifest,
@@ -78,7 +79,7 @@ def main() -> None:
         raw = spark.read.parquet(staging)
         postings = raw.where(F.col("term").isNotNull())
         lineage = lineage_from_raw(raw, "prof")
-        lineage.write.mode("append").parquet(os.path.join(root, "lineage"))
+        write_table(lineage, os.path.join(root, "lineage"), mode="append")
         t0 = tick("lineage_append", t0)
 
         dictionary = build_dictionary(postings, 32)
@@ -87,7 +88,7 @@ def main() -> None:
         t0 = tick("dictionary", t0)
 
         doc_stats = build_doc_stats(meta_slim, postings)
-        doc_stats.write.mode("overwrite").parquet(os.path.join(root, "ds"))
+        write_table(doc_stats, os.path.join(root, "ds"))
         ds = spark.read.parquet(os.path.join(root, "ds"))
         build_corpus_stats(ds).collect()
         t0 = tick("doc_stats+corpus_stats", t0)
@@ -103,7 +104,7 @@ def main() -> None:
             "doc_id", "content_sha256", "lang",
             F.lit("indexed").alias("status"), F.lit("prof").alias("build_id"),
         )
-        manifest.write.mode("overwrite").parquet(os.path.join(root, "manifest"))
+        write_table(manifest, os.path.join(root, "manifest"))
         t0 = tick("manifest", t0)
     finally:
         shutil.rmtree(root, ignore_errors=True)
