@@ -53,7 +53,8 @@ import gc
 import re
 import unicodedata
 from contextlib import contextmanager
-from dataclasses import dataclass, field
+from dataclasses import dataclass, field, replace
+from functools import cached_property
 from itertools import chain
 
 import numpy as np
@@ -122,6 +123,14 @@ class AnalyzerConfig:
     @property
     def catenate(self) -> bool:
         return self.mode == "index"
+
+    @cached_property
+    def _query_config(self) -> "AnalyzerConfig":
+        # see query_config_for; cached in the instance __dict__, which
+        # a frozen dataclass still has
+        if self.mode == "simple":
+            return self
+        return replace(self, mode="query")
 
 
 INDEX_CONFIG = AnalyzerConfig(mode="index")
@@ -408,12 +417,8 @@ def query_config_for(index_config: AnalyzerConfig) -> AnalyzerConfig:
     """The query-side analyzer matching an index contract: catenation off
     (schema.xml:59-66), every other stage — stopping, folding, stemming,
     simple-mode — identical, or query terms would miss the index's
-    vocabulary."""
-    if index_config.mode == "simple":
-        return index_config
-    from dataclasses import replace
-
-    return replace(index_config, mode="query")
+    vocabulary. Memoized: one query config per index config."""
+    return index_config._query_config
 
 
 def analyze_query(query: str, lang: str | None = None,

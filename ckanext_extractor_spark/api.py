@@ -2458,21 +2458,22 @@ class ExtractorEngine:
         # that hashes equal across types (True == 1, 2.0 == 2) can't hit
         # a validated entry; unhashable/malformed arguments fall through
         # to the validators, which raise the same errors as before.
+        ck = None
         if synonyms is None and (
             fq is None or (isinstance(fq, dict) and fq)
         ):
             # (a falsy non-None fq — {} or [] — must NOT alias the
             # fq=None cache key; it falls through to the validator)
             try:
-                _fast_ck = _query_cache_key(
+                ck = _query_cache_key(
                     query, k, conjunctive, mode, exclude, min_match, fq,
                     start,
                 )
-                hit = self._query_cache.get(_fast_ck)
+                hit = self._query_cache.get(ck)
             except (TypeError, AttributeError):
-                hit = None
+                ck = hit = None
             if hit is not None:
-                self._query_cache.move_to_end(_fast_ck)
+                self._query_cache.move_to_end(ck)
                 return list(hit)
         self._require_segment_format()
         _require_query(query)
@@ -2524,18 +2525,8 @@ class ExtractorEngine:
             raise ValidationError(
                 f"start must be a non-negative integer, got {start!r}"
             )
-        ck = (
-            _query_cache_key(
-                query, k, conjunctive, mode, exclude, min_match, fq, start
-            )
-            if synonyms is None
-            else None
-        )
-        if ck is not None:
-            hit = self._query_cache.get(ck)
-            if hit is not None:
-                self._query_cache.move_to_end(ck)
-                return list(hit)
+        # arguments that pass validation always build the key above, and
+        # its lookup missed: ck is None only for synonym queries
         out = self._search_uncached(query, k + start, conjunctive, mode,
                                     synonyms, exclude, min_match, fq)
         if start:
@@ -7748,22 +7739,24 @@ class ExtractorEngine:
             _, evicted = self._rows_cache.popitem(last=False)
             self._raw_bytes -= self._raw_rows_bytes(evicted)
 
-    def _lru_put(self, term: str, tp) -> None:
-        size = (
+    @staticmethod
+    def _decoded_bytes_of(tp) -> int:
+        # the arrays, 8 B per posting for the BM25 impacts memo, slop
+        return (
             tp.doc_ids.nbytes + tp.tfs.nbytes + tp.doc_lens.nbytes
-            + tp.block_last_doc.nbytes + tp.block_max_tfn.nbytes + 128
+            + tp.block_last_doc.nbytes + tp.block_max_tfn.nbytes
+            + 8 * tp.doc_ids.size + 128
         )
+
+    def _lru_put(self, term: str, tp) -> None:
         self._decoded_cache[term] = tp
-        self._decoded_bytes += size
+        self._decoded_bytes += self._decoded_bytes_of(tp)
         self._decoded_cache.move_to_end(term)
         while self._decoded_bytes > self._decoded_budget and len(
             self._decoded_cache
         ) > 1:
             _, old = self._decoded_cache.popitem(last=False)
-            self._decoded_bytes -= (
-                old.doc_ids.nbytes + old.tfs.nbytes + old.doc_lens.nbytes
-                + old.block_last_doc.nbytes + old.block_max_tfn.nbytes + 128
-            )
+            self._decoded_bytes -= self._decoded_bytes_of(old)
 
 
 def _collect_gen_docs(df: DataFrame) -> GenDocs:

@@ -64,6 +64,7 @@ from ckanext_extractor_spark.operators.wand import (
     BM25_K1,
     TermPostings,
     _topk_select,
+    bm25_impacts,
 )
 
 
@@ -776,12 +777,7 @@ def eval_topk(
         hit[inb] = universe[idx[inb]] == tp.doc_ids[inb]
         uidx = idx[hit]
         mask[uidx] = True
-        tf = tp.tfs[hit].astype(np.float64)
-        dl = tp.doc_lens[hit].astype(np.float64)
-        score[uidx] = boost * (
-            tp.idf * tf * (k1 + 1.0)
-            / (tf + k1 * (1.0 - b + b * dl / avgdl))
-        )
+        score[uidx] = boost * bm25_impacts(tp, avgdl, k1, b)[hit]
         return mask, score
 
     def ev(n):

@@ -2,7 +2,9 @@
 rank-identical to the slow path (operators/query.py); ties by doc_id asc.
 
 Driver side, over decoded posting lists: ``exact_topk`` is a vectorized
-brute merge (sorted intersection for AND, unique + bincount for OR);
+brute merge (sorted intersection for AND, a run-merging stable argsort +
+bincount for OR) over each list's memoized BM25 contributions
+(:func:`bm25_impacts`);
 ``maxscore_topk``/``maxscore_topk_lazy`` are batch MaxScore, probing the
 lists that cannot reach the k-th score only at the candidates (the lazy
 form decodes only the blocks it probes); ``wand_topk`` routes AND to
@@ -18,7 +20,7 @@ one per-partition decode of segment rows into live postings, and
 from __future__ import annotations
 
 import heapq
-from dataclasses import dataclass
+from dataclasses import dataclass, field
 from itertools import repeat
 
 import numpy as np
@@ -82,6 +84,16 @@ def _row_gen_seq(row) -> int:
 
 @dataclass
 class TermPostings:
+    """One term's decoded live postings, doc_ids sorted asc.
+
+    ``impacts`` memoizes the list's per-posting BM25 contributions
+    (Anh & Moffat's impacts; Lucene's precomputed norms) as one tuple
+    ``((avgdl, k1, b), float64 array aligned with doc_ids)``, so a reader
+    can never pair one key with another key's array. It is filled at
+    decode and read through :func:`bm25_impacts`, which recomputes on a
+    key miss; the list edits below slice it (exclude/restrict) or drop
+    it (boost changes idf)."""
+
     term: str
     idf: float
     doc_ids: np.ndarray  # sorted asc
@@ -89,6 +101,7 @@ class TermPostings:
     doc_lens: np.ndarray
     block_last_doc: np.ndarray
     block_max_tfn: np.ndarray
+    impacts: "tuple | None" = field(default=None, repr=False, compare=False)
 
     @property
     def upper_bound(self) -> float:
@@ -137,9 +150,10 @@ def term_postings_from_rows(
     dead: "DeadDocs | None" = None,
 ) -> TermPostings:
     """Decode one term's segment rows (salt shards and/or generation
-    shards) into a merged TermPostings, dropping tombstoned postings.
-    Each row carries its generation's :class:`GenDocs` under ``"docs"``
-    (ordinals resolve through it). Pure driver-side numpy."""
+    shards) into a merged TermPostings, dropping tombstoned postings,
+    with its BM25 impacts memoized for ``avgdl``. Each row carries its
+    generation's :class:`GenDocs` under ``"docs"`` (ordinals resolve
+    through it). Pure driver-side numpy."""
     ids, tfs, dls = [], [], []
     for r in shard_rows:
         i, t, d = decode_posting_list(bytes(r["blob"]), r["docs"])
@@ -163,7 +177,9 @@ def term_postings_from_rows(
     starts = np.arange(0, df, BLOCK_SIZE)
     bl = doc_ids[np.minimum(starts + BLOCK_SIZE, df) - 1]
     bm = np.maximum.reduceat(tfn, starts) if df else tfn
-    return TermPostings(term, idf, doc_ids, tfv, dlv, bl, bm)
+    tp = TermPostings(term, idf, doc_ids, tfv, dlv, bl, bm)
+    bm25_impacts(tp, avgdl)
+    return tp
 
 
 class LazyTermPostings:
@@ -272,11 +288,9 @@ class LazyTermPostings:
             idxc = np.minimum(idx, ids.size - 1)
             hit = ids[idxc] == cand
             if hit.any():
-                tf = tfs[idxc[hit]].astype(np.float64)
-                dl = dls[idxc[hit]].astype(np.float64)
-                total[hit] += (
-                    self.idf * tf * (k1 + 1.0)
-                    / (tf + k1 * (1.0 - b + b * dl / self.avgdl))
+                total[hit] += _bm25(
+                    self.idf, tfs[idxc[hit]], dls[idxc[hit]], self.avgdl,
+                    k1, b,
                 )
         return total
 
@@ -310,7 +324,7 @@ def maxscore_topk_lazy(
     order = sorted(lists, key=lambda tp: -tp.upper_bound)
     ubs = np.array([tp.upper_bound for tp in order])
     first = order[0].materialize()
-    s0 = _scores(first, np.arange(len(first.doc_ids)), avgdl, k1, b)
+    s0 = bm25_impacts(first, avgdl, k1, b)
     if s0.size >= k:
         theta = float(np.partition(s0, s0.size - k)[s0.size - k])
     else:
@@ -338,11 +352,40 @@ def maxscore_topk_lazy(
     return _topk_select(cand, total, k)
 
 
+def _bm25(idf: float, tfs: np.ndarray, dls: np.ndarray, avgdl: float,
+          k1: float, b: float) -> np.ndarray:
+    """The one driver-side BM25 expression: per-posting contributions
+    for term frequencies ``tfs`` in documents of lengths ``dls``. Every
+    kernel's scores come from here, in this operand order, so all paths
+    agree to the last bit."""
+    tf = tfs.astype(np.float64)
+    dl = dls.astype(np.float64)
+    return idf * tf * (k1 + 1.0) / (tf + k1 * (1.0 - b + b * dl / avgdl))
+
+
+def bm25_impacts(tp: TermPostings, avgdl: float, k1: float = BM25_K1,
+                 b: float = BM25_B) -> np.ndarray:
+    """``tp``'s BM25 contribution per posting at ``(avgdl, k1, b)``,
+    memoized on ``tp.impacts``. A key miss (boosted or test-built lists,
+    another avgdl) computes the array with :func:`_bm25` and replaces
+    the memo, so a stale array is never served."""
+    key = (avgdl, k1, b)
+    memo = tp.impacts
+    if memo is None or memo[0] != key:
+        memo = (key, _bm25(tp.idf, tp.tfs, tp.doc_lens, avgdl, k1, b))
+        tp.impacts = memo
+    return memo[1]
+
+
 def _scores(tp: TermPostings, idx: np.ndarray, avgdl: float,
             k1: float, b: float) -> np.ndarray:
-    tf = tp.tfs[idx].astype(np.float64)
-    dl = tp.doc_lens[idx].astype(np.float64)
-    return tp.idf * tf * (k1 + 1.0) / (tf + k1 * (1.0 - b + b * dl / avgdl))
+    """``tp``'s BM25 contributions at posting positions ``idx``."""
+    return bm25_impacts(tp, avgdl, k1, b)[idx]
+
+
+def _sliced_impacts(tp: TermPostings, keep: np.ndarray) -> "tuple | None":
+    memo = tp.impacts
+    return None if memo is None else (memo[0], memo[1][keep])
 
 
 def exclude_docs(tp: TermPostings, ex_ids: "np.ndarray") -> TermPostings:
@@ -352,7 +395,7 @@ def exclude_docs(tp: TermPostings, ex_ids: "np.ndarray") -> TermPostings:
     unfiltered query (Lucene parity — a prohibited clause never changes
     scoring), and block maxima remain valid (possibly loose) upper
     bounds after row removal — WAND/MaxScore pruning only needs an
-    over-estimate."""
+    over-estimate. The impacts memo is sliced with the postings."""
     n = len(tp.doc_ids)
     if ex_ids.size == 0 or n == 0:
         return tp
@@ -366,6 +409,7 @@ def exclude_docs(tp: TermPostings, ex_ids: "np.ndarray") -> TermPostings:
     return TermPostings(
         tp.term, tp.idf, tp.doc_ids[keep], tp.tfs[keep],
         tp.doc_lens[keep], tp.block_last_doc, tp.block_max_tfn,
+        _sliced_impacts(tp, keep),
     )
 
 
@@ -377,7 +421,8 @@ def boost_postings(tp: TermPostings, boost: float) -> TermPostings:
     distance boost (FuzzyTermsEnum: 1 - edit/min(|term|, |query|)).
     block_max_tfn is tf-normalized (idf-free), so the block-max upper
     bound ``idf * (k1+1) * max_tfn`` stays exact under the scaled idf —
-    WAND/MaxScore pruning remains sound without touching the blocks."""
+    WAND/MaxScore pruning remains sound without touching the blocks.
+    The impacts memo is dropped: it was computed with the unscaled idf."""
     return TermPostings(
         tp.term, tp.idf * boost, tp.doc_ids, tp.tfs,
         tp.doc_lens, tp.block_last_doc, tp.block_max_tfn,
@@ -390,26 +435,22 @@ def restrict_docs(tp: TermPostings, allowed: "np.ndarray") -> TermPostings:
     Like :func:`exclude_docs`, idf and block-max arrays are KEPT: a
     filter clause never changes surviving docs' scores (idf stays the
     full-corpus value), and block maxima remain valid loose upper bounds
-    after row removal, so WAND/MaxScore pruning stays sound."""
+    after row removal, so WAND/MaxScore pruning stays sound. The
+    impacts memo is sliced with the postings."""
     n = len(tp.doc_ids)
     if n == 0:
         return tp
-    if allowed.size == 0:
-        e = np.empty(0, dtype=tp.doc_ids.dtype)
-        return TermPostings(
-            tp.term, tp.idf, e, e.astype(tp.tfs.dtype),
-            e.astype(tp.doc_lens.dtype), tp.block_last_doc,
-            tp.block_max_tfn,
-        )
-    idx = np.searchsorted(allowed, tp.doc_ids)
     keep = np.zeros(n, dtype=bool)
-    inb = idx < allowed.size
-    keep[inb] = allowed[idx[inb]] == tp.doc_ids[inb]
-    if keep.all():
-        return tp
+    if allowed.size:
+        idx = np.searchsorted(allowed, tp.doc_ids)
+        inb = idx < allowed.size
+        keep[inb] = allowed[idx[inb]] == tp.doc_ids[inb]
+        if keep.all():
+            return tp
     return TermPostings(
         tp.term, tp.idf, tp.doc_ids[keep], tp.tfs[keep],
         tp.doc_lens[keep], tp.block_last_doc, tp.block_max_tfn,
+        _sliced_impacts(tp, keep),
     )
 
 
@@ -424,6 +465,15 @@ def exact_topk(
     after: "tuple[float, int] | None" = None,
 ) -> list[tuple[int, float]]:
     """Vectorized brute-force merge; exact, the distributed kernel.
+    Every list scores from its memoized impacts (:func:`bm25_impacts`).
+
+    AND intersects progressively, smallest list first. OR merges the
+    lists, each already sorted, with one stable argsort of their
+    concatenation (timsort merges the presorted runs instead of sorting
+    from scratch) and sums each doc's contributions with ``np.bincount``
+    over the concatenation in ``term_lists`` order. Both paths add a
+    doc's contributions in ``term_lists`` order, so the scores do not
+    depend on the merge.
 
     ``min_match`` (Solr mm / Lucene minimumNumberShouldMatch): in the
     disjunctive path, keep only docs matching at least that many DISTINCT
@@ -471,10 +521,16 @@ def exact_topk(
     else:
         all_ids = np.concatenate([tp.doc_ids for tp in term_lists])
         all_scores = np.concatenate(
-            [_scores(tp, np.arange(len(tp.doc_ids)), avgdl, k1, b)
-             for tp in term_lists]
+            [bm25_impacts(tp, avgdl, k1, b) for tp in term_lists]
         )
-        docs, inv = np.unique(all_ids, return_inverse=True)
+        order = np.argsort(all_ids, kind="stable")
+        merged = all_ids[order]
+        new = np.empty(merged.size, dtype=bool)
+        new[:1] = True
+        np.not_equal(merged[1:], merged[:-1], out=new[1:])
+        docs = merged[new]
+        inv = np.empty(merged.size, dtype=np.intp)
+        inv[order] = np.cumsum(new) - 1
         total = np.bincount(inv, weights=all_scores)
         if min_match is not None and min_match > 1:
             # postings are per-(term, doc) unique, so the occurrence count
@@ -546,7 +602,7 @@ def maxscore_topk(
         return exact_topk(lists, k, avgdl, True, k1, b)
     order = sorted(lists, key=lambda tp: -tp.upper_bound)
     ubs = np.array([tp.upper_bound for tp in order])
-    s0 = _scores(order[0], np.arange(len(order[0].doc_ids)), avgdl, k1, b)
+    s0 = bm25_impacts(order[0], avgdl, k1, b)
     if s0.size >= k:
         theta = float(np.partition(s0, s0.size - k)[s0.size - k])
     else:
@@ -839,7 +895,7 @@ def _scored_rows(segments, docs_bc, terms_idf, avgdl, dead_pairs,
                  dead_df) -> DataFrame:
     """(doc_id, slot, gen_seq, term_score) of the :func:`decode_segments`
     rows of ``terms_idf``'s terms (slot = position in it): BM25 as one
-    Catalyst expression, in :func:`_scores`' operation order. It is
+    Catalyst expression, in :func:`_bm25`'s operation order. It is
     built from SQL text because every Column call is a Py4J round trip,
     and there are dozens of them in one BM25 tree."""
     rows = decode_segments(
