@@ -20,8 +20,11 @@ catalog slot-in would change only the read/write format strings:
     gens/<gen_id>/docs/                (doc_id, doc_len) of the generation's
                                        docs; postings store ordinals into
                                        its sorted doc ids
-    tombstones/                        (doc_id, seq): postings of doc in any
-                                       generation with gen_seq < seq are dead
+    tombstones/                        (doc_id, seq): the doc's postings in
+                                       every generation older than seq are
+                                       dead; rows above the committed seq
+                                       (a build that never committed) are
+                                       ignored, then dropped
     doc_stats/                         per-doc metadata + doc_len
     corpus_stats/                      singleton N/avgdl row
     doc_manifest/                      status machine state
@@ -32,10 +35,16 @@ catalog slot-in would change only the read/write format strings:
 LSM-style maintenance (SURVEY.md Q6/B2; Lucene-segment analog — the
 reference delegates this to Solr, tasks.py:110 / plugin.py:117-123):
 an incremental build tokenizes + encodes ONLY the changed docs into a new
-generation; updates/deletes append tombstones consulted at query time; a
-1-doc delete touches zero segment files. Compaction merges generations
-whose tombstone fraction crosses a threshold (or when generations pile
-up), bounding read amplification and the tombstone table.
+generation; updates/deletes append tombstones; a 1-doc delete touches
+zero segment files. Deletes resolve once per index state, like Lucene's
+per-segment liveDocs: from the tombstone table and the generation list
+the driver builds every generation's live mask over its doc ordinals
+(``codec.live_masks``; a doc lives only in the newest generation holding
+it, and only while no later tombstone names it), and every decode, on
+the driver or in a Spark task, drops dead postings through that mask.
+Compaction merges generations whose dead fraction crosses a threshold
+(or when generations pile up), bounding read amplification and the
+tombstone table.
 
 Lifecycle hooks re-express IExtractorPostprocessor
 (interfaces.py:25-82, called at tasks.py:80-81,103-104,112-113) and
@@ -107,12 +116,7 @@ from ckanext_extractor_spark.operators.segments import (
     with_position_blobs,
     write_segments,
 )
-from ckanext_extractor_spark.operators.codec import GenDocs
-from ckanext_extractor_spark.operators.wand import (
-    DeadDocs,
-    drop_killed,
-    tombstoned,
-)
+from ckanext_extractor_spark.operators.codec import GenDocs, live_masks
 
 #: on-disk segment format, recorded in index_meta.json: 2 = postings store
 #: doc ordinals and doc lengths live in ``gens/<g>/docs`` (codec.py). An
@@ -327,7 +331,6 @@ class BuildReport:
     stage_sec: dict[str, float] = field(default_factory=dict)  # telemetry
 
 
-TOMBSTONE_SCHEMA = "doc_id long, seq long"
 LOCK_STALE_SEC = 2 * 3600
 
 
@@ -341,22 +344,13 @@ class ExtractorEngine:
     # are preloaded only when their on-disk size fits RAW_PRELOAD_BYTES.
     DECODED_BUDGET_BYTES = 1 << 30
     RAW_PRELOAD_BYTES = 1 << 30
-    # tombstone scale routing: up to TOMBSTONE_CLOSURE_MAX dead docs the
-    # distributed query/phrase kernels ship a (doc_id -> kill_seq) dict in
-    # the task closure (cheapest); above it they switch to a DataFrame
-    # anti-join so a bulk delete of 10^8 docs never serializes into every
-    # task (VERDICT r2 weak #2). KILLS_BROADCAST_MAX bounds when the kills
-    # side of those joins gets a broadcast hint (~16 B/row -> ~16 MB).
-    TOMBSTONE_CLOSURE_MAX = 100_000
     # filter/negation scale routing: an fq match set or excluded-term
     # posting union above this many rows never materializes on the
     # driver — search() reroutes the query to the slow path, whose
-    # semi-/anti-joins keep the filter set cluster-side (the same
-    # count-gated pattern TOMBSTONE_CLOSURE_MAX applies to tombstones;
-    # Lucene analog: FILTER/MUST_NOT clauses are evaluated inside the
-    # searcher, never as process-global id sets)
+    # semi-/anti-joins keep the filter set cluster-side (Lucene analog:
+    # FILTER/MUST_NOT clauses are evaluated inside the searcher, never as
+    # process-global id sets)
     FILTER_CLOSURE_MAX = 100_000
-    KILLS_BROADCAST_MAX = 1_000_000
     # tokenize-input spread (guide §2.2/§2.5, scale-adaptive): when the
     # corpus arrives in fewer partitions than the cluster has cores (one
     # 15 MB parquet file scans as ~2 splits under openCostInBytes packing,
@@ -445,7 +439,6 @@ class ExtractorEngine:
         self._decoded_budget = self.DECODED_BUDGET_BYTES
         self._lazy_serve = False
         self._stats_cache: dict | None = None
-        self._dead_cache: DeadDocs | None = None
         self._tomb_count: int | None = None
         # memoized top-k results keyed (query, k, conjunctive, mode) —
         # Solr queryResultCache analog (solrconfig.xml queryResultCache);
@@ -454,9 +447,13 @@ class ExtractorEngine:
         self._gens: list[dict] = []
         self._seq = 0
         self._segment_format = SEGMENT_FORMAT
-        # GenDocs per generation, keyed (gen id, seq) — a generation never
-        # changes once written, so no mutation invalidates an entry
+        # stored GenDocs per generation, keyed (gen id, seq) — a
+        # generation never changes once written, so no mutation
+        # invalidates an entry
         self._gen_docs_memo: dict[tuple, GenDocs] = {}
+        # (index state, {gen id: GenDocs with its live mask}) and
+        # (index state, broadcast of it): rebuilt when the state changes
+        self._live_docs: "tuple | None" = None
         self._gen_docs_bc: "tuple | None" = None
         self.fs = FsIO(spark, index_root)
         self.fs.makedirs(index_root)
@@ -544,9 +541,9 @@ class ExtractorEngine:
                 "the index)."
             )
 
-    def _gen_docs(self, g: dict) -> GenDocs:
-        """The generation's doc ids and lengths (postings' ordinals index
-        them), memoized by (gen id, seq)."""
+    def _stored_gen_docs(self, g: dict) -> GenDocs:
+        """The generation's doc ids and lengths as stored (postings'
+        ordinals index them), memoized by (gen id, seq)."""
         self._require_segment_format()
         key = (g["gen"], int(g["seq"]))
         docs = self._gen_docs_memo.get(key)
@@ -567,16 +564,39 @@ class ExtractorEngine:
             return read_gen_docs(path)
         return _collect_gen_docs(self.spark.read.parquet(path))
 
+    def _index_state(self) -> tuple:
+        """What the live masks depend on: the committed seq (it bounds
+        the tombstone rows that apply) and the generation list."""
+        return (self._seq, tuple((g["gen"], int(g["seq"])) for g in self._gens))
+
     def _docs_by_gen(self) -> "dict[str, GenDocs]":
-        return {g["gen"]: self._gen_docs(g) for g in self._gens}
+        """Every generation's GenDocs with its live mask
+        (``codec.live_masks``), built once per index state from the
+        tombstone rows at or below the committed seq."""
+        state = self._index_state()
+        if self._live_docs is None or self._live_docs[0] != state:
+            ids, seqs = self._read_tombstones()
+            committed = seqs <= self._seq
+            masked = live_masks(
+                [(int(g["seq"]), self._stored_gen_docs(g)) for g in self._gens],
+                ids[committed], seqs[committed],
+            )
+            self._live_docs = (
+                state, {g["gen"]: d for g, d in zip(self._gens, masked)}
+            )
+        return self._live_docs[1]
+
+    def _gen_docs(self, g: dict) -> GenDocs:
+        """Generation ``g``'s GenDocs with its live mask."""
+        return self._docs_by_gen()[g["gen"]]
 
     def _gen_docs_broadcast(self):
         """Broadcast of ``_docs_by_gen()`` for the distributed decoders,
-        kept while the generation list is unchanged."""
-        key = tuple((g["gen"], int(g["seq"])) for g in self._gens)
-        if self._gen_docs_bc is None or self._gen_docs_bc[0] != key:
+        kept while the index state is unchanged."""
+        state = self._index_state()
+        if self._gen_docs_bc is None or self._gen_docs_bc[0] != state:
             self._gen_docs_bc = (
-                key, self.spark.sparkContext.broadcast(self._docs_by_gen())
+                state, self.spark.sparkContext.broadcast(self._docs_by_gen())
             )
         return self._gen_docs_bc[1]
 
@@ -800,6 +820,7 @@ class ExtractorEngine:
                 )
             n_delta_rows = self._staged_posting_rows(staging, lineage)
 
+        self._drop_uncommitted_tombstones()
         next_seq = self._seq + 1
         gen = {
             "gen": build_id,
@@ -835,7 +856,6 @@ class ExtractorEngine:
                     )
                 )
                 write_table(tombs, self._p("tombstones"), mode="append")
-                self._dead_cache = None
                 self._tomb_count = None
 
         # ---- overlapped stage group: encode beside the bookkeeping -------
@@ -1171,39 +1191,41 @@ class ExtractorEngine:
         partitioned write leaves only _SUCCESS — unreadable schema)."""
         return self.fs.has_part_files(path)
 
-    def _dead_docs(self) -> DeadDocs:
-        if self._dead_cache is None:
-            p = self._p("tombstones")
-            pairs: dict[int, int] = {}
-            if self.fs.is_local:
-                # the tombstone map was always driver-held (DeadDocs);
-                # pyarrow reads the same rows without a Spark job
-                if self.fs.exists(p):
-                    from ckanext_extractor_spark.operators.segread import (
-                        read_small_table,
-                    )
+    def _read_tombstones(self) -> "tuple[np.ndarray, np.ndarray]":
+        """Every tombstone row's (doc_id, seq) as int64 arrays: a pyarrow
+        read on a local root, else one Spark collect."""
+        p = self._p("tombstones")
+        if not self.fs.exists(p):
+            z = np.empty(0, dtype=np.int64)
+            return z, z
+        if self.fs.is_local:
+            from ckanext_extractor_spark.operators.segread import (
+                read_tombstones,
+            )
 
-                    for r in read_small_table(p, columns=["doc_id", "seq"]):
-                        d, s = int(r["doc_id"]), int(r["seq"])
-                        if pairs.get(d, -1) < s:
-                            pairs[d] = s
-            else:
-                tomb = self._read_or_none("tombstones")
-                if tomb is not None:
-                    for r in (
-                        tomb.groupBy("doc_id")
-                        .agg(F.max("seq").alias("seq"))
-                        .collect()
-                    ):
-                        pairs[int(r["doc_id"])] = int(r["seq"])
-            self._dead_cache = DeadDocs(pairs)
-        return self._dead_cache
+            ids, seqs = read_tombstones(p)
+        else:
+            rows = self.spark.read.parquet(p).select("doc_id", "seq").collect()
+            ids, seqs = [r[0] for r in rows], [r[1] for r in rows]
+        return (np.asarray(ids, dtype=np.int64),
+                np.asarray(seqs, dtype=np.int64))
+
+    def _drop_uncommitted_tombstones(self) -> None:
+        """Drop the tombstone rows above the committed seq before a
+        mutation claims the next seq. A build appends its rows before it
+        commits; if it then fails, they must not start killing the old
+        copies of docs it never replaced once a later build commits."""
+        _, seqs = self._read_tombstones()
+        if (seqs > self._seq).any():
+            p = self._p("tombstones")
+            kept = self.spark.read.parquet(p).where(F.col("seq") <= self._seq)
+            _atomic_overwrite(kept, p, self.spark)
+            self._tomb_count = None
 
     def _tombstone_count(self) -> int:
         """Number of tombstone rows — parquet metadata locally (zero data
-        read), else a cheap Spark count; cached either way. Drives the
-        closure-vs-join routing of the distributed paths and the
-        broadcast hint on kills joins."""
+        read), else a cheap Spark count; cached either way. Reported by
+        index_stats() and counted into significant_terms' background."""
         if self._tomb_count is None:
             p = self._p("tombstones")
             if self.fs.is_local:
@@ -1219,38 +1241,6 @@ class ExtractorEngine:
                 tomb = self._read_or_none("tombstones")
                 self._tomb_count = int(tomb.count()) if tomb is not None else 0
         return self._tomb_count
-
-    def _kills_df(self) -> DataFrame | None:
-        """(doc_id, _kill_seq) — the max tombstone seq per doc, as a
-        DataFrame. Broadcast-hinted only while small enough; a bulk-delete
-        backlog joins shuffle-side instead (Lucene analog: liveDocs are
-        per-segment state, never process-global)."""
-        tomb = self._read_or_none("tombstones")
-        if tomb is None:
-            return None
-        kills = tomb.groupBy("doc_id").agg(F.max("seq").alias("_kill_seq"))
-        if self._tombstone_count() <= self.KILLS_BROADCAST_MAX:
-            kills = F.broadcast(kills)
-        return kills
-
-    def _dead_for_distributed(self) -> "tuple[dict | None, DataFrame | None]":
-        """(dead_pairs, dead_df), the tombstone arguments of the one
-        cluster-side decode plan (``wand.decode_segments``) that every
-        distributed query, expression and phrase path reads through:
-        exactly one is non-None when tombstones exist. A backlog of up
-        to TOMBSTONE_CLOSURE_MAX docs ships as a closure dict applied at
-        decode; a larger one as the kills DataFrame, joined after decode
-        (``wand.drop_killed``) — never a multi-GB task closure."""
-        n = self._tombstone_count()
-        if n == 0:
-            return None, None
-        if n <= self.TOMBSTONE_CLOSURE_MAX:
-            dd = self._dead_docs()
-            return (
-                {int(d): int(s) for d, s in zip(dd.doc_ids, dd.kill_seqs)},
-                None,
-            )
-        return None, self._kills_df()
 
     def corpus_stats(self) -> dict:
         if self._stats_cache is None:
@@ -1353,8 +1343,8 @@ class ExtractorEngine:
         copy of the postings, so the lookup decodes the segments of just
         the generations whose doc set holds the doc: first without
         positions, for the doc's vocabulary, then with positions for
-        those terms only (bucket-pruned). Tombstoned postings are
-        filtered the same way the query paths filter them
+        those terms only (bucket-pruned). Dead postings are dropped by
+        the same live masks the query paths decode through
         (:meth:`postings_frame`). Returns [(term, tf, positions)], term
         asc; [] for unknown or deleted docs, positions [] when built
         without positions."""
@@ -1483,18 +1473,17 @@ class ExtractorEngine:
     ) -> dict[int, int]:
         """Earliest index position of ANY of ``terms`` per doc (for docs
         present in the index with positions); empty when the index was
-        built without positions. Tombstoned generations are filtered the
-        same way phrase verification filters them."""
+        built without positions. Dead postings are dropped at decode, as
+        on every path."""
         if not self.with_positions or not terms or not doc_ids:
             return {}
         from ckanext_extractor_spark.operators.phrase import _positions_by_doc
 
         wanted = set(doc_ids)
-        dead = self._dead_docs()
         out: dict[int, int] = {}
         for t in terms:
             for row in self._segment_rows(t):
-                for d, pos in _positions_by_doc(row, dead).items():
+                for d, pos in _positions_by_doc(row).items():
                     if d in wanted and len(pos):
                         first = int(pos[0])
                         if out.get(d, 1 << 62) > first:
@@ -1625,11 +1614,10 @@ class ExtractorEngine:
         from ckanext_extractor_spark.operators.phrase import _positions_by_doc
 
         wanted = set(doc_ids)
-        dead = self._dead_docs()
         acc: dict[int, set] = {}
         for t in terms:
             for row in self._segment_rows(t):
-                for d, pos in _positions_by_doc(row, dead).items():
+                for d, pos in _positions_by_doc(row).items():
                     if d in wanted and len(pos):
                         acc.setdefault(d, set()).update(int(p) for p in pos)
         return {d: sorted(ps) for d, ps in acc.items()}
@@ -1756,10 +1744,10 @@ class ExtractorEngine:
     # -- delete (extractor_delete / private-flip purge) --------------------
     def delete(self, doc_ids: list[int]) -> None:
         """Tombstone docs (plugin.py:117-123; search must no longer find
-        them, test_plugin.py:92-106). Appends tombstone rows consulted at
-        query time — NO postings or segment files are rewritten; compaction
-        reclaims space lazily when a generation's dead fraction crosses
-        DEAD_FRAC."""
+        them, test_plugin.py:92-106). Appends tombstone rows, which the
+        next live masks apply — NO postings or segment files are
+        rewritten; compaction reclaims space lazily when a generation's
+        dead fraction crosses DEAD_FRAC."""
         self._check_access("extractor_delete")
         doc_ids = _require_doc_ids(doc_ids)
         if not self._acquire_lock(f"delete-{uuid.uuid4().hex[:8]}"):
@@ -1775,6 +1763,7 @@ class ExtractorEngine:
         spark = self.spark
         if not self._gens:
             return
+        self._drop_uncommitted_tombstones()
         next_seq = self._seq + 1
         ids = [int(i) for i in doc_ids]
         ids_df = spark.createDataFrame([(i,) for i in ids], "doc_id long")
@@ -2108,11 +2097,12 @@ class ExtractorEngine:
         dead_frac: float | None = None,
         max_gens: int | None = None,
     ) -> list[str]:
-        """Merge generations whose tombstone fraction crosses ``dead_frac``
-        and enforce the ``max_gens`` generation-count bound. Returns merged
-        gen ids. Only victim generations are read/rewritten — the rest of
-        the index is untouched (byte-identical files). An index in an
-        older segment format is rewritten whole, into one generation."""
+        """Merge generations whose dead fraction (the share of their docs
+        their live mask marks dead) crosses ``dead_frac`` and enforce the
+        ``max_gens`` generation-count bound. Returns merged gen ids. Only
+        victim generations are read/rewritten — the rest of the index is
+        untouched (byte-identical files). An index in an older segment
+        format is rewritten whole, into one generation."""
         dead_frac = self.DEAD_FRAC if dead_frac is None else dead_frac
         max_gens = self.MAX_GENS if max_gens is None else max_gens
         if not self._gens:
@@ -2121,50 +2111,15 @@ class ExtractorEngine:
             victims = list(self._gens)
             self._compact(victims)
             return [g["gen"] for g in victims]
-        n_tomb = self._tombstone_count()
-        victims: list[dict] = []
-        if n_tomb:
-            # per-gen dead fraction computed IN SPARK — one aggregate over
-            # the union of per-gen doc tables joined to the kills table,
-            # collecting only #generations rows. The previous per-gen
-            # docs.collect() pulled every generation's doc ids to the
-            # driver, which OOMs once a generation holds billions of docs
-            # (VERDICT r2 weak #1); this join is the same pattern the
-            # tombstone-GC step below already uses.
-            kills = self._kills_df()
-            parts = []
-            gens_with_docs = []
-            for g in self._gens:
-                p = self._gen_docs_path(g)
-                if not self.fs.exists(p) or not self._has_part_files(p):
-                    continue
-                gens_with_docs.append(g)
-                parts.append(
-                    self.spark.read.parquet(p)
-                    .select("doc_id")
-                    .withColumn("_gen", F.lit(g["gen"]))
-                    .withColumn("gen_seq", F.lit(int(g["seq"])))
-                )
-            if parts:
-                agg = (
-                    reduce(DataFrame.unionByName, parts)
-                    .join(kills, "doc_id", "left")
-                    .groupBy("_gen")
-                    .agg(
-                        F.count(F.lit(1)).alias("n"),
-                        F.sum(F.when(tombstoned(), 1).otherwise(0))
-                        .alias("n_dead"),
-                    )
-                    .collect()
-                )
-                stats = {
-                    r["_gen"]: (int(r["n"]), int(r["n_dead"] or 0))
-                    for r in agg
-                }
-                for g in gens_with_docs:
-                    n, nd = stats.get(g["gen"], (0, 0))
-                    if n == 0 or nd / n >= dead_frac:
-                        victims.append(g)
+        # dead fractions come from the live masks the driver already
+        # holds for serving: no Spark job chooses the victims
+        dead = {
+            gen: 0.0 if docs.live is None else 1.0 - float(docs.live.mean())
+            for gen, docs in self._docs_by_gen().items()
+        }
+        victims = [
+            g for g in self._gens if 0 < dead[g["gen"]] >= dead_frac
+        ]
         n_after = len(self._gens) - len(victims) + (1 if victims else 0)
         if n_after > max_gens:
             # LSM tier-merge: fold the smallest generations in as well
@@ -2178,8 +2133,8 @@ class ExtractorEngine:
             return []
         if len(victims) == 1 and len(self._gens) == 1:
             # single-generation index: compaction = drop dead rows; only
-            # worth it when there are tombstones at all
-            if not n_tomb:
+            # worth it when some are dead
+            if not dead[victims[0]["gen"]]:
                 return []
         self._compact(victims)
         return [g["gen"] for g in victims]
@@ -2269,7 +2224,6 @@ class ExtractorEngine:
                 self.fs.rmtree(self._p("tombstones"))
         self._segment_format = new_format
         self._write_meta()
-        self._dead_cache = None
         self._tomb_count = None
         for g in victims:
             self.fs.rmtree(self._p("gens", g["gen"]))
@@ -2279,7 +2233,9 @@ class ExtractorEngine:
     def _format1_postings(self, gens: list[dict]) -> DataFrame | None:
         """Live postings of an index in the older segment format, from the
         postings table each of its generations kept (named by its
-        ``postings_rel`` meta key, which nothing else reads)."""
+        ``postings_rel`` meta key, which nothing else reads). These rows
+        carry doc ids, not ordinals, so the tombstones apply here as a
+        join rather than through the live masks."""
         dfs = [
             self.spark.read.parquet(self._p(g["postings_rel"]))
             .where(F.col("term").isNotNull())
@@ -2289,10 +2245,15 @@ class ExtractorEngine:
         if not dfs:
             return None
         out = reduce(DataFrame.unionByName, dfs)
-        kills = self._kills_df()
-        if kills is not None:
-            out = drop_killed(out, kills)
-        return out.drop("gen_seq")
+        tomb = self._read_or_none("tombstones")
+        if tomb is not None:
+            kills = tomb.where(F.col("seq") <= self._seq).groupBy("doc_id").agg(
+                F.max("seq").alias("_kill_seq")
+            )
+            out = out.join(kills, "doc_id", "left").where(
+                F.coalesce(F.col("_kill_seq") <= F.col("gen_seq"), F.lit(True))
+            )
+        return out.drop("gen_seq", "_kill_seq")
 
     # -- search ------------------------------------------------------------
     def _synonym_phrase_rows(
@@ -2346,7 +2307,6 @@ class ExtractorEngine:
         from collections import Counter
 
         n_docs, avgdl = st["n_docs"], st["avgdl"]
-        dead = self._dead_docs()
         rows: "list[tuple[int, int, float]]" = []
         for gid, toks in specs:
             uniq = list(dict.fromkeys(toks))
@@ -2354,7 +2314,7 @@ class ExtractorEngine:
             if any(dfs.get(t, 0) == 0 for t in uniq):
                 continue  # a missing token ⇒ the phrase matches nothing
             shard = {t: self._segment_rows(t) for t in uniq}
-            tf_map = phrase_tf_by_doc(shard, toks, dead)
+            tf_map = phrase_tf_by_doc(shard, toks)
             if not tf_map:
                 continue
             cnt = Counter(toks)
@@ -2638,13 +2598,13 @@ class ExtractorEngine:
             )
             if not terms:
                 return []
-            # lazy-block MaxScore fast path: disjunctive queries on a
-            # tombstone-free index decode ONLY the blocks the scorer
-            # visits — non-essential (usually the biggest) lists stop
-            # paying a full-blob decode. idf comes from segment-row
-            # n_postings metadata, exact only without tombstones; a
-            # tombstoned index falls through to the eager decode below
-            # (compaction restores the fast path).
+            # lazy-block MaxScore fast path: disjunctive queries on an
+            # index without dead postings decode ONLY the blocks the
+            # scorer visits — non-essential (usually the biggest) lists
+            # stop paying a full-blob decode. idf comes from segment-row
+            # n_postings metadata, exact only while no generation has a
+            # dead ordinal; any other index falls through to the eager
+            # decode below (compaction restores the fast path).
             ex_ids = np.array([], dtype=np.int64)
             if ex_terms:
                 ex_tls = self._term_postings(ex_terms, st)
@@ -2658,7 +2618,7 @@ class ExtractorEngine:
                 and fq_df is None
                 and not conjunctive
                 and mode in ("auto", "maxscore")
-                and self._tombstone_count() == 0
+                and all(d.live is None for d in self._docs_by_gen().values())
                 # every term already decoded in the LRU: the eager
                 # kernel scores memoized arrays with zero decode —
                 # strictly cheaper than the lazy path's per-call block
@@ -2755,8 +2715,8 @@ class ExtractorEngine:
     ) -> DataFrame | None:
         """The segment tables of ``gens`` (default: all generations),
         bucket/term pruned when terms are given, each row tagged with its
-        generation seq (``gen_seq``, the tombstone clock) and id (``gen``,
-        whose doc set its ordinals index). A missing segments dir raises:
+        generation's seq (``gen_seq``) and id (``gen``, whose doc set and
+        live mask its ordinals index). A missing segments dir raises:
         it is the generation's only copy of the postings (a dir with no
         part files is an empty generation)."""
         from ckanext_extractor_spark.operators.segments import read_segments
@@ -2791,9 +2751,9 @@ class ExtractorEngine:
         """Live postings ``(term, doc_id, tf, doc_len[, positions])``
         decoded from the segments of ``gens`` (default: all), restricted
         to ``terms`` (bucket-pruned) when given: one
-        ``wand.decode_segments`` plan, tombstones routed as on the
-        distributed paths; ``positions`` are sorted in-doc positions.
-        None when no generation holds a segment row."""
+        ``wand.decode_segments`` plan, whose broadcast live masks drop
+        dead postings as on every other path; ``positions`` are sorted
+        in-doc positions. None when no generation holds a segment row."""
         from ckanext_extractor_spark.operators.wand import decode_segments
 
         if terms is not None and not terms:
@@ -2803,10 +2763,8 @@ class ExtractorEngine:
         )
         if seg is None:
             return None
-        dead_pairs, dead_df = self._dead_for_distributed()
         rows = decode_segments(
-            seg, self._gen_docs_broadcast(), None, dead_pairs, dead_df,
-            with_positions,
+            seg, self._gen_docs_broadcast(), None, with_positions
         )
         return rows.select(
             "term", "doc_id", "tf", "doc_len",
@@ -2848,7 +2806,7 @@ class ExtractorEngine:
             self._raw_bytes = 0
             self._raw_budget = preload_cap
             self._lazy_serve = True
-        self._dead_docs()  # prime the tombstone map
+        self._docs_by_gen()  # build the live masks
         # Slow-path warming (Solr firstSearcher analog): execute ONE
         # query through the oracle path's physical shape — the decode
         # plan over the two warming terms' segment rows, then the BM25
@@ -2905,7 +2863,6 @@ class ExtractorEngine:
         self._decoded_bytes = 0
         self._lazy_serve = False
         self._stats_cache = None
-        self._dead_cache = None
         self._tomb_count = None
         self._query_cache.clear()
 
@@ -2987,8 +2944,9 @@ class ExtractorEngine:
         budgets); serving them with pyarrow reads the same files with the
         same hive-partition + row-group pruning, minus a full Spark job
         of overhead per lookup (~0.25 s on local[32] — measured as ~95%
-        of cold-query latency). Full rows (``columns`` None) carry their
-        generation's GenDocs under ``"docs"``."""
+        of cold-query latency). Each row carries its generation's seq
+        under ``"gen_seq"``, as the Spark union's rows do; full rows
+        (``columns`` None) also carry its GenDocs under ``"docs"``."""
         if not self.fs.is_local:
             return None
         from ckanext_extractor_spark.operators.segread import (
@@ -3003,12 +2961,11 @@ class ExtractorEngine:
             p = self._gen_segments_path(g)
             if not self.fs.exists(p) or not self._has_part_files(p):
                 continue
-            rows = read_segment_rows(
-                p, terms, self.n_buckets, int(g["seq"]), columns=want
-            )
-            if columns is None and rows:
-                docs = self._gen_docs(g)
-                for r in rows:
+            rows = read_segment_rows(p, terms, self.n_buckets, columns=want)
+            docs = self._gen_docs(g) if columns is None and rows else None
+            for r in rows:
+                r["gen_seq"] = int(g["seq"])
+                if docs is not None:
                     r["docs"] = docs
             out.extend(rows)
         return out
@@ -3646,7 +3603,6 @@ class ExtractorEngine:
             )
             for t in terms
         }
-        dead_pairs, dead_df = self._dead_for_distributed()
         docs_bc = self._gen_docs_broadcast()
         exclude_df = None
         if exclude:
@@ -3665,7 +3621,6 @@ class ExtractorEngine:
                 exclude_df = query_segments_distributed(
                     self.spark, ex_seg, docs_bc, {t: 1.0 for t in ex_terms},
                     st["avgdl"], k=None, conjunctive=False,
-                    dead_pairs=dead_pairs, dead_df=dead_df,
                 ).select("doc_id")
         include_df = self._fq_match_df(fq)
         if fq is not None and include_df is None:
@@ -3673,7 +3628,7 @@ class ExtractorEngine:
         rows = query_segments_distributed(
             self.spark, seg, docs_bc, terms_idf, st["avgdl"],
             k=k, conjunctive=conjunctive, n_query_terms=len(terms),
-            dead_pairs=dead_pairs, dead_df=dead_df, min_match=min_match,
+            min_match=min_match,
             include_df=include_df, exclude_df=exclude_df, after=after,
         ).collect()
         return [(int(r["doc_id"]), float(r["score"])) for r in rows]
@@ -4003,10 +3958,8 @@ class ExtractorEngine:
                     )
                     for t in body_terms
                 }
-                dead_pairs, dead_df = self._dead_for_distributed()
                 ts_df = scored_terms_distributed(
-                    seg, self._gen_docs_broadcast(), terms_idf, st["avgdl"],
-                    dead_pairs=dead_pairs, dead_df=dead_df,
+                    seg, self._gen_docs_broadcast(), terms_idf, st["avgdl"]
                 )
                 cmap = self.spark.createDataFrame(
                     [(t, ci) for ci, toks in body_map.items()
@@ -4718,8 +4671,7 @@ class ExtractorEngine:
                 return cand.astype(np.int64)
             rows_by_term = {t: self._segment_rows(t) for t in uniq}
             keep = phrase_filter_docs(
-                [int(d) for d in cand], rows_by_term, tokens,
-                self._dead_docs(), slop=slop,
+                [int(d) for d in cand], rows_by_term, tokens, slop=slop,
             )
             return np.array(sorted(keep), dtype=np.int64)
 
@@ -4819,8 +4771,8 @@ class ExtractorEngine:
 
         1. one bucket-pruned scan + decode kernel emits per-(doc, term)
            BM25 rows for EVERY token the AST mentions
-           (``wand.scored_terms_distributed`` — tombstone routing
-           identical to :meth:`search_distributed`);
+           (``wand.scored_terms_distributed`` — the same decode plan
+           and live masks as :meth:`search_distributed`);
         2. one ``groupBy(doc_id).pivot(term)`` hash aggregate turns them
            into per-token nullable score columns;
         3. phrase leaves join their (doc_id, score) match DataFrames
@@ -4877,11 +4829,9 @@ class ExtractorEngine:
                     )
                     for t in toks
                 }
-                dead_pairs, dead_df = self._dead_for_distributed()
                 scored = scored_terms_distributed(
                     seg, self._gen_docs_broadcast(), terms_idf,
                     float(st["avgdl"]),
-                    dead_pairs=dead_pairs, dead_df=dead_df,
                 )
                 # explicit pivot values: one shuffle, no discovery job;
                 # analyzed tokens are [a-z0-9]+ so names cannot collide
@@ -5358,11 +5308,10 @@ class ExtractorEngine:
             }
         else:
             terms_idf = {t: 1.0 for t in terms}
-        dead_pairs, dead_df = self._dead_for_distributed()
         return query_segments_distributed(
             self.spark, seg, self._gen_docs_broadcast(), terms_idf,
             st["avgdl"], k=None, conjunctive=conjunctive, n_query_terms=len(terms),
-            dead_pairs=dead_pairs, dead_df=dead_df, min_match=min_match,
+            min_match=min_match,
         )
 
     def search_sorted(
@@ -7465,11 +7414,10 @@ class ExtractorEngine:
         if not tls:
             return []
         rows_by_term = {uniq[0]: self._segment_rows(uniq[0])}
-        dead = self._dead_docs()
         return _filtered_topk(
             tls, st["avgdl"], k,
             lambda docs: span_first_filter_docs(
-                docs, rows_by_term, uniq[0], end, dead
+                docs, rows_by_term, uniq[0], end
             ),
         )
 
@@ -7527,12 +7475,11 @@ class ExtractorEngine:
         tls = self._term_postings(uniq, st)
         if len(tls) < len(uniq):
             return []  # some term absent: the span can't exist
-        dead = self._dead_docs()
         rows_by_term = {t: self._segment_rows(t) for t in uniq}
         return _filtered_topk(
             tls, st["avgdl"], k,
             lambda docs: span_near_filter_docs(
-                docs, rows_by_term, terms, slop, dead, in_order=in_order,
+                docs, rows_by_term, terms, slop, in_order=in_order,
             ),
         )
 
@@ -7595,14 +7542,13 @@ class ExtractorEngine:
         tls = self._term_postings(uniq, st)
         if len(tls) < len(uniq):
             return []  # some include term absent: no include span
-        dead = self._dead_docs()
         rows_by_term = {t: self._segment_rows(t) for t in uniq}
         if ex not in rows_by_term:  # setdefault would fetch eagerly
             rows_by_term[ex] = self._segment_rows(ex)
         return _filtered_topk(
             tls, st["avgdl"], k,
             lambda docs: span_not_filter_docs(
-                docs, rows_by_term, terms, ex, slop, pre, post, dead,
+                docs, rows_by_term, terms, ex, slop, pre, post,
             ),
         )
 
@@ -7631,13 +7577,12 @@ class ExtractorEngine:
 
     def _term_postings(self, terms: list[str], st: dict) -> list:
         """TermPostings for `terms` — decoded-LRU, raw-rows cache, or a
-        cold bucket-pruned segment read. Tombstoned postings are filtered
-        at decode."""
+        cold bucket-pruned segment read. Dead postings are dropped at
+        decode."""
         from ckanext_extractor_spark.operators.wand import (
             term_postings_from_rows,
         )
 
-        dead = self._dead_docs()
         out = []
         missing = []
         for t in terms:
@@ -7672,9 +7617,7 @@ class ExtractorEngine:
             rows = rows_by_term.get(t) or []
             if not rows:
                 continue
-            tp = term_postings_from_rows(
-                t, rows, st["n_docs"], st["avgdl"], dead=dead
-            )
+            tp = term_postings_from_rows(t, rows, st["n_docs"], st["avgdl"])
             self._lru_put(t, tp)
             out.append(tp)
         return out
@@ -7682,8 +7625,8 @@ class ExtractorEngine:
     def _lazy_term_postings(self, terms: list[str], st: dict):
         """LazyTermPostings per term from raw segment rows (warm cache,
         lazy LRU, or a cold bucket-pruned read) — metadata-only until the
-        scorer decodes blocks on demand. Only valid on a tombstone-free
-        index (caller checks)."""
+        scorer decodes blocks on demand. Only valid while no generation
+        has a dead ordinal (caller checks)."""
         from ckanext_extractor_spark.operators.wand import LazyTermPostings
 
         if self._rows_cache is not None and not self._lazy_serve:

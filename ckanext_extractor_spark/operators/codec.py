@@ -46,10 +46,16 @@ BLOCK_SIZE = 128
 
 class GenDocs(NamedTuple):
     """One generation's doc ids (sorted ascending, unique) and the doc
-    lengths aligned with them. Posting ordinals index both arrays."""
+    lengths aligned with them. Posting ordinals index both arrays.
+
+    ``live`` is the generation's live-docs mask over its ordinals
+    (Lucene's per-segment liveDocs): a bool per doc, or None when every
+    doc is live. The ordinal-resolving decodes below drop the postings
+    of dead ordinals themselves; :func:`live_masks` builds the masks."""
 
     doc_ids: np.ndarray
     doc_lens: np.ndarray
+    live: "np.ndarray | None" = None
 
     @classmethod
     def of(cls, doc_ids, doc_lens) -> "GenDocs":
@@ -78,6 +84,48 @@ class GenDocs(NamedTuple):
         ):
             raise ValueError("posting for a doc outside its generation's doc set")
         return ords
+
+    def live_at(self, ords: np.ndarray) -> "np.ndarray | None":
+        """Mask of the live entries of ``ords``; None when all are live."""
+        if self.live is None:
+            return None
+        keep = self.live[ords]
+        return None if keep.all() else keep
+
+
+def live_masks(
+    gens: "list[tuple[int, GenDocs]]",
+    tomb_ids: np.ndarray,
+    tomb_seqs: np.ndarray,
+) -> "list[GenDocs]":
+    """``gens`` ((seq, GenDocs) per generation) with their live masks set.
+
+    A doc ``d`` of a generation with seq ``s`` is live iff no tombstone
+    ``(d, t)`` has ``t > s`` and no generation with a seq above ``s``
+    holds ``d`` (the newest generation holding a doc owns it). Both are
+    one rule: every generation contributes ``(d, seq)`` for its docs
+    beside the tombstone rows, and ``d`` is dead in every generation
+    older than its largest such seq. Masks that would be all True stay
+    None."""
+    tomb_ids = np.asarray(tomb_ids, dtype=np.int64)
+    if len(gens) <= 1 and tomb_ids.size == 0:
+        return [docs for _, docs in gens]
+    ids = np.concatenate([tomb_ids] + [docs.doc_ids for _, docs in gens])
+    seqs = np.concatenate(
+        [np.asarray(tomb_seqs, dtype=np.int64)]
+        + [np.full(docs.doc_ids.size, s, dtype=np.int64) for s, docs in gens]
+    )
+    order = np.lexsort((seqs, ids))
+    ids, seqs = ids[order], seqs[order]
+    last = np.ones(ids.size, dtype=bool)
+    last[:-1] = ids[1:] != ids[:-1]
+    owner_ids, owner_seqs = ids[last], seqs[last]
+    out = []
+    for s, docs in gens:
+        idx = np.searchsorted(owner_ids, docs.doc_ids)
+        live = owner_seqs[idx] <= s
+        out.append(docs._replace(live=None if live.all() else live))
+    return out
 
 
 def varbyte_encode(values: np.ndarray) -> bytes:
@@ -362,8 +410,8 @@ def decode_posting_blocks(
     """Decode ONLY the selected blocks of a multi-block posting list
     (sorted ascending block indices) using the per-block byte offsets
     emitted at encode time. Returns (doc_ids, tfs, doc_lens) of those
-    blocks concatenated — the same values a full decode yields for those
-    ranges (pinned by round-trip tests).
+    blocks' live postings concatenated — the same values a full decode
+    yields for those ranges (pinned by round-trip tests).
 
     The ordinal delta chain restarts from block_last_doc[bi-1] (the
     previous block's last ordinal, which the block metadata already
@@ -394,7 +442,23 @@ def decode_posting_blocks(
         tfs, _ = varbyte_decode(blob, int(block_offs[2 * b0 + 1]), cnt)
         tf_parts.append(tfs.astype(np.int64))
     ords = np.concatenate(ord_parts)
-    return docs.doc_ids[ords], np.concatenate(tf_parts), docs.doc_lens[ords]
+    tfs = np.concatenate(tf_parts)
+    keep = docs.live_at(ords)
+    if keep is not None:
+        ords, tfs = ords[keep], tfs[keep]
+    return docs.doc_ids[ords], tfs, docs.doc_lens[ords]
+
+
+def _position_spans(blob: bytes, off: int, tfs: np.ndarray, keep):
+    """(flat position gaps, starts, ends): posting i's gaps are
+    ``flat[starts[i]:ends[i]]``, for the postings ``keep`` leaves."""
+    npos, off = varbyte_decode(blob, off, 1)
+    flat, _ = varbyte_decode(blob, off, int(npos[0]))
+    ends = np.cumsum(tfs)
+    starts = ends - tfs
+    if keep is not None:
+        starts, ends = starts[keep], ends[keep]
+    return flat.astype(np.int64), starts, ends
 
 
 def decode_posting_list_selective(
@@ -409,16 +473,16 @@ def decode_posting_list_selective(
     against a top-k candidate set (~100 docs), this turns the
     O(n_postings) python loop + array churn into O(n_candidates).
 
-    Returns (doc_ids, tfs, doc_lens, posmap) where posmap maps
-    doc_id -> positions array for ids present in ``wanted_ids`` only
-    (byte-identical to the full decode's arrays — pinned by test)."""
+    Returns (doc_ids, tfs, doc_lens, posmap) of the live postings, where
+    posmap maps doc_id -> positions array for ids present in
+    ``wanted_ids`` only (byte-identical to the full decode's arrays —
+    pinned by test)."""
     ords, tfs, off = _decode_head(blob)
+    keep = docs.live_at(ords)
+    flat, starts, ends = _position_spans(blob, off, tfs, keep)
+    if keep is not None:
+        ords, tfs = ords[keep], tfs[keep]
     doc_ids = docs.doc_ids[ords]
-    npos, off = varbyte_decode(blob, off, 1)
-    flat, off = varbyte_decode(blob, off, int(npos[0]))
-    flat = flat.astype(np.int64)
-    ends = np.cumsum(tfs)
-    starts = ends - tfs
     sel = np.flatnonzero(
         np.isin(doc_ids, np.asarray(wanted_ids, dtype=np.int64))
     )
@@ -430,19 +494,18 @@ def decode_posting_list_selective(
 
 def decode_posting_list(blob: bytes, docs: GenDocs, with_positions: bool = False):
     """Inverse of encode_posting_list, ordinals resolved through the
-    generation's ``docs``. Returns (doc_ids, tfs, doc_lens[, positions])."""
+    generation's ``docs``; postings of dead ordinals are dropped.
+    Returns (doc_ids, tfs, doc_lens[, positions])."""
     ords, tfs, off = _decode_head(blob)
+    keep = docs.live_at(ords)
+    if with_positions:
+        flat, starts, ends = _position_spans(blob, off, tfs, keep)
+    if keep is not None:
+        ords, tfs = ords[keep], tfs[keep]
     doc_ids, doc_lens = docs.doc_ids[ords], docs.doc_lens[ords]
     if not with_positions:
         return doc_ids, tfs, doc_lens
-    npos, off = varbyte_decode(blob, off, 1)
-    npos = int(npos[0])
-    flat, off = varbyte_decode(blob, off, npos)
-    flat = flat.astype(np.int64)
-    positions = []
-    cursor = 0
-    for tf in tfs:
-        seg = flat[cursor : cursor + tf]
-        positions.append(np.cumsum(seg))
-        cursor += tf
+    positions = [
+        np.cumsum(flat[a:b]) for a, b in zip(starts.tolist(), ends.tolist())
+    ]
     return doc_ids, tfs, doc_lens, positions

@@ -36,36 +36,27 @@ from ckanext_extractor_spark.analysis.tokenizer import (
 from ckanext_extractor_spark.operators.codec import decode_posting_list
 
 
-def _positions_by_doc(row, dead, wanted=None) -> dict[int, np.ndarray]:
-    """Positions of one segment row (ordinals resolved through the row's
-    ``"docs"``, its generation's GenDocs) as doc_id -> array. ``wanted``
-    (a sorted np.int64 array of candidate doc ids) switches to the
-    selective decode (codec.decode_posting_list_selective): per-doc
-    position arrays materialize only for candidates — the phrase
-    verify prune (VERDICT r4 #8). Identical arrays either way (pinned
-    by test); the full decode remains for callers that genuinely need
-    every doc (term vectors, highlight offsets)."""
-    from ckanext_extractor_spark.operators.wand import _row_gen_seq
-
+def _positions_by_doc(row, wanted=None) -> dict[int, np.ndarray]:
+    """Live positions of one segment row (ordinals resolved, and dead
+    postings dropped, through the row's ``"docs"``, its generation's
+    GenDocs) as doc_id -> array. ``wanted`` (a sorted np.int64 array of
+    candidate doc ids) switches to the selective decode
+    (codec.decode_posting_list_selective): per-doc position arrays
+    materialize only for candidates — the phrase verify prune (VERDICT
+    r4 #8). Identical arrays either way (pinned by test); the full
+    decode remains for callers that genuinely need every doc (term
+    vectors, highlight offsets)."""
     if wanted is not None:
         from ckanext_extractor_spark.operators.codec import (
             decode_posting_list_selective,
         )
 
-        ids, tfs, dls, posmap = decode_posting_list_selective(
+        return decode_posting_list_selective(
             bytes(row["blob"]), row["docs"], wanted
-        )
-        if dead is not None and len(dead):
-            keep = dead.live_mask(ids, _row_gen_seq(row))
-            deadset = {int(d) for d, k in zip(ids, keep) if not k}
-            return {d: p for d, p in posmap.items() if d not in deadset}
-        return posmap
+        )[3]
     ids, tfs, dls, pos = decode_posting_list(
         bytes(row["blob"]), row["docs"], with_positions=True
     )
-    if dead is not None and len(dead):
-        keep = dead.live_mask(ids, _row_gen_seq(row))
-        return {int(d): p for d, p, k in zip(ids, pos, keep) if k}
     return {int(d): p for d, p in zip(ids, pos)}
 
 
@@ -104,7 +95,6 @@ def lucene_slop_match(pos_lists: "list[np.ndarray]", slop: int) -> bool:
 def _merged_positions(
     term_shard_rows: dict[str, list],
     terms: list[str],
-    dead,
     wanted: np.ndarray,
 ) -> "list[dict[int, np.ndarray]]":
     """Per term (in order): doc -> sorted positions, merged across that
@@ -113,7 +103,7 @@ def _merged_positions(
     for t in terms:
         merged: dict[int, np.ndarray] = {}
         for row in term_shard_rows.get(t, []):
-            merged.update(_positions_by_doc(row, dead, wanted))
+            merged.update(_positions_by_doc(row, wanted))
         out.append(merged)
     return out
 
@@ -155,7 +145,6 @@ def phrase_filter_docs(
     candidate_docs: list[int],
     term_shard_rows: dict[str, list],
     ordered_terms: list[str],
-    dead=None,
     slop: int = 0,
     slop_mode: str = "pergap",
 ) -> list[int]:
@@ -171,14 +160,12 @@ def phrase_filter_docs(
     positions). Decodes only the query's terms (already fetched for
     scoring); verification propagates the feasible positions of the LAST
     matched term with one searchsorted per gap (greedy minimal chains —
-    complete, since window constraints are upper bounds). ``dead`` (a
-    wand.DeadDocs) drops tombstoned postings so a stale generation can't
-    shadow an updated doc's positions."""
+    complete, since window constraints are upper bounds). The rows'
+    live masks drop dead postings, so a stale generation can't shadow
+    an updated doc's positions."""
     win = np.int64(slop + 1)
     wanted = np.unique(np.asarray(list(candidate_docs), dtype=np.int64))
-    per_term_pos = _merged_positions(
-        term_shard_rows, ordered_terms, dead, wanted
-    )
+    per_term_pos = _merged_positions(term_shard_rows, ordered_terms, wanted)
     if slop_mode == "lucene":
         # total-move budget (see lucene_slop_match); opt-in, so the
         # per-doc sweep loop is acceptable here — candidates are already
@@ -216,7 +203,6 @@ def phrase_filter_docs(
 def phrase_tf_by_doc(
     term_shard_rows: dict[str, list],
     ordered_terms: list[str],
-    dead=None,
 ) -> "dict[int, tuple[int, int]]":
     """Exact (slop=0) phrase frequency per doc: doc_id -> (ptf, dl),
     ptf = count of DISTINCT start positions where ``ordered_terms``
@@ -233,8 +219,6 @@ def phrase_tf_by_doc(
     conjunctive candidate set; pass two materializes position arrays
     selectively for those candidates — a hot term's million postings
     never turn into a million python arrays."""
-    from ckanext_extractor_spark.operators.wand import _row_gen_seq
-
     live_ids: list[np.ndarray] = []
     dl_parts: "list[tuple[np.ndarray, np.ndarray]]" = []
     for slot, t in enumerate(ordered_terms):
@@ -243,9 +227,6 @@ def phrase_tf_by_doc(
             ids, tfs, dls = decode_posting_list(
                 bytes(row["blob"]), row["docs"]
             )
-            if dead is not None and len(dead):
-                keep = dead.live_mask(ids, _row_gen_seq(row))
-                ids, dls = ids[keep], dls[keep]
             parts.append(ids)
             if slot == 0:
                 dl_parts.append((ids, dls))
@@ -264,12 +245,7 @@ def phrase_tf_by_doc(
         doc_len.update(
             (int(d), int(dl)) for d, dl in zip(ids[mask], dls[mask])
         )
-    per_term: list[dict[int, np.ndarray]] = []
-    for t in ordered_terms:
-        merged: dict[int, np.ndarray] = {}
-        for row in term_shard_rows.get(t, []):
-            merged.update(_positions_by_doc(row, dead, wanted))
-        per_term.append(merged)
+    per_term = _merged_positions(term_shard_rows, ordered_terms, wanted)
     common = set(per_term[0])
     for pm in per_term[1:]:
         common &= set(pm)
@@ -292,7 +268,6 @@ def span_near_filter_docs(
     term_shard_rows: dict[str, list],
     ordered_terms: list[str],
     slop: int = 0,
-    dead=None,
     in_order: bool = True,
 ) -> list[int]:
     """Lucene SpanNearQuery(in_order=true, slop=n): keep candidate docs
@@ -319,9 +294,7 @@ def span_near_filter_docs(
     position (pinned)."""
     k = len(ordered_terms)
     wanted = np.unique(np.asarray(list(candidate_docs), dtype=np.int64))
-    per_term_pos = _merged_positions(
-        term_shard_rows, ordered_terms, dead, wanted
-    )
+    per_term_pos = _merged_positions(term_shard_rows, ordered_terms, wanted)
     if not in_order:
         out = []
         for d in candidate_docs:
@@ -386,7 +359,6 @@ def span_not_filter_docs(
     slop: int = 0,
     pre: int = 0,
     post: int = 0,
-    dead=None,
 ) -> list[int]:
     """Lucene SpanNotQuery(include=ordered SpanNear(slop),
     exclude=SpanTerm, pre, post): keep candidate docs holding an
@@ -413,12 +385,8 @@ def span_not_filter_docs(
     contract."""
     k = len(include_terms)
     wanted = np.unique(np.asarray(list(candidate_docs), dtype=np.int64))
-    per_term_pos = _merged_positions(
-        term_shard_rows, include_terms, dead, wanted
-    )
-    [excl] = _merged_positions(
-        term_shard_rows, [exclude_term], dead, wanted
-    )
+    per_term_pos = _merged_positions(term_shard_rows, include_terms, wanted)
+    [excl] = _merged_positions(term_shard_rows, [exclude_term], wanted)
     budget = np.int64(slop + k - 1)
     out = []
     for d in candidate_docs:
@@ -447,7 +415,6 @@ def span_first_filter_docs(
     term_shard_rows: dict[str, list],
     term: str,
     end: int,
-    dead=None,
 ) -> list[int]:
     """Lucene SpanFirstQuery for a single-term span: keep candidate
     docs whose FIRST occurrence of ``term`` sits at an analyzer
@@ -457,7 +424,7 @@ def span_first_filter_docs(
     removal leaves gaps, catenated identifier tokens stack at
     posInc=0 — same space every phrase operator uses)."""
     wanted = np.unique(np.asarray(list(candidate_docs), dtype=np.int64))
-    [merged] = _merged_positions(term_shard_rows, [term], dead, wanted)
+    [merged] = _merged_positions(term_shard_rows, [term], wanted)
     out = []
     for d in candidate_docs:
         p = merged.get(d)
@@ -522,9 +489,8 @@ def phrase_search(
     if not scored:
         return []
     rows_by_term = {t: engine._segment_rows(t) for t in uniq}
-    dead = engine._dead_docs()
     keep = set(
-        phrase_filter_docs([d for d, _ in scored], rows_by_term, terms, dead,
+        phrase_filter_docs([d for d, _ in scored], rows_by_term, terms,
                            slop=slop, slop_mode=slop_mode)
     )
     out = [(d, s) for d, s in scored if d in keep][:k]
@@ -551,7 +517,7 @@ def phrase_search_distributed(engine, query: str, k: int = 10,
       1. bucket/term-pruned segment scan (partition pruning on
          term_bucket, row-group min/max on term);
       2. the one decode plan (``wand.decode_segments``) -> live rows
-         (doc_id, term slot, tf, doc_len, gen_seq, positions);
+         (doc_id, term slot, tf, doc_len, positions);
       3. ONE exchange keyed doc_id (repartition, not groupBy: the verify
          kernel does its own pandas groupby per partition);
       4. vectorized verify ACROSS docs: all query slots present AND
@@ -615,25 +581,18 @@ def phrase_matched_df(engine, terms: list, slop: int = 0,
         return None
     st = engine.corpus_stats()
     n_docs, avgdl = int(st["n_docs"]), float(st["avgdl"])
-    dead_pairs, dead_df = engine._dead_for_distributed()
     docs_bc = engine._gen_docs_broadcast()
     slot_of = {t: i for i, t in enumerate(uniq)}
     n_slots = len(uniq)
     k1, b = BM25_K1, BM25_B
-    # gen_seq travels with the decoded rows: the verify kernel dedupes
-    # duplicate live (doc, slot) rows on it (max gen wins), so an
-    # invariant violation (two generations both carrying a live posting
-    # for the same doc+term) degrades to last-write-wins instead of
-    # silently failing the exact-count gate.
-    decoded = decode_segments(seg, docs_bc, slot_of, dead_pairs, dead_df,
-                              with_positions=True)
+    decoded = decode_segments(seg, docs_bc, slot_of, with_positions=True)
     # live df per slot -> idf (same formula as the driver path), counted
     # on a POSITIONS-FREE decode: `decoded` is lazy and its consumer
     # re-evaluates it, so counting on it would run the expensive
     # positions decode twice per query.
     dfs = {
         int(r["slot"]): int(r["count"])
-        for r in decode_segments(seg, docs_bc, slot_of, dead_pairs, dead_df)
+        for r in decode_segments(seg, docs_bc, slot_of)
         .groupBy("slot").count().collect()
     }
     idf = {
@@ -661,33 +620,25 @@ def phrase_matched_df(engine, terms: list, slop: int = 0,
         n = len(pdf)
         doc = pdf["doc_id"].to_numpy()
         slot = pdf["slot"].to_numpy().astype(np.int64)
-        gen = pdf["gen_seq"].to_numpy().astype(np.int64)
-        order = np.lexsort((gen, slot, doc))
-        doc = doc[order]
-        slot = slot[order]
-        gen = gen[order]
+        order = np.lexsort((slot, doc))
+        doc, slot = doc[order], slot[order]
+        # the live masks leave one posting per (doc, slot) across
+        # generations; a segment row repeated within one generation
+        # (which no mask can tell apart) keeps its first copy
+        keep = np.ones(n, dtype=bool)
+        keep[1:] = (doc[1:] != doc[:-1]) | (slot[1:] != slot[:-1])
+        order, doc, slot = order[keep], doc[keep], slot[keep]
+        n = int(order.size)
         tf = pdf["tf"].to_numpy()[order].astype(np.float64)
         dl = pdf["doc_len"].to_numpy()[order].astype(np.float64)
         pos_obj = pdf["positions"].to_numpy()[order]
-        # one live row per (doc, slot): on a duplicate keep the max
-        # gen_seq (rows are gen-ascending within each (doc, slot) run)
-        if n > 1:
-            dup = (doc[1:] == doc[:-1]) & (slot[1:] == slot[:-1])
-            if dup.any():
-                keep = np.ones(n, dtype=bool)
-                keep[:-1][dup] = False
-                doc, slot, tf, dl = (
-                    doc[keep], slot[keep], tf[keep], dl[keep]
-                )
-                pos_obj = pos_obj[keep]
-                n = int(doc.size)
         # group = consecutive rows of one doc (sorted by (doc, slot))
         change = np.flatnonzero(doc[1:] != doc[:-1]) + 1
         starts = np.concatenate(([0], change))
         ends = np.concatenate((change, [n]))
-        # conjunctive gate, vectorized: tombstone filtering leaves exactly
-        # one live row per (doc, slot), so a qualifying group has exactly
-        # n_slots rows whose slots are 0..n_slots-1 in order
+        # conjunctive gate, vectorized: with one row per (doc, slot), a
+        # qualifying group has exactly n_slots rows whose slots are
+        # 0..n_slots-1 in order
         cand = np.flatnonzero(ends - starts == n_slots)
         if cand.size == 0:
             return

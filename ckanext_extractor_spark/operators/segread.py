@@ -17,8 +17,8 @@ dicts with exactly the columns the Spark ``collect()`` produced, and the
 warm/cold parity tests plus the oracle battery pin result identity.
 
 Scale note: every consumer of these reads was ALREADY bounded
-(per-term segment rows, 1-row corpus_stats, tombstone backlog below the
-closure threshold) — the big match sets travel the distributed
+(per-term segment rows, 1-row corpus_stats, the tombstone table the
+live masks are built from) — the big match sets travel the distributed
 DataFrame paths, which are untouched. The driver reads exactly the
 bytes it previously collected.
 """
@@ -48,7 +48,6 @@ def read_segment_rows(
     path: str,
     terms: list[str] | None,
     n_buckets: int,
-    gen_seq: int,
     columns: list[str] | None = None,
 ) -> list[dict]:
     """One generation's segment rows as dicts (pyarrow, local FS only).
@@ -56,7 +55,7 @@ def read_segment_rows(
     Mirrors ``read_segments(...).collect()``: hive partition pruning on
     ``term_bucket`` for the query terms' buckets, residual exact
     ``term IN`` filter (row-group pruned via parquet min/max on the
-    lexically-sorted term column), ``gen_seq`` attached.
+    lexically-sorted term column).
     """
     import pyarrow.dataset as pads
 
@@ -70,10 +69,7 @@ def read_segment_rows(
         filt = pads.field("term_bucket").isin(buckets) & pads.field(
             "term"
         ).isin(list(terms))
-    rows = dataset.to_table(filter=filt, columns=columns).to_pylist()
-    for r in rows:
-        r["gen_seq"] = gen_seq
-    return rows
+    return dataset.to_table(filter=filt, columns=columns).to_pylist()
 
 
 def count_rows(path: str) -> int:
@@ -127,7 +123,7 @@ def read_bucket_term_stats(path: str, bucket: int = 0) -> list[tuple]:
 
 
 def read_small_table(path: str, columns: list[str] | None = None) -> list[dict]:
-    """A whole (small) parquet table as dicts — corpus_stats, tombstones.
+    """A whole (small) parquet table as dicts — corpus_stats.
 
     Only for tables the engine already materializes on the driver in
     full; bounded by the same budgets/thresholds as before.
@@ -137,6 +133,14 @@ def read_small_table(path: str, columns: list[str] | None = None) -> list[dict]:
     lp = _local_path(path)
     tbl = pq.read_table(lp, columns=columns)
     return tbl.to_pylist()
+
+
+def read_tombstones(path: str):
+    """The tombstone table's ``doc_id`` and ``seq`` columns as arrays."""
+    import pyarrow.parquet as pq
+
+    tbl = pq.read_table(_local_path(path), columns=["doc_id", "seq"])
+    return tbl.column("doc_id").to_numpy(), tbl.column("seq").to_numpy()
 
 
 def read_gen_docs(path: str):

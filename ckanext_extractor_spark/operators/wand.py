@@ -15,13 +15,17 @@ Cluster side, for lists too large to collect: ``decode_segments`` is the
 one per-partition decode of segment rows into live postings, and
 ``query_segments_distributed``, ``scored_terms_distributed`` and
 ``phrase.phrase_matched_df`` are Catalyst plans over its rows.
+
+Deletes and updates are applied in one place on both sides: every
+generation's ``GenDocs`` carries its live-docs mask
+(``codec.live_masks``), and the codec's decodes drop dead postings, so
+no kernel here takes a tombstone argument.
 """
 
 from __future__ import annotations
 
 import heapq
 from dataclasses import dataclass, field
-from itertools import repeat
 
 import numpy as np
 from pyspark.sql import DataFrame
@@ -34,52 +38,6 @@ from ckanext_extractor_spark.operators.codec import (
     decode_posting_blocks,
     decode_posting_list,
 )
-
-
-class DeadDocs:
-    """Tombstone lookup: doc_id -> kill_seq (the seq of the build/delete
-    that invalidated the doc's older postings). A posting row from a
-    generation with seq g is dead iff kill_seq > g. Vectorized lookup via
-    sorted arrays + searchsorted — no per-posting python.
-
-    Reference analog: Lucene per-segment liveDocs; the reference itself
-    delegates deletes to Solr (plugin.py:117-123), here owned natively so a
-    1-doc delete touches zero segment files (SURVEY.md Q6 tombstone plan).
-    """
-
-    __slots__ = ("doc_ids", "kill_seqs")
-
-    def __init__(self, pairs: "dict[int, int] | None" = None):
-        items = sorted((pairs or {}).items())
-        self.doc_ids = np.fromiter(
-            (d for d, _ in items), dtype=np.int64, count=len(items)
-        )
-        self.kill_seqs = np.fromiter(
-            (s for _, s in items), dtype=np.int64, count=len(items)
-        )
-
-    def __len__(self) -> int:
-        return len(self.doc_ids)
-
-    def live_mask(self, ids: np.ndarray, gen_seq: int) -> np.ndarray:
-        """Boolean mask of `ids` (sorted or not) still live at gen_seq."""
-        if len(self.doc_ids) == 0:
-            return np.ones(len(ids), dtype=bool)
-        idx = np.searchsorted(self.doc_ids, ids)
-        idx = np.minimum(idx, len(self.doc_ids) - 1)
-        found = self.doc_ids[idx] == ids
-        killed = found & (self.kill_seqs[idx] > gen_seq)
-        return ~killed
-
-
-def _row_gen_seq(row) -> int:
-    """Generation seq of a segment row; 0 for rows without one (single-
-    generation / standalone use)."""
-    try:
-        v = row["gen_seq"]
-        return int(v) if v is not None else 0
-    except (KeyError, ValueError, IndexError, TypeError):
-        return 0
 
 
 @dataclass
@@ -118,7 +76,6 @@ def load_term_postings(
     n_docs: int,
     avgdl: float,
     n_buckets: int = 64,
-    dead: "DeadDocs | None" = None,
 ) -> list[TermPostings]:
     """Read the query terms' segment rows of ONE generation (doc set
     ``docs``), decode, and merge salt shards per term. idf from the
@@ -137,7 +94,7 @@ def load_term_postings(
     for r in seg_df.collect():
         by_term.setdefault(r["term"], []).append(dict(r.asDict(), docs=docs))
     return [
-        term_postings_from_rows(term, shard_rows, n_docs, avgdl, dead=dead)
+        term_postings_from_rows(term, shard_rows, n_docs, avgdl)
         for term, shard_rows in by_term.items()
     ]
 
@@ -147,19 +104,15 @@ def term_postings_from_rows(
     shard_rows: list,
     n_docs: int,
     avgdl: float,
-    dead: "DeadDocs | None" = None,
 ) -> TermPostings:
     """Decode one term's segment rows (salt shards and/or generation
-    shards) into a merged TermPostings, dropping tombstoned postings,
-    with its BM25 impacts memoized for ``avgdl``. Each row carries its
-    generation's :class:`GenDocs` under ``"docs"`` (ordinals resolve
-    through it). Pure driver-side numpy."""
+    shards) into a merged TermPostings of live postings, with its BM25
+    impacts memoized for ``avgdl``. Each row carries its generation's
+    :class:`GenDocs` under ``"docs"``: ordinals resolve through it, and
+    its live mask drops dead postings. Pure driver-side numpy."""
     ids, tfs, dls = [], [], []
     for r in shard_rows:
         i, t, d = decode_posting_list(bytes(r["blob"]), r["docs"])
-        if dead is not None and len(dead):
-            keep = dead.live_mask(i, _row_gen_seq(r))
-            i, t, d = i[keep], t[keep], d[keep]
         ids.append(i)
         tfs.append(t)
         dls.append(d)
@@ -201,9 +154,9 @@ class LazyTermPostings:
     max(1, avgdl / generation avgdl) bound the scores at the current
     avgdl.
 
-    Valid ONLY when the index has no tombstones: df (hence idf) comes
-    from the rows' n_postings metadata, which counts dead postings too —
-    callers route tombstoned indexes to the eager decode path instead.
+    Valid ONLY when no generation has a dead ordinal: df (hence idf)
+    comes from the rows' n_postings metadata, which counts dead postings
+    too — callers route any other index to the eager decode path.
     """
 
     __slots__ = ("term", "n", "idf", "avgdl", "_rows", "_shards", "_small",
@@ -258,12 +211,11 @@ class LazyTermPostings:
 
     def materialize(self) -> TermPostings:
         """Full decode + shard merge — delegates to
-        term_postings_from_rows (the lazy path is tombstone-free by
-        construction) so the merge/argsort/block-max-rebuild logic
-        exists exactly once and cannot drift between the lazy and
+        term_postings_from_rows so the merge/argsort/block-max-rebuild
+        logic exists exactly once and cannot drift between the lazy and
         eager paths (code-review r5 finding)."""
         return term_postings_from_rows(
-            self.term, self._rows, self._n_docs, self.avgdl, dead=None)
+            self.term, self._rows, self._n_docs, self.avgdl)
 
     def probe_scores(self, cand: np.ndarray, k1: float = BM25_K1,
                      b: float = BM25_B) -> np.ndarray:
@@ -548,18 +500,16 @@ def exact_topk(
 def _topk_select(
     docs: np.ndarray, total: np.ndarray, k: int
 ) -> list[tuple[int, float]]:
-    """Top-k by (-score, doc_id). Candidates = every doc scoring >= the
-    k-th score (argpartition alone could keep the wrong member of a
-    boundary tie — doc_id must break ties, not partition order)."""
-    if docs.size == 0:
-        return []
-    kk = min(k, docs.size)
-    kth_score = np.partition(total, docs.size - kk)[docs.size - kk]
-    cand = total >= kth_score
-    cand_scores = total[cand]
-    cand_docs = docs[cand]
-    order = np.lexsort((cand_docs, -cand_scores))[:kk]
-    return [(int(cand_docs[i]), float(cand_scores[i])) for i in order]
+    """Top-k by (-score, doc_id). With more than k docs, candidates =
+    every doc scoring >= the k-th score (argpartition alone could keep
+    the wrong member of a boundary tie — doc_id must break ties, not
+    partition order); with at most k, every doc is one."""
+    if docs.size > k:
+        kth_score = np.partition(total, docs.size - k)[docs.size - k]
+        cand = total >= kth_score
+        docs, total = docs[cand], total[cand]
+    order = np.lexsort((docs, -total))[:k]
+    return [(int(docs[i]), float(total[i])) for i in order]
 
 
 def maxscore_topk(
@@ -801,43 +751,21 @@ def wand_topk_daat(
     return [(-d, s) for s, d in out]
 
 
-def tombstoned():
-    """True on a row (``gen_seq``) joined to the kills table (doc_id,
-    _kill_seq: the max tombstone seq per doc) whose doc was killed after
-    the row's generation was written; False where the doc has none."""
-    return F.coalesce(F.col("_kill_seq") > F.col("gen_seq"), F.lit(False))
-
-
-def drop_killed(rows: DataFrame, kills: DataFrame) -> DataFrame:
-    """``rows`` (with ``doc_id`` and ``gen_seq``) minus the rows a
-    tombstone in ``kills`` killed."""
-    return (
-        rows.join(kills, "doc_id", "left").where(~tombstoned())
-        .drop("_kill_seq")
-    )
-
-
 def decode_segments(
     segments: DataFrame,
     docs_bc,
     slot_of: "dict[str, int] | None",
-    dead_pairs: dict | None = None,
-    dead_df: "DataFrame | None" = None,
     with_positions: bool = False,
 ) -> DataFrame:
     """The one cluster-side segment decode: live postings of the segment
     rows whose term is in ``slot_of``, as rows ``(doc_id, slot, tf,
-    doc_len, gen_seq[, positions])`` with ``slot = slot_of[term]``; one
+    doc_len[, positions])`` with ``slot = slot_of[term]``; one
     ``decode_posting_list`` call per segment row. With ``slot_of=None``
     every row decodes and carries its ``term`` in place of ``slot`` (no
     term map ships in the closure). ``docs_bc`` broadcasts
-    ``{generation id: GenDocs}``, through which a row's ordinals resolve
-    by its ``gen`` column; ``gen_seq`` is the tombstone clock (0 when
-    absent). Tombstones come as ``ExtractorEngine._dead_for_distributed``
-    routes them: ``dead_pairs`` (doc_id -> kill_seq) in the task closure,
-    applied at decode, or ``dead_df`` (doc_id, _kill_seq) joined after it
-    (:func:`drop_killed`), so a bulk-delete backlog never serializes
-    into every task."""
+    ``{generation id: GenDocs}``; a row's ordinals resolve through its
+    ``gen`` column's entry, whose live mask drops dead postings, so
+    deletes and updates apply here and nowhere else."""
     import pandas as pd
 
     key, key_type, key_sql = (
@@ -846,28 +774,17 @@ def decode_segments(
     )
 
     def decode_part(batches):
-        dead = DeadDocs(dead_pairs) if dead_pairs else None
         gen_docs = docs_bc.value
         for pdf in batches:
-            gseqs = pdf["gen_seq"] if "gen_seq" in pdf.columns else repeat(0)
-            decoded, slots, seqs = [], [], []
-            for term, blob, gen, gseq in zip(
-                pdf["term"], pdf["blob"], pdf["gen"], gseqs
-            ):
+            decoded, slots = [], []
+            for term, blob, gen in zip(pdf["term"], pdf["blob"], pdf["gen"]):
                 slot = term if slot_of is None else slot_of.get(term)
                 if slot is None:
                     continue
-                cols = decode_posting_list(
+                decoded.append(decode_posting_list(
                     bytes(blob), gen_docs[gen], with_positions
-                )
-                if dead is not None:
-                    keep = dead.live_mask(cols[0], int(gseq))
-                    cols = [c[keep] for c in cols[:3]] + [
-                        [p for p, kp in zip(c, keep) if kp] for c in cols[3:]
-                    ]
-                decoded.append(cols)
+                ))
                 slots.append(slot)
-                seqs.append(gseq)
             if not decoded:
                 continue
             lens = [len(cols[0]) for cols in decoded]
@@ -876,7 +793,6 @@ def decode_segments(
                 key: np.repeat(np.asarray(slots, dtype=key_type), lens),
                 "tf": np.concatenate([cols[1] for cols in decoded]),
                 "doc_len": np.concatenate([cols[2] for cols in decoded]),
-                "gen_seq": np.repeat(np.asarray(seqs, dtype=np.int64), lens),
             }
             if with_positions:
                 out["positions"] = pd.Series(
@@ -884,23 +800,20 @@ def decode_segments(
                 )
             yield pd.DataFrame(out)
 
-    schema = f"doc_id long, {key} {key_sql}, tf long, doc_len long, gen_seq long"
+    schema = f"doc_id long, {key} {key_sql}, tf long, doc_len long"
     if with_positions:
         schema += ", positions array<long>"
-    rows = segments.mapInPandas(decode_part, schema)
-    return rows if dead_df is None else drop_killed(rows, dead_df)
+    return segments.mapInPandas(decode_part, schema)
 
 
-def _scored_rows(segments, docs_bc, terms_idf, avgdl, dead_pairs,
-                 dead_df) -> DataFrame:
-    """(doc_id, slot, gen_seq, term_score) of the :func:`decode_segments`
-    rows of ``terms_idf``'s terms (slot = position in it): BM25 as one
+def _scored_rows(segments, docs_bc, terms_idf, avgdl) -> DataFrame:
+    """(doc_id, slot, term_score) of the :func:`decode_segments` rows of
+    ``terms_idf``'s terms (slot = position in it): BM25 as one
     Catalyst expression, in :func:`_bm25`'s operation order. It is
     built from SQL text because every Column call is a Py4J round trip,
     and there are dozens of them in one BM25 tree."""
     rows = decode_segments(
-        segments, docs_bc, {t: i for i, t in enumerate(terms_idf)},
-        dead_pairs, dead_df,
+        segments, docs_bc, {t: i for i, t in enumerate(terms_idf)}
     )
     k1, b = BM25_K1, BM25_B
     idf = ", ".join(f"{float(v)!r}D" for v in terms_idf.values())
@@ -908,17 +821,7 @@ def _scored_rows(segments, docs_bc, terms_idf, avgdl, dead_pairs,
         f"array({idf})[slot] * tf * {k1 + 1.0!r}D / (tf + {k1!r}D"
         f" * ({1.0 - b!r}D + {b!r}D * doc_len / {float(avgdl)!r}D))"
     )
-    return rows.select("doc_id", "slot", "gen_seq", score.alias("term_score"))
-
-
-def _newest_generation(scored: DataFrame) -> DataFrame:
-    """One ``term_score`` per (doc_id, slot): should a duplicate live
-    generation survive tombstone filtering, the NEWEST wins instead of
-    double-counting (max(struct) partial-aggregates map-side)."""
-    return scored.groupBy("doc_id", "slot").agg(
-        F.max(F.struct("gen_seq", "term_score"))
-        .getField("term_score").alias("term_score")
-    )
+    return rows.select("doc_id", "slot", score.alias("term_score"))
 
 
 def scored_terms_distributed(
@@ -926,22 +829,16 @@ def scored_terms_distributed(
     docs_bc,
     terms_idf: dict[str, float],
     avgdl: float,
-    dead_pairs: dict | None = None,
-    dead_df: "DataFrame | None" = None,
 ) -> DataFrame:
     """Per-(doc, term) BM25 contributions, fully cluster-side: the
-    scored decode rows of :func:`_scored_rows`, newest generation per
-    (doc, term). ``docs_bc`` and the tombstone arguments are those of
+    scored decode rows of :func:`_scored_rows`. ``docs_bc`` is that of
     :func:`decode_segments`, the one decode plan. The distributed
     boolean-expression evaluator builds its per-leaf flag/score columns
     from this ONE scan: the whole AST then compiles to a single Catalyst
     expression over the per-doc pivot, so an arbitrarily nested query
     costs one segments scan + one shuffle regardless of clause count."""
-    scored = _scored_rows(
-        segments, docs_bc, terms_idf, avgdl, dead_pairs, dead_df
-    )
     term = F.array(*[F.lit(t) for t in terms_idf])[F.col("slot")]
-    return _newest_generation(scored).select(
+    return _scored_rows(segments, docs_bc, terms_idf, avgdl).select(
         "doc_id", term.alias("term"), "term_score"
     )
 
@@ -955,8 +852,6 @@ def query_segments_distributed(
     k: "int | None",
     conjunctive: bool = True,
     n_query_terms: int | None = None,
-    dead_pairs: dict | None = None,
-    dead_df: "DataFrame | None" = None,
     min_match: int | None = None,
     include_df: "DataFrame | None" = None,
     exclude_df: "DataFrame | None" = None,
@@ -964,11 +859,9 @@ def query_segments_distributed(
 ) -> DataFrame:
     """Cluster-scale top-k for lists too large to collect: the scored
     decode rows of :func:`_scored_rows` summed per doc, then a global
-    TakeOrdered. ``docs_bc`` and the tombstone arguments are those of
-    :func:`decode_segments`, the one decode plan; ``terms_idf`` must be
-    live-df-based. With ``dead_df`` the newest generation per (doc, term)
-    wins first, so a duplicate live generation cannot inflate n_matched
-    past nq and evict true conjunctive matches.
+    TakeOrdered. ``docs_bc`` is that of :func:`decode_segments`, the one
+    decode plan, which leaves one live posting per (doc, term), so
+    n_matched counts distinct query terms.
 
     ``after=(score, doc_id)`` is Lucene's searchAfter / Solr cursorMark:
     only docs STRICTLY after the cursor in (score desc, doc_id asc)
@@ -977,11 +870,7 @@ def query_segments_distributed(
     re-aggregated score differs in the last ulp could straddle the
     cursor, the noise floor Lucene accepts for searchAfter too."""
     nq = n_query_terms or len(terms_idf)
-    scored = _scored_rows(
-        segments, docs_bc, terms_idf, avgdl, dead_pairs, dead_df
-    )
-    if dead_df is not None:
-        scored = _newest_generation(scored)
+    scored = _scored_rows(segments, docs_bc, terms_idf, avgdl)
     per_doc = scored.groupBy("doc_id").agg(
         F.sum("term_score").alias("score"),
         F.count("*").cast("int").alias("n_matched"),

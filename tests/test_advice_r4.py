@@ -39,6 +39,19 @@ def engine(spark, tmp_path_factory):
 # ---- scored_terms_distributed: duplicate live generation is deduped
 
 
+def _masked_docs_bc(spark, gens, tombs=()):
+    """Broadcast {gen id: GenDocs with its live mask} for ``gens``
+    ((gen id, seq, GenDocs)), masks from the engine's builder."""
+    from ckanext_extractor_spark.operators.codec import live_masks
+
+    ids = np.array([d for d, _ in tombs], dtype=np.int64)
+    seqs = np.array([s for _, s in tombs], dtype=np.int64)
+    masked = live_masks([(s, d) for _, s, d in gens], ids, seqs)
+    return spark.sparkContext.broadcast(
+        {g: d for (g, _, _), d in zip(gens, masked)}
+    )
+
+
 def test_scored_terms_dedupes_duplicate_generations(spark):
     from ckanext_extractor_spark.operators.codec import (
         GenDocs,
@@ -52,7 +65,7 @@ def test_scored_terms_dedupes_duplicate_generations(spark):
     tfs = np.array([2, 1], dtype=np.int64)
     dls = np.array([10, 10], dtype=np.int64)
     docs = GenDocs.of(ids, dls)
-    docs_bc = spark.sparkContext.broadcast({"g0": docs, "g1": docs})
+    docs_bc = _masked_docs_bc(spark, [("g0", 0, docs), ("g1", 1, docs)])
     enc = encode_posting_list(ids, tfs, None, docs, avgdl=10.0)
     rows = [
         ("spark", bytearray(enc["blob"]), 0, "g0"),
@@ -75,7 +88,8 @@ def test_scored_terms_dedupes_duplicate_generations(spark):
     base = {
         (r["doc_id"], r["term"]): r["term_score"]
         for r in scored_terms_distributed(
-            single, docs_bc, {"spark": 1.0}, avgdl=10.0
+            single, _masked_docs_bc(spark, [("g0", 0, docs)]),
+            {"spark": 1.0}, avgdl=10.0,
         ).collect()
     }
     assert out == base  # newest-generation wins, never a 2x sum
@@ -101,11 +115,12 @@ def test_scored_terms_dedupes_with_tombstone_join(spark):
         "term string, blob binary, gen_seq long, gen string",
     )
     # tombstone kills gen 0 of doc 5; gen 1 survives — exactly one row
-    dead = spark.createDataFrame([(5, 1)], "doc_id long, _kill_seq long")
     out = scored_terms_distributed(
-        seg, spark.sparkContext.broadcast({"g0": docs, "g1": docs}),
+        seg,
+        _masked_docs_bc(
+            spark, [("g0", 0, docs), ("g1", 1, docs)], tombs=[(5, 1)]
+        ),
         {"spark": 1.0}, avgdl=10.0,
-        dead_df=dead,
     ).collect()
     assert len(out) == 1 and out[0]["doc_id"] == 5
 

@@ -149,8 +149,7 @@ def test_compaction_reclaims_and_preserves_results(spark, tmp_path, base_pdf):
     eng2 = ExtractorEngine(spark, str(tmp_path / "idxc"))
     assert search_map(eng2, "data value") == before
     # tombstone table was GC'd down (nothing older than the compacted gen)
-    dead = eng2._dead_docs()
-    assert len(dead) == 0
+    assert eng2.index_stats()["tombstones"] == 0
 
 
 def test_build_lock_matrix(spark, tmp_path, base_pdf):

@@ -12,9 +12,8 @@ operators/ + analysis/, each fixed):
    raising 'dangling NOT'.
 5. bm25_search clamps k to the corpus (the fetch-everything OOM
    class; the synonyms sibling already had the clamp).
-6. query_segments_distributed dedupes duplicate live generations per
-   (doc, term) — newest wins — via a term-ordinal so the slimmed
-   exchange never carries term strings.
+6. query_segments_distributed counts a doc held by two generations
+   once — the live masks keep only the newest generation's postings.
 7. LazyTermPostings.materialize delegates to term_postings_from_rows
    (single copy of the merge/block-max rebuild).
 """
@@ -153,50 +152,57 @@ def test_bm25_search_huge_k_clamped(spark):
 # ---- 6: duplicate live generations dedup (distributed query) --------------
 
 def test_distributed_query_dedupes_duplicate_generations(spark):
-    """Two generations both carrying a live posting for the same
-    (doc, term) — the invariant violation scored_terms_distributed and
-    the phrase kernel already defend against — must not double-count
-    the score or inflate n_matched past nq (which would evict a true
-    conjunctive match)."""
+    """Two generations both carrying postings for the same (doc, term)
+    must not double-count the score or inflate n_matched past nq (which
+    would evict a true conjunctive match): the newest generation's
+    postings are the live ones."""
     import numpy as np
 
     from ckanext_extractor_spark.operators.codec import (
         GenDocs,
         encode_posting_list,
+        live_masks,
     )
     from ckanext_extractor_spark.operators.wand import (
         query_segments_distributed,
     )
 
     avgdl = 10.0
-    docs = GenDocs.of([1, 2], [10, 8])
+    # generation 1 re-indexed doc 1; its doc set holds only that doc
+    gen_docs = {0: GenDocs.of([1, 2], [10, 8]), 1: GenDocs.of([1], [10])}
 
     def seg_row(term, gen, ids, tfs, dls):
         e = encode_posting_list(
             np.asarray(ids, dtype=np.int64),
-            np.asarray(tfs, dtype=np.int64), None, docs, avgdl,
+            np.asarray(tfs, dtype=np.int64), None, gen_docs[gen], avgdl,
         )
         return (term, e["blob"], int(gen), f"g{gen}")
 
-    # doc 1 matches both terms; its 'alpha' posting appears LIVE in
-    # generations 0 AND 1 (gen-1 tf differs so the newest-wins rule is
+    # doc 1 matches both terms; its postings appear in generations 0
+    # AND 1 (gen-1 alpha tf differs so the newest-wins rule is
     # observable); doc 2 matches both terms once.
     rows = [
         seg_row("alpha", 0, [1, 2], [3, 1], [10, 8]),
         seg_row("alpha", 1, [1], [5], [10]),
         seg_row("beta", 0, [1, 2], [2, 2], [10, 8]),
+        seg_row("beta", 1, [1], [2], [10]),
     ]
     seg = spark.createDataFrame(
         rows, "term string, blob binary, gen_seq long, gen string"
     )
-    # empty kills frame -> use_join path (dedup lives there)
-    dead_df = spark.createDataFrame([], "doc_id long, _kill_seq long")
+    # no tombstones: the newest-generation rule alone masks gen 0's doc 1
+    masked = live_masks(
+        [(0, gen_docs[0]), (1, gen_docs[1])],
+        np.array([], dtype=np.int64), np.array([], dtype=np.int64),
+    )
     idf = {"alpha": 1.0, "beta": 1.0}
     got = {r["doc_id"]: r for r in query_segments_distributed(
-        spark, seg, spark.sparkContext.broadcast({"g0": docs, "g1": docs}),
+        spark, seg, spark.sparkContext.broadcast(
+            {"g0": masked[0], "g1": masked[1]}
+        ),
         idf, avgdl, 10,
         conjunctive=True,
-        n_query_terms=2, dead_df=dead_df,
+        n_query_terms=2,
     ).collect()}
     # doc 1 must SURVIVE the conjunctive gate (n_matched == 2, not 3)
     assert set(got) == {1, 2}

@@ -57,20 +57,22 @@ def brute(term_lists, k, avgdl, conjunctive):
 @pytest.mark.parametrize("conjunctive", [True, False])
 def test_boundary_ties_resolved_by_doc_id(conjunctive):
     """Many docs with IDENTICAL (tf, dl) -> identical scores; the k-th
-    boundary must keep the smallest doc_ids."""
+    boundary must keep the smallest doc_ids. k=150 is the case of fewer
+    candidates than k: every doc comes back, doc_id ascending."""
     n_docs, avgdl = 1000, 50.0
     doc_ids = np.arange(100, 0, -1) * 7  # descending insert order
     tp = make_tp("t", doc_ids, np.ones(100), np.full(100, 50), n_docs, avgdl)
-    want = brute([tp], 10, avgdl, conjunctive)
-    assert [d for d, _ in exact_topk([tp], 10, avgdl, conjunctive)] == [
-        d for d, _ in want
-    ]
-    assert [d for d, _ in wand_topk([tp], 10, avgdl, conjunctive)] == [
-        d for d, _ in want
-    ]
-    assert [d for d, _ in maxscore_topk([tp], 10, avgdl, conjunctive)] == [
-        d for d, _ in want
-    ]
+    for k in (10, 150):
+        want = brute([tp], k, avgdl, conjunctive)
+        assert [d for d, _ in exact_topk([tp], k, avgdl, conjunctive)] == [
+            d for d, _ in want
+        ]
+        assert [d for d, _ in wand_topk([tp], k, avgdl, conjunctive)] == [
+            d for d, _ in want
+        ]
+        assert [d for d, _ in maxscore_topk([tp], k, avgdl, conjunctive)] == [
+            d for d, _ in want
+        ]
 
 
 @pytest.mark.parametrize("conjunctive", [True, False])

@@ -54,13 +54,13 @@ def main() -> None:
     orig = ph._positions_by_doc
     n_arrays = {"v": 0}
 
-    def counting(row, dead, wanted=None):
-        m = orig(row, dead, wanted)
+    def counting(row, wanted=None):
+        m = orig(row, wanted)
         n_arrays["v"] += len(m)
         return m
 
-    def counting_full(row, dead, wanted=None):
-        m = orig(row, dead, None)  # r4 behavior: decode everything
+    def counting_full(row, wanted=None):
+        m = orig(row, None)  # r4 behavior: decode everything
         n_arrays["v"] += len(m)
         return m
 
