@@ -15,8 +15,12 @@ file, so tables written under another codec still read. An Iceberg
 catalog slot-in would change only the read/write format strings:
     staging/raw_postings/<build_id>/   tokenize checkpoint (resume point),
                                        dropped once the generation commits
-    gens/<gen_id>/segments/            encoded blobs, partitioned term_bucket;
-                                       the only stored copy of the postings
+    gens/<gen_id>/segments/            encoded blobs, partitioned term_bucket
+                                       into the generation's own bucket count
+                                       (its ``n_buckets`` entry in the meta:
+                                       one per TOKENS_PER_BUCKET tokens, at
+                                       most the index-level n_buckets); the
+                                       only stored copy of the postings
     gens/<gen_id>/docs/                (doc_id, doc_len) of the generation's
                                        docs; postings store ordinals into
                                        its sorted doc ids
@@ -30,6 +34,7 @@ catalog slot-in would change only the read/write format strings:
     doc_manifest/                      status machine state
     lineage/                           per-partition build metrics
     index_meta.json                    structural config + generation list
+                                       (gen id, seq, n_docs, n_buckets)
     .build_lock                        in-progress marker (B4 concurrency)
 
 LSM-style maintenance (SURVEY.md Q6/B2; Lucene-segment analog — the
@@ -888,19 +893,14 @@ class ExtractorEngine:
         _t = time.perf_counter()
 
         def t_encode():
-            # df-driven salting within this generation: hot terms split
-            # by doc-hash so no single encode task owns a whole hot
-            # list. Direct partitioned write from the encode tasks — NO
-            # second exchange: the encode shuffle is keyed by
-            # (term_bucket, salt_id), so every key lives wholly in one
-            # task and the file count is ~#distinct (bucket, salt) keys.
-            # Rows leave the kernel already term-lexical within each
-            # task, so parquet min/max row-group pruning on `term` works.
-            salted = salted_postings_auto(
-                delta_postings, self.n_buckets, self.salt_threshold
-            )
-            self._encode_and_write_segments(
-                salted,
+            # Direct partitioned write from the encode tasks — NO second
+            # exchange: the encode shuffle is keyed by (term_bucket,
+            # salt_id), so every key lives wholly in one task and the
+            # file count is ~#distinct (bucket, salt) keys. Rows leave
+            # the kernel already term-lexical within each task, so
+            # parquet min/max row-group pruning on `term` works.
+            gen["n_buckets"] = self._encode_and_write_segments(
+                delta_postings,
                 gen_docs,
                 self._encode_tasks(n_delta_rows),
                 self._p("gens", build_id, "segments"),
@@ -1223,23 +1223,13 @@ class ExtractorEngine:
             self._tomb_count = None
 
     def _tombstone_count(self) -> int:
-        """Number of tombstone rows — parquet metadata locally (zero data
-        read), else a cheap Spark count; cached either way. Reported by
-        index_stats() and counted into significant_terms' background."""
+        """Number of committed tombstone rows (seq at or below the
+        committed seq: a failed build's rows apply to nothing); cached.
+        Reported by index_stats() and counted into significant_terms'
+        background."""
         if self._tomb_count is None:
-            p = self._p("tombstones")
-            if self.fs.is_local:
-                if not self.fs.exists(p):
-                    self._tomb_count = 0
-                else:
-                    from ckanext_extractor_spark.operators.segread import (
-                        count_rows,
-                    )
-
-                    self._tomb_count = count_rows(p)
-            else:
-                tomb = self._read_or_none("tombstones")
-                self._tomb_count = int(tomb.count()) if tomb is not None else 0
+            _, seqs = self._read_tombstones()
+            self._tomb_count = int((seqs <= self._seq).sum())
         return self._tomb_count
 
     def corpus_stats(self) -> dict:
@@ -2175,10 +2165,8 @@ class ExtractorEngine:
                 )
                 docs = self._read_gen_docs(docs_path)
                 if docs.doc_ids.size:
-                    self._encode_and_write_segments(
-                        salted_postings_auto(
-                            live, self.n_buckets, self.salt_threshold
-                        ),
+                    nb = self._encode_and_write_segments(
+                        live,
                         docs,
                         self._encode_tasks(None),
                         self._p("gens", new_id, "segments"),
@@ -2188,6 +2176,7 @@ class ExtractorEngine:
                             "gen": new_id,
                             "seq": new_seq,
                             "n_docs": int(docs.doc_ids.size),
+                            "n_buckets": nb,
                         }
                     )
                     self._gen_docs_memo[(new_id, new_seq)] = docs
@@ -2723,7 +2712,8 @@ class ExtractorEngine:
 
         dfs = [
             read_segments(
-                self.spark, self._gen_segments_path(g), terms, self.n_buckets
+                self.spark, self._gen_segments_path(g), terms,
+                self._gen_buckets(g),
             )
             .withColumn("gen_seq", F.lit(int(g["seq"])))
             .withColumn("gen", F.lit(g["gen"]))
@@ -2872,6 +2862,7 @@ class ExtractorEngine:
     # the per-batch overhead savings). Do not "optimize" this upward
     # without a paired measurement.
     ENCODE_ROWS_PER_TASK = 500_000  # ~64 MB of posting rows per sort/encode task
+    TOKENS_PER_BUCKET = 65_536  # tokens per term bucket of a generation
 
     def _encode_tasks(self, n_rows: int | None) -> int:
         """Size the segment-encode shuffle by DATA, not cores: oversized
@@ -2887,44 +2878,39 @@ class ExtractorEngine:
         return min(want, 4096)
 
     def _encode_and_write_segments(
-        self, salted: DataFrame, docs: GenDocs, n_tasks: int, path: str
-    ) -> None:
+        self, postings: DataFrame, docs: GenDocs, n_tasks: int, path: str
+    ) -> int:
         """Encode + atomically publish one generation's segments (doc set
-        ``docs``).
-
-        Uses the hash-keyed exchange (posting rows ship xxhash64(term);
-        term strings cross once per shard as sentinel dictionary rows —
-        measured ~2x on the encode stage) when positions are on. An
-        xxhash64 collision between two distinct terms is detected
-        in-kernel and aborts the write; this retries ONCE with the
-        string-keyed exchange, which has no collision mode."""
-        tried_hash = self.with_positions
+        ``docs``) into ``_bucket_count(docs)`` term buckets, returned for
+        the generation's meta entry. Salting is df-driven within the
+        generation: hot terms split by doc hash, so no single encode task
+        owns a whole hot list."""
+        n_buckets = self._bucket_count(docs)
         segments = encode_segments(
-            salted,
+            salted_postings_auto(postings, n_buckets, self.salt_threshold),
             docs,
             with_positions=self.with_positions,
             n_tasks=n_tasks,
-            n_buckets=self.n_buckets,
-            hash_terms=tried_hash,
+            n_buckets=n_buckets,
         )
-        try:
-            _atomic_overwrite(
-                segments, path, spark=self.spark, write=write_segments
-            )
-        except Exception as e:  # noqa: BLE001 - routed on message below
-            if not (tried_hash and "term-hash collision" in str(e)):
-                raise
-            segments = encode_segments(
-                salted,
-                docs,
-                with_positions=self.with_positions,
-                n_tasks=n_tasks,
-                n_buckets=self.n_buckets,
-                hash_terms=False,
-            )
-            _atomic_overwrite(
-                segments, path, spark=self.spark, write=write_segments
-            )
+        _atomic_overwrite(segments, path, spark=self.spark, write=write_segments)
+        return n_buckets
+
+    def _bucket_count(self, docs: GenDocs) -> int:
+        """Term buckets for a generation of ``docs``: one per
+        TOKENS_PER_BUCKET of its tokens, at least one and at most the
+        index-level ``n_buckets``. Every segment file has a fixed write and
+        open cost, so a small generation gets few buckets; it depends on
+        the doc set alone, so a compaction gets the count a fresh build of
+        the same live docs gets."""
+        tokens = int(docs.doc_lens.sum())
+        return min(self.n_buckets, max(1, -(-tokens // self.TOKENS_PER_BUCKET)))
+
+    def _gen_buckets(self, g: dict) -> int:
+        """The bucket count generation ``g`` was written with: its meta
+        entry, or the index-level ``n_buckets`` for a generation written
+        before the count was recorded per generation."""
+        return int(g.get("n_buckets", self.n_buckets))
 
     #: canonical segment-row columns (what the Spark union path collects)
     _SEGMENT_ROW_COLUMNS = (
@@ -2961,7 +2947,9 @@ class ExtractorEngine:
             p = self._gen_segments_path(g)
             if not self.fs.exists(p) or not self._has_part_files(p):
                 continue
-            rows = read_segment_rows(p, terms, self.n_buckets, columns=want)
+            rows = read_segment_rows(
+                p, terms, self._gen_buckets(g), columns=want
+            )
             docs = self._gen_docs(g) if columns is None and rows else None
             for r in rows:
                 r["gen_seq"] = int(g["seq"])

@@ -3,9 +3,14 @@
 `search.rebuild`, tasks.py:110 — here owned natively).
 
 B1 — postings shuffle.  Postings repartition by `term_bucket =
-pmod(xxhash64(term), n_buckets)`.  Hot terms (df above `salt_threshold`)
-additionally split by `pmod(xxhash64(doc_id), salt_factor)` so no single
-task owns a whole hot posting list while encoding: the north rule's
+pmod(xxhash64(term), n_buckets)`, where `n_buckets` is the generation's
+own bucket count: the engine sizes it to the generation's tokens (one
+bucket per `ExtractorEngine.TOKENS_PER_BUCKET`, capped by the index-level
+`n_buckets`) and records it in the generation's `index_meta.json` entry,
+so a small generation writes a few files, not one per bucket of the cap.
+Hot terms (df above `salt_threshold`) additionally split by
+`pmod(xxhash64(doc_id), salt_factor)` so no single task owns a whole hot
+posting list while encoding: the north rule's
 "repartition by term hash with salting for skewed terms".  The salt factor
 per term comes from the dictionary (a broadcast join — dictionary
 cardinality ≪ postings).
@@ -26,7 +31,8 @@ Output table `segments`:
 block_last_doc holds doc ordinals; all three block arrays are empty for a
 list of at most one block (codec.py).
 written by `write_segments` as Parquet partitioned by term_bucket ->
-query-time partition pruning reads only the buckets of the query's terms.
+query-time partition pruning reads only the buckets of the query's terms,
+hashed with the generation's bucket count.
 Pages are zstd and `blob` carries no column statistics (fsio's
 PARQUET_WRITE_OPTIONS); `term` keeps min/max for row-group pruning.
 """
@@ -149,7 +155,6 @@ def encode_segments(
     with_positions: bool = True,
     n_tasks: int | None = None,
     n_buckets: int = 64,
-    hash_terms: bool = False,
 ) -> DataFrame:
     """Encode posting blobs: repartition by (term_bucket, salt_id), then a
     mapInArrow kernel that sorts and encodes each partition in one
@@ -175,6 +180,12 @@ def encode_segments(
     ~#groups-sized output, with the same pmod(xxhash64(term), n_buckets)
     the query-time pruner uses.
 
+    Why the term STRING rides every posting row: an exchange keyed by
+    xxhash64(term), with each term string shipped once per shard as a
+    sentinel row, wrote the same segment rows but was slower on a 4-vCPU
+    host (encode + write: 1.77 s vs 2.29 s at 4k files, 7.55 s vs 9.24 s
+    at 40k), and it needed an in-kernel collision check and a retry.
+
     Why not groupBy().applyInPandas: it materializes each group as ONE
     pandas frame of python objects — measured to thrash the allocator and
     anti-scale with workers.
@@ -197,9 +208,10 @@ def encode_segments(
     caps any single (bucket, salt) key, so "the whole partition" is tens
     of MB, same order as one sort buffer.
 
-    ``n_buckets`` MUST equal the n_buckets used by salted_postings /
-    query-time pruning (read_segments) — it re-derives the term_bucket
-    partition column on the kernel output."""
+    ``n_buckets`` is the generation's bucket count and MUST equal the
+    one given to salted_postings and to query-time pruning
+    (read_segments, segread.read_segment_rows) — it re-derives the
+    term_bucket partition column on the kernel output."""
 
     docs_bc = salted.sparkSession.sparkContext.broadcast(docs)
     avgdl = docs.avgdl
@@ -275,85 +287,27 @@ def encode_segments(
         gd = docs_bc.value
         docs_all = tbl.column("doc_id").chunk(0).to_numpy()
         tfs_all = tbl.column("tf").chunk(0).to_numpy()
-        if hash_terms:
-            # hash-keyed exchange: posting rows carry xxhash64(term), the
-            # term STRING crossed the shuffle only once per (term, shard)
-            # as a sentinel dictionary row (tf == -1, UTF-8 term
-            # bytes in the positions column). Recover term strings from
-            # the dictionary rows, rank them lexically (UTF-8 byte order
-            # == code-point order), map postings th -> lexical code via
-            # searchsorted. A th collision between two distinct terms is
-            # DETECTED here (their dictionary rows co-land with any mixed
-            # shard) and aborts the build — the caller retries with the
-            # string exchange.
-            th_all = tbl.column("th").chunk(0).to_numpy()
-            dmask = tfs_all == -1
-            dict_idx = np.flatnonzero(dmask)
-            post_idx = np.flatnonzero(~dmask)
-            if post_idx.size == 0:
-                return
-            pos_col = tbl.column("positions").chunk(0)
-            dterms = np.array(
-                pos_col.take(pa.array(dict_idx, type=pa.int64())).to_pylist(),
-                dtype=object,
-            )
-            dth = th_all[dict_idx]
-            uth, first_i, inv = np.unique(
-                dth, return_index=True, return_inverse=True
-            )
-            same = dterms == dterms[first_i][inv]
-            if not bool(np.all(same)):
-                j = int(np.flatnonzero(~same)[0])
-                raise ValueError(
-                    "term-hash collision: "
-                    f"{dterms[j]!r} vs {dterms[first_i[inv[j]]]!r}"
-                )
-            uterms = dterms[first_i]  # aligned with uth (ascending th)
-            lex = np.argsort(uterms)
-            rank = np.empty(len(uth), dtype=np.int64)
-            rank[lex] = np.arange(len(uth))
-            th_post = th_all[post_idx]
-            pos_in = np.searchsorted(uth, th_post)
-            if pos_in.size and (
-                (pos_in >= len(uth)).any()
-                or (uth[np.minimum(pos_in, len(uth) - 1)] != th_post).any()
-            ):
-                raise ValueError(
-                    "posting row with no dictionary row for its term hash"
-                )
-            codes = rank[pos_in]
-            ords = gd.ordinals(docs_all[post_idx])
-            order_local = np.lexsort((ords, codes))
-            order = post_idx[order_local]
-            ords_s = ords[order_local]
-            codes = codes[order_local]
-            sorted_dict = pa.array(
-                uterms[lex].tolist(), type=pa.binary()
-            ).cast(pa.string())
-        else:
-            denc = tbl.column("term").chunk(0).dictionary_encode()
-            # LEXICAL term codes (not raw dictionary codes): the kernel's
-            # output is written partitionBy(term_bucket) with no further
-            # exchange, so the row order here IS the file order — lexical
-            # order gives parquet row-group min/max pruning on `term` at
-            # read time. Ranking costs one string sort over the ~#unique
-            # terms of the partition, never over the posting rows.
-            dict_order = pc.sort_indices(denc.dictionary)
-            rank = np.empty(len(denc.dictionary), dtype=np.int64)
-            rank[dict_order.to_numpy()] = np.arange(len(denc.dictionary))
-            codes = rank[denc.indices.to_numpy()]
-            # grouped sort: term (lexical), doc ordinal within. Shards of the
-            # same term that hash-collide into this task merge into one
-            # group — read-time shard merging makes that equivalent (and
-            # the codec sorts per group, so the blob is deterministic
-            # either way).
-            ords = gd.ordinals(docs_all)
-            order = np.lexsort((ords, codes))
-            ords_s = ords[order]
-            codes = codes[order]
-            sorted_dict = pc.take(denc.dictionary, dict_order).cast(
-                pa.string()
-            )
+        denc = tbl.column("term").chunk(0).dictionary_encode()
+        # LEXICAL term codes (not raw dictionary codes): the kernel's
+        # output is written partitionBy(term_bucket) with no further
+        # exchange, so the row order here IS the file order — lexical
+        # order gives parquet row-group min/max pruning on `term` at
+        # read time. Ranking costs one string sort over the ~#unique
+        # terms of the partition, never over the posting rows.
+        dict_order = pc.sort_indices(denc.dictionary)
+        rank = np.empty(len(denc.dictionary), dtype=np.int64)
+        rank[dict_order.to_numpy()] = np.arange(len(denc.dictionary))
+        codes = rank[denc.indices.to_numpy()]
+        # grouped sort: term (lexical), doc ordinal within. Shards of the
+        # same term that hash-collide into this task merge into one
+        # group — read-time shard merging makes that equivalent (and
+        # the codec sorts per group, so the blob is deterministic
+        # either way).
+        ords = gd.ordinals(docs_all)
+        order = np.lexsort((ords, codes))
+        ords_s = ords[order]
+        codes = codes[order]
+        sorted_dict = pc.take(denc.dictionary, dict_order).cast(pa.string())
         # per-column numpy gathers instead of a full-table Arrow take:
         # a table take would copy EVERY posting row's term string, but
         # only group heads ever need one — positions is the lone column
@@ -402,48 +356,10 @@ def encode_segments(
         )
 
     nt = n_tasks or salted.sparkSession.conf.get("spark.sql.shuffle.partitions")
-    tf_expr = F.col("tf").cast("long").alias("tf")
-    if hash_terms and with_positions:
-        # slimmest exchange: 4 columns, all but positions fixed-width —
-        # the term STRING rides the shuffle once per (term, shard) as a
-        # sentinel dictionary row (tf == -1, term bytes in the positions
-        # column; a real posting always has tf >= 1), not
-        # once per posting row. The dictionary branch re-scans staging
-        # but projects only (term_bucket, salt_id, term) and its partial
-        # distinct collapses map-side to ~vocabulary rows.
-        posting_rows = salted.select(
-            "term_bucket",
-            "salt_id",
-            F.xxhash64("term").alias("th"),
-            F.col("doc_id"),
-            tf_expr,
-            F.col("positions"),
-        )
-        dict_rows = (
-            salted.select("term_bucket", "salt_id", "term")
-            .distinct()
-            .select(
-                "term_bucket",
-                "salt_id",
-                F.xxhash64("term").alias("th"),
-                F.lit(0).cast("long").alias("doc_id"),
-                F.lit(-1).cast("long").alias("tf"),
-                F.encode(F.col("term"), "UTF-8").alias("positions"),
-            )
-        )
-        arranged = (
-            posting_rows.unionByName(dict_rows)
-            .repartition(int(nt), "term_bucket", "salt_id")
-            .select("th", "doc_id", "tf", "positions")
-        )
-    else:
-        hash_terms = False  # positions column is the dict-row carrier
-        cols = [F.col("term"), F.col("doc_id"), tf_expr]
-        if with_positions:
-            cols.append(F.col("positions"))
-        arranged = (
-            salted.repartition(int(nt), "term_bucket", "salt_id").select(*cols)
-        )
+    cols = [F.col("term"), F.col("doc_id"), F.col("tf").cast("long").alias("tf")]
+    if with_positions:
+        cols.append(F.col("positions"))
+    arranged = salted.repartition(int(nt), "term_bucket", "salt_id").select(*cols)
     encoded = arranged.mapInArrow(encode_stream, schema=KERNEL_SCHEMA)
     return encoded.withColumn(
         "term_bucket",
@@ -458,15 +374,18 @@ def write_segments(segments: DataFrame, path: str, mode: str = "overwrite") -> N
     The engine's only segment writer. It writes straight from the encode
     tasks, with no second exchange: the encode shuffle is keyed by
     (term_bucket, salt_id), so a bucket gets one file per encode task that
-    holds any of its (bucket, salt) keys. Rows leave the kernel
-    term-lexical within each task, so min/max on `term` prunes row groups
-    at read."""
+    holds any of its (bucket, salt) keys — at most (generation bucket
+    count × encode tasks) files, each with a fixed open/footer cost, which
+    is why the engine sizes the bucket count to the generation. Rows leave
+    the kernel term-lexical within each task, so min/max on `term` prunes
+    row groups at read."""
     write_table(segments, path, mode=mode, partition_by="term_bucket")
 
 
 def read_segments(spark, path: str, terms: list[str] | None = None,
                   n_buckets: int = 64) -> DataFrame:
-    """Read back, pruning to the buckets of `terms` when given.
+    """Read back, pruning to the buckets of `terms` when given;
+    ``n_buckets`` is the bucket count the generation was written with.
 
     Only the ``term_bucket=<b>`` directories of the terms' buckets are
     read, as explicit paths under ``basePath`` with the schema given: the

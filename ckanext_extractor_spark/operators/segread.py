@@ -7,10 +7,12 @@ construction, but each lookup paid a full Spark job (plan + schedule +
 collect ≈ 0.2-0.3 s on local[32]); measured, the cold-query latency was
 ~95% job overhead, ~5% read. When the index root is on a LOCAL
 filesystem, these lookups are served by pyarrow directly: the same
-files, the same partition/row-group pruning (hive ``term_bucket=N``
-directories + parquet min/max stats on the lexically-sorted ``term``
-column), no JVM round-trip. Non-local roots (hdfs://, s3a://) keep the
-Spark path — FsIO.is_local is the single routing predicate.
+files, the same partition/row-group pruning (only the ``term_bucket=N``
+directories of the query terms' buckets are listed and opened, with the
+bucket count the generation was written with; then parquet min/max
+stats on the lexically-sorted ``term`` column), no JVM round-trip.
+Non-local roots (hdfs://, s3a://) keep the Spark path — FsIO.is_local
+is the single routing predicate.
 
 This is an I/O-path swap, not a semantic change: rows come back as
 dicts with exactly the columns the Spark ``collect()`` produced, and the
@@ -44,6 +46,35 @@ def buckets_for_terms(terms: Iterable[str], n_buckets: int) -> list[int]:
     return sorted({xxh64_str(t) % n_buckets for t in terms})
 
 
+def _bucket_dataset(lp: str, buckets: Iterable[int]):
+    """A dataset over the part files of the ``term_bucket=<b>``
+    directories of ``buckets`` only — the generation's other buckets are
+    never listed — with ``term_bucket`` parsed from the directory names,
+    as a hive-discovered read of the whole table returns it. None when
+    no bucket has a directory (it holds no rows)."""
+    import pyarrow as pa
+    import pyarrow.dataset as pads
+
+    files = []
+    for b in buckets:
+        d = os.path.join(lp, f"term_bucket={b}")
+        if os.path.isdir(d):
+            files.extend(
+                os.path.join(d, f) for f in sorted(os.listdir(d))
+                if not f.startswith(("_", "."))
+            )
+    if not files:
+        return None
+    return pads.dataset(
+        files,
+        format="parquet",
+        partitioning=pads.partitioning(
+            pa.schema([("term_bucket", pa.int32())]), flavor="hive"
+        ),
+        partition_base_dir=lp,
+    )
+
+
 def read_segment_rows(
     path: str,
     terms: list[str] | None,
@@ -52,34 +83,26 @@ def read_segment_rows(
 ) -> list[dict]:
     """One generation's segment rows as dicts (pyarrow, local FS only).
 
-    Mirrors ``read_segments(...).collect()``: hive partition pruning on
-    ``term_bucket`` for the query terms' buckets, residual exact
-    ``term IN`` filter (row-group pruned via parquet min/max on the
-    lexically-sorted term column).
+    Mirrors ``read_segments(...).collect()``: with ``terms``, only the
+    files of the terms' buckets are opened (``n_buckets`` is the bucket
+    count the generation was written with), and a residual exact
+    ``term IN`` filter prunes row groups via parquet min/max on the
+    lexically-sorted term column. Without terms, the whole table.
     """
     import pyarrow.dataset as pads
 
     lp = _local_path(path)
     if not os.path.isdir(lp):
         return []
-    dataset = pads.dataset(lp, format="parquet", partitioning="hive")
-    filt = None
-    if terms:
-        buckets = buckets_for_terms(terms, n_buckets)
-        filt = pads.field("term_bucket").isin(buckets) & pads.field(
-            "term"
-        ).isin(list(terms))
-    return dataset.to_table(filter=filt, columns=columns).to_pylist()
-
-
-def count_rows(path: str) -> int:
-    """Row count from parquet footer metadata — zero data pages read."""
-    import pyarrow.dataset as pads
-
-    lp = _local_path(path)
-    return int(
-        pads.dataset(lp, format="parquet", partitioning="hive").count_rows()
-    )
+    if not terms:
+        dataset = pads.dataset(lp, format="parquet", partitioning="hive")
+        return dataset.to_table(columns=columns).to_pylist()
+    dataset = _bucket_dataset(lp, buckets_for_terms(terms, n_buckets))
+    if dataset is None:
+        return []
+    return dataset.to_table(
+        filter=pads.field("term").isin(list(terms)), columns=columns
+    ).to_pylist()
 
 
 def count_non_null(path: str, column: str) -> int:
@@ -108,16 +131,11 @@ def count_non_null(path: str, column: str) -> int:
 def read_bucket_term_stats(path: str, bucket: int = 0) -> list[tuple]:
     """(term, n_postings) pairs of ONE term_bucket partition — metadata
     columns only, zero blob pages (serves warm()'s warming-term pick)."""
-    import pyarrow.dataset as pads
-
     lp = _local_path(path)
-    if not os.path.isdir(lp):
+    dataset = _bucket_dataset(lp, [bucket]) if os.path.isdir(lp) else None
+    if dataset is None:
         return []
-    dataset = pads.dataset(lp, format="parquet", partitioning="hive")
-    tbl = dataset.to_table(
-        filter=pads.field("term_bucket") == bucket,
-        columns=["term", "n_postings"],
-    )
+    tbl = dataset.to_table(columns=["term", "n_postings"])
     return list(zip(tbl.column("term").to_pylist(),
                     tbl.column("n_postings").to_pylist()))
 

@@ -14,7 +14,7 @@ from ckanext_extractor_spark.corpus import corpus_pdf
 
 # Spark jobs of one fresh build of a corpus without a metadata column or
 # doc store (README, "Incremental builds, lineage, resume").
-FRESH_BUILD_JOB_BUDGET = 16
+FRESH_BUILD_JOB_BUDGET = 14
 
 
 def _jobs(spark) -> dict[int, str]:

@@ -217,6 +217,30 @@ def test_failed_build_keeps_the_old_copies_of_its_docs(
         assert e.index_stats()["tombstones"] == 1
 
 
+def test_failed_build_counts_no_tombstones(spark, tmp_path, monkeypatch):
+    """The tombstone row a failed build appended sits above the committed
+    seq and applies to nothing, so ``index_stats()`` counts none, on the
+    same and on a reopened engine."""
+    pdf = corpus_pdf(20)
+    root = str(tmp_path / "failcount")
+    eng = ExtractorEngine(spark, root, n_buckets=8, salt_threshold=50)
+    eng.extract(spark.createDataFrame(pdf), build_id="t1")
+    pdf2 = pdf.copy()
+    pdf2.loc[pdf2.index[3], "content"] = "rewritten zzfresh text"
+
+    def boom(*a, **kw):
+        raise RuntimeError("encode failed")
+
+    monkeypatch.setattr(ExtractorEngine, "_encode_and_write_segments", boom)
+    with pytest.raises(RuntimeError, match="encode failed"):
+        eng.extract(spark.createDataFrame(pdf2), build_id="t2")
+    monkeypatch.undo()
+    _, seqs = eng._read_tombstones()
+    assert (seqs > eng._seq).sum() == 1  # the failed build's row is there
+    for e in (eng, ExtractorEngine(spark, root)):
+        assert e.index_stats()["tombstones"] == 0
+
+
 def test_delete_reaches_the_distributed_paths(spark, tmp_path):
     """On one engine object, distributed queries run before a delete
     (building the mask broadcast), and after it none returns the

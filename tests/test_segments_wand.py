@@ -184,35 +184,3 @@ def test_distributed_segment_scoring_matches(ctx):
     assert np.allclose(
         [r["score"] for r in got], [r["score"] for r in slow], rtol=1e-9
     )
-
-
-def test_hash_keyed_encode_identical_to_string_path(ctx):
-    """hash_terms=True slims the exchange (xxhash64 key + once-per-shard
-    sentinel dictionary rows) but must yield EXACTLY the segment rows of
-    the string exchange: same terms, same blobs byte-for-byte, same
-    block metadata."""
-    spark, _, postings, dictionary, stats, _, docs = ctx
-    salted = salted_postings(postings, dictionary, n_buckets=N_BUCKETS,
-                             salt_threshold=50)
-
-    def canon(df):
-        rows = df.collect()
-        return sorted(
-            (
-                r["term"],
-                r["term_bucket"],
-                int(r["n_postings"]),
-                hashlib.sha256(bytes(r["blob"])).hexdigest(),
-                tuple(r["block_last_doc"]),
-                tuple(np.round(r["block_max_tfn"], 12)),
-                tuple(r["block_offs"]),
-            )
-            for r in rows
-        )
-
-    a = canon(encode_segments(salted, docs, with_positions=True,
-                              n_buckets=N_BUCKETS, hash_terms=False))
-    b = canon(encode_segments(salted, docs, with_positions=True,
-                              n_buckets=N_BUCKETS, hash_terms=True))
-    # salt_id differs by construction (task id); everything else must not
-    assert a == b

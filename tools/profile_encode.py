@@ -82,12 +82,10 @@ def main() -> None:
 
     # session-default Arrow batch size (1024): the production path uses it
     # and A/B showed 65536 slower for the encode kernel (NOTES.md)
-    hash_terms = len(sys.argv) > 4 and sys.argv[4] == "hash"
-    out["hash_terms"] = hash_terms
     from ckanext_extractor_spark.operators.segread import read_doc_markers
 
     seg = encode_segments(salted, read_doc_markers(staging), n_tasks=n_tasks,
-                          n_buckets=128, hash_terms=hash_terms)
+                          n_buckets=128)
     out["plus_kernel"] = noop_sink(seg)
 
     dest = tempfile.mkdtemp(prefix="prof_seg_", dir="/dev/shm")
