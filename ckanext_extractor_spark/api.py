@@ -122,6 +122,10 @@ from ckanext_extractor_spark.operators.segments import (
     write_segments,
 )
 from ckanext_extractor_spark.operators.codec import GenDocs, live_masks
+from ckanext_extractor_spark.operators.segread import (
+    SEGMENT_ROW_COLUMNS,
+    SegmentStore,
+)
 
 #: on-disk segment format, recorded in index_meta.json: 2 = postings store
 #: doc ordinals and doc lengths live in ``gens/<g>/docs`` (codec.py). An
@@ -346,7 +350,7 @@ class ExtractorEngine:
     DEAD_FRAC = 0.25
     MAX_GENS = 12
     # decoded-postings serving cache budget (see warm()); raw segment rows
-    # are preloaded only when their on-disk size fits RAW_PRELOAD_BYTES.
+    # are preloaded only when their resident size fits RAW_PRELOAD_BYTES.
     DECODED_BUDGET_BYTES = 1 << 30
     RAW_PRELOAD_BYTES = 1 << 30
     # filter/negation scale routing: an fq match set or excluded-term
@@ -435,14 +439,15 @@ class ExtractorEngine:
         self.store_content = store_content
         self.store_offsets = store_offsets
         self.auth_context = auth_context
-        # serving caches (warm()): raw segment rows + LRU decoded postings
-        self._rows_cache: dict[str, list] | None = None
+        # serving caches (warm()): the preloaded segment store, or the
+        # lazy byte-bounded LRU of raw segment rows; LRU decoded postings
+        self._store: "SegmentStore | None" = None
+        self._rows_cache: "OrderedDict[str, list] | None" = None
         self._raw_bytes = 0
         self._raw_budget = self.RAW_PRELOAD_BYTES
         self._decoded_cache: "OrderedDict[str, object]" = OrderedDict()
         self._decoded_bytes = 0
         self._decoded_budget = self.DECODED_BUDGET_BYTES
-        self._lazy_serve = False
         self._stats_cache: dict | None = None
         self._tomb_count: int | None = None
         # memoized top-k results keyed (query, k, conjunctive, mode) —
@@ -874,14 +879,18 @@ class ExtractorEngine:
         # is appended straight from the staging marker scan — so a fresh
         # build stays within the job budget in the README.
         # Sequential-equivalence:
-        #   * every task reads only OLD table files, the staging dir or the
-        #     cached `statused`, all immutable during the group;
-        #   * the manifest is written to a temp dir in-task and SWAPPED
-        #     only after every task joined (deferred publish): a cache
-        #     block recomputed mid-group still reads the old manifest, and
-        #     a failed task leaves the old manifest in place, so a re-run
-        #     of the build_id re-indexes the same docs;
-        #   * avgdl is pre-read (corpus_stats is replaced by a task);
+        #   * every task reads only OLD table files, the staging dir, its
+        #     own staged temp dirs or the cached `statused`, all immutable
+        #     during the group;
+        #   * every side table (doc_stats, corpus_stats, field_norms,
+        #     field_postings, the manifest, doc_store) is written to a
+        #     temp dir in-task and SWAPPED only after every task joined
+        #     (deferred publish): a cache block recomputed mid-group still
+        #     reads the old tables, and a failed task or encode leaves
+        #     every committed table in place, so the committed index keeps
+        #     its stats and a re-run of the build_id re-indexes the same
+        #     docs;
+        #   * corpus_stats is derived from the staged doc_stats dir;
         #   * publish order within each dependency chain is unchanged
         #     (norms before field_postings, doc_stats before corpus_stats).
         # A task failure surfaces after the group joins and fails the
@@ -925,12 +934,20 @@ class ExtractorEngine:
                 batch_stats = kept_ds.unionByName(
                     batch_stats, allowMissingColumns=True
                 )
-            ds_path = self._p("doc_stats")
-            _atomic_overwrite(batch_stats, ds_path, spark)
-            stats = build_corpus_stats(
-                spark.read.schema(batch_stats.schema).parquet(ds_path)
+            publish_ds = _atomic_overwrite_staged(
+                batch_stats, self._p("doc_stats"), spark
             )
-            _atomic_overwrite(stats, self._p("corpus_stats"), spark)
+            stats = build_corpus_stats(
+                spark.read.schema(batch_stats.schema).parquet(
+                    publish_ds.staged_path
+                )
+            )
+            deferred.extend([
+                publish_ds,
+                _atomic_overwrite_staged(
+                    stats, self._p("corpus_stats"), spark
+                ),
+            ])
 
         def t_fields_manifest():
             if "metadata" in statused.columns:
@@ -961,9 +978,15 @@ class ExtractorEngine:
                     batch_norms = kept_norms.unionByName(batch_norms)
                 # norms publish FIRST: the pre-norms upgrade branch derives
                 # kept docs' norms from the OLD field_postings files, which
-                # the postings publish below replaces
-                _atomic_overwrite(batch_norms, self._p("field_norms"), spark)
-                _atomic_overwrite(batch_fp, self._p("field_postings"), spark)
+                # the postings publish replaces
+                deferred.extend([
+                    _atomic_overwrite_staged(
+                        batch_norms, self._p("field_norms"), spark
+                    ),
+                    _atomic_overwrite_staged(
+                        batch_fp, self._p("field_postings"), spark
+                    ),
+                ])
             # manifest: heavy write now, swap deferred past the group join
             new_manifest = statused.select(
                 "doc_id",
@@ -1013,7 +1036,9 @@ class ExtractorEngine:
                 batch_store = prev_store.join(
                     dropped_ids, "doc_id", "left_anti"
                 ).unionByName(batch_store, allowMissingColumns=True)
-            _atomic_overwrite(batch_store, self._p("doc_store"), spark)
+            deferred.append(_atomic_overwrite_staged(
+                batch_store, self._p("doc_store"), spark
+            ))
 
         mpath = self._p("doc_manifest")
         deferred: list = []
@@ -2763,31 +2788,32 @@ class ExtractorEngine:
 
     def warm(self, max_cache_bytes: int | None = None) -> "ExtractorEngine":
         """Enable low-latency serving — the analog of Solr's filter/document
-        caches (solrconfig.xml:319-347). Per-query cost becomes a hash
+        caches (solrconfig.xml:319-347). Per-query cost becomes a term
         lookup + numpy decode (memoized), no Spark job at all for cache
         hits.
 
         ``max_cache_bytes`` bounds the DECODED postings cache (LRU,
-        evicted by insertion recency). Raw segment rows (compressed blobs,
-        ~1-5% of corpus size) are preloaded only when their on-disk size
-        fits RAW_PRELOAD_BYTES / the given budget; otherwise serving is
-        lazy — a cache miss does a bucket-pruned parquet read of just that
-        term and joins the LRU. Cold and warm paths return identical
-        results (pinned by tests)."""
+        evicted by insertion recency). Every generation's segment rows
+        (compressed blobs and block metadata) are preloaded as one
+        columnar :class:`~ckanext_extractor_spark.operators.segread.SegmentStore`
+        when their resident size — the uncompressed column bytes that the
+        parquet footers record, read before loading — fits
+        RAW_PRELOAD_BYTES and the given budget; only a looked-up term's
+        rows ever become Python objects. Otherwise serving is lazy: a
+        cache miss does a bucket-pruned parquet read of just that term
+        and joins a byte-bounded LRU of raw rows. Cold and warm paths
+        return identical results (pinned by tests)."""
         budget = max_cache_bytes or self.DECODED_BUDGET_BYTES
         self._decoded_budget = budget
         self._decoded_cache = OrderedDict()
         self._decoded_bytes = 0
-        disk = self._segments_disk_bytes()
+        self._store = None
+        self._rows_cache = None
         preload_cap = min(self.RAW_PRELOAD_BYTES, budget)
-        if disk <= preload_cap:
-            cache: dict[str, list] = {}
-            for r in self._read_rows(None):
-                cache.setdefault(r["term"], []).append(r)
-            self._rows_cache = cache
-            self._lazy_serve = False
+        if self._segments_resident_bytes() <= preload_cap:
+            self._store = self._load_store()
         else:
-            # lazy serving: the raw-blob cache is LRU-bounded by the same
+            # lazy serving: the raw-row cache is LRU-bounded by the same
             # budget class as the preload path — without accounting, a
             # long-tail query workload grows it without bound and defeats
             # the memory cap warm() exists to provide (ADVICE r2,
@@ -2795,7 +2821,6 @@ class ExtractorEngine:
             self._rows_cache = OrderedDict()
             self._raw_bytes = 0
             self._raw_budget = preload_cap
-            self._lazy_serve = True
         self._docs_by_gen()  # build the live masks
         # Slow-path warming (Solr firstSearcher analog): execute ONE
         # query through the oracle path's physical shape — the decode
@@ -2814,29 +2839,73 @@ class ExtractorEngine:
             pass
         return self
 
+    @property
+    def _lazy_serve(self) -> bool:
+        """Warmed with rows served through the lazy raw-row LRU."""
+        return self._rows_cache is not None
+
+    def _load_store(self) -> SegmentStore:
+        """Every generation's segment table as one SegmentStore: pyarrow
+        reads on a local root, one Spark ``toArrow()`` elsewhere."""
+        docs = self._docs_by_gen()
+        if self.fs.is_local:
+            from ckanext_extractor_spark.operators.segread import (
+                read_segment_table,
+            )
+
+            return SegmentStore(
+                (
+                    read_segment_table(p, list(SEGMENT_ROW_COLUMNS)),
+                    g["seq"], docs[g["gen"]],
+                )
+                for g, p in self._segment_gens()
+            )
+        import pyarrow.compute as pc
+
+        seg = self._segments_union()
+        if seg is None:
+            return SegmentStore([])
+        table = seg.toArrow()
+        return SegmentStore(
+            (
+                table.filter(pc.field("gen") == g["gen"]),
+                g["seq"], docs[g["gen"]],
+            )
+            for g in self._gens
+        )
+
+    def _segment_gens(self) -> "list[tuple[dict, str]]":
+        """(generation, segments path) of every generation whose segments
+        dir holds part files, in generation order."""
+        out = []
+        for g in self._gens:
+            p = self._gen_segments_path(g)
+            if self.fs.exists(p) and self._has_part_files(p):
+                out.append((g, p))
+        return out
+
     def _warming_terms(self) -> list[str]:
         """Two real index terms with the smallest df, for the warm()
         warming query: the intermediate stages must carry rows (an
         all-miss query leaves AQE's downstream stages uncompiled — the
         whole point of warming), and the smallest lists make the warming
         execution as cheap as one scan + a handful of rows. Sources, in
-        order: the preloaded raw-rows cache; a pyarrow metadata-only
-        read of one term_bucket partition (term + n_postings columns —
-        zero blob pages) on local roots; else none (plan pre-build still
-        happened; non-local roots skip execution warming)."""
+        order: the preloaded store's per-term df; a pyarrow
+        metadata-only read of one term_bucket partition (term +
+        n_postings columns — zero blob pages) on local roots; else none
+        (plan pre-build still happened; non-local roots skip execution
+        warming)."""
+        if self._store is not None:
+            # terms are sorted, so a stable sort by df breaks ties by term
+            first = np.argsort(self._store.df, kind="stable")[:2]
+            return [self._store.terms[i] for i in first]
         stats: dict[str, int] = {}
-        if self._rows_cache and not self._lazy_serve:
-            for t, rows in self._rows_cache.items():
-                stats[t] = sum(int(r["n_postings"] or 0) for r in rows)
-        elif self.fs.is_local:
+        if self.fs.is_local:
             from ckanext_extractor_spark.operators.segread import (
                 read_bucket_term_stats,
             )
 
-            for g in self._gens:
-                p = self._gen_segments_path(g)
-                if not self.fs.exists(p) or not self._has_part_files(p):
-                    continue
+            for _, p in self._segment_gens():
                 for t, n in read_bucket_term_stats(p, bucket=0):
                     stats[t] = stats.get(t, 0) + int(n)
         return [t for t, _ in sorted(stats.items(), key=lambda kv: (kv[1], kv[0]))[:2]]
@@ -2846,12 +2915,19 @@ class ExtractorEngine:
             self.fs.tree_size(self._gen_segments_path(g)) for g in self._gens
         )
 
+    def _segments_resident_bytes(self) -> int:
+        """What the segment tables take once decoded into memory: their
+        footers' uncompressed column bytes."""
+        return sum(
+            self.fs.parquet_data_bytes(p) for _, p in self._segment_gens()
+        )
+
     def cool(self) -> None:
+        self._store = None
         self._rows_cache = None
         self._raw_bytes = 0
         self._decoded_cache = OrderedDict()
         self._decoded_bytes = 0
-        self._lazy_serve = False
         self._stats_cache = None
         self._tomb_count = None
         self._query_cache.clear()
@@ -2912,12 +2988,6 @@ class ExtractorEngine:
         before the count was recorded per generation."""
         return int(g.get("n_buckets", self.n_buckets))
 
-    #: canonical segment-row columns (what the Spark union path collects)
-    _SEGMENT_ROW_COLUMNS = (
-        "term", "salt_id", "n_postings", "blob", "block_last_doc",
-        "block_max_tfn", "block_offs", "term_bucket",
-    )
-
     def _local_segment_rows(
         self, terms: list[str] | None, columns: list[str] | None = None
     ) -> "list[dict] | None":
@@ -2940,13 +3010,8 @@ class ExtractorEngine:
         )
 
         out: list[dict] = []
-        want = columns if columns is not None else list(
-            self._SEGMENT_ROW_COLUMNS
-        )
-        for g in self._gens:
-            p = self._gen_segments_path(g)
-            if not self.fs.exists(p) or not self._has_part_files(p):
-                continue
+        want = columns if columns is not None else list(SEGMENT_ROW_COLUMNS)
+        for g, p in self._segment_gens():
             rows = read_segment_rows(
                 p, terms, self._gen_buckets(g), columns=want
             )
@@ -2978,18 +3043,27 @@ class ExtractorEngine:
             out.setdefault(r["term"], []).append(r)
         return out
 
+    def _rows_by_term(self, terms: list[str]) -> dict[str, list]:
+        """Raw segment rows per term ([] for a term with none) — the one
+        row source of the driver kernels: the preloaded store, the lazy
+        raw-row LRU (misses fetched in one cold read, then inserted), or
+        a cold bucket-pruned read."""
+        if self._store is not None:
+            return {t: self._store.rows(t) for t in terms}
+        if self._rows_cache is None:
+            return self._fetch_rows(terms)
+        out = {t: self._rows_cache[t] for t in terms if t in self._rows_cache}
+        missing = [t for t in terms if t not in out]
+        if missing:
+            for t, rows in self._fetch_rows(missing).items():
+                self._raw_put(t, rows)
+                out[t] = rows
+        return out
+
     def _segment_rows(self, term: str) -> list:
-        """Raw segment rows (blobs) for one term — warm dict, lazy-cached,
-        or cold bucket-pruned read. Used by phrase verification."""
-        if self._rows_cache is not None:
-            if term in self._rows_cache:
-                return self._rows_cache[term]
-            if not self._lazy_serve:
-                return []
-            rows = self._fetch_rows([term])[term]
-            self._raw_put(term, rows)
-            return rows
-        return self._fetch_rows([term]).get(term, [])
+        """Raw segment rows (blobs) for one term. Used by phrase
+        verification."""
+        return self._rows_by_term([term])[term]
 
     def search_field_frame(self, field: str, query: str) -> DataFrame | None:
         """Docs whose metadata `field` contains ALL query tokens (Q5 —
@@ -4008,7 +4082,7 @@ class ExtractorEngine:
         ``docFreq``, tombstoned docs still count until compaction (MLT
         term selection tolerates that, exactly as Lucene MLT does).
 
-        Warm path: a sum over the cached raw rows. Cold path: small
+        Warm path: the preloaded store's per-term sums. Cold path: small
         candidate sets (fuzzy/prefix expansions, MLT vocabularies up to
         the expansion cap) go through the bucket+term-PRUNED segments
         read — partition pruning plus an In-pushdown, touching only the
@@ -4017,13 +4091,8 @@ class ExtractorEngine:
         broadcast of the candidates."""
         if not terms:
             return {}
-        if self._rows_cache is not None and not self._lazy_serve:
-            return {
-                t: sum(
-                    int(r["n_postings"]) for r in self._rows_cache.get(t, [])
-                )
-                for t in terms
-            }
+        if self._store is not None:
+            return self._store.df_of(terms)
         if len(terms) <= self.PREFIX_MAX_EXPANSIONS:
             local = self._local_segment_rows(
                 list(terms), columns=["term", "n_postings"]
@@ -4464,9 +4533,10 @@ class ExtractorEngine:
         self, prefix: str, max_expansions: int | None = None
     ) -> list[str]:
         """Index terms starting with ``prefix``, sorted (the Lucene
-        terms-dict seek behind PrefixQuery). Warm mode scans the cached
-        term dictionary; cold mode is a distinct over the segment term
-        column with the StringStartsWith filter pushed to parquet
+        terms-dict seek behind PrefixQuery). Warm mode is a binary-search
+        range of the preloaded store's sorted terms; cold mode is a
+        distinct over the segment term column with the StringStartsWith
+        filter pushed to parquet
         (row-group min/max on term prune most of the dictionary).
         Raises when the expansion exceeds ``max_expansions`` (Lucene
         maxClauseCount analog) — a too-generic prefix should fail loudly,
@@ -4474,8 +4544,9 @@ class ExtractorEngine:
         self._check_access("extractor_search")
         p = self._normalize_prefix(prefix)
         cap = max_expansions or self.PREFIX_MAX_EXPANSIONS
-        if self._rows_cache is not None and not self._lazy_serve:
-            terms = sorted(t for t in self._rows_cache if t.startswith(p))
+        if self._store is not None:
+            lo, hi = self._store.prefix_range(p)
+            terms = self._store.terms[lo:hi]
         else:
             seg = self._segments_union()
             if seg is None:
@@ -4530,8 +4601,8 @@ class ExtractorEngine:
         Python UDF, no BatchEvalPython node; optimization r6) over the
         single-initial distinct-terms slice — a dictionary-sized op,
         never a postings scan — and only the matching terms collected,
-        capped at maxClauseCount. Warm mode filters the cached term
-        dictionary."""
+        capped at maxClauseCount. Warm mode filters the preloaded
+        store's terms with the same initial (a binary-search range)."""
         self._check_access("extractor_search")
         from ckanext_extractor_spark.analysis.phonetic import soundex
 
@@ -4549,11 +4620,11 @@ class ExtractorEngine:
             )
         cap = max_expansions or self.PREFIX_MAX_EXPANSIONS
         first = t[0]
-        if self._rows_cache is not None and not self._lazy_serve:
-            terms = sorted(
-                x for x in self._rows_cache
-                if x.startswith(first) and soundex(x) == code
-            )
+        if self._store is not None:
+            lo, hi = self._store.prefix_range(first)
+            terms = [
+                x for x in self._store.terms[lo:hi] if soundex(x) == code
+            ]
         else:
             seg = self._segments_union()
             if seg is None:
@@ -4918,8 +4989,8 @@ class ExtractorEngine:
         self, pattern: str, max_expansions: int | None = None
     ) -> list[str]:
         """Index terms matching a ``*``/``?`` glob (Lucene WildcardQuery
-        term expansion). Warm mode fnmatches the cached term dictionary;
-        cold mode scans distinct segment terms with the leading literal
+        term expansion). Warm mode fnmatches the preloaded store's terms
+        in the binary-search range of the leading literal run; cold mode scans distinct segment terms with the leading literal
         run pushed as a StringStartsWith parquet filter (the terms-dict
         seek Lucene gets from its FST — row-group min/max on term prune
         everything before the first wildcard). Caps like expand_prefix."""
@@ -4940,13 +5011,14 @@ class ExtractorEngine:
                 f"pattern needs at least one literal character: {pattern!r}"
             )
         cap = max_expansions or self.PREFIX_MAX_EXPANSIONS
-        if self._rows_cache is not None and not self._lazy_serve:
-            terms = sorted(fnmatch.filter(self._rows_cache, p))
+        lead = re.match(r"[a-z0-9]*", p).group(0)
+        if self._store is not None:
+            lo, hi = self._store.prefix_range(lead)
+            terms = fnmatch.filter(self._store.terms[lo:hi], p)
         else:
             seg = self._segments_union()
             if seg is None:
                 return []
-            lead = re.match(r"[a-z0-9]*", p).group(0)
             scan = seg.select("term")
             if lead:
                 scan = scan.where(F.col("term").startswith(lead))
@@ -4987,8 +5059,8 @@ class ExtractorEngine:
     ) -> list[str]:
         """Index terms within ``max_edits`` Levenshtein distance of
         ``term`` (Lucene FuzzyQuery expansion; edit ceiling 2 matches
-        LevenshteinAutomata). Warm mode runs a banded DP over the cached
-        dictionary; cold mode scans distinct segment terms with a pushed
+        LevenshteinAutomata). Warm mode runs a banded DP over the
+        preloaded store's terms; cold mode scans distinct segment terms with a pushed
         length-window filter, then Spark's built-in thresholded
         levenshtein — the candidate set never leaves the cluster
         unfiltered."""
@@ -5023,12 +5095,12 @@ class ExtractorEngine:
         found: dict[str, list[str]] = {p: [] for p in ps}
         if not ps:
             return {}
-        if self._rows_cache is not None and not self._lazy_serve:
+        if self._store is not None:
             for p in ps:
-                found[p] = sorted(
-                    t for t in self._rows_cache
+                found[p] = [
+                    t for t in self._store.terms
                     if _edit_distance_leq(p, t, max_edits)
-                )
+                ]
         else:
             seg = self._segments_union()
             if seg is not None:
@@ -6728,7 +6800,8 @@ class ExtractorEngine:
         (the same pinned divergence MLT/suggest carry; Solr's terms
         component reports exactly these uncorrected docFreqs too).
 
-        Warm path: a driver pass over the cached dictionary. Cold path:
+        Warm path: a driver pass over the preloaded store's terms and
+        per-term df (the prefix as a binary-search range). Cold path:
         one column-pruned (term, n_postings) scan with the prefix pushed
         as StringStartsWith (the regex filters AFTER the pushed prefix —
         pair them to keep the scan pruned); only ``limit`` rows reach
@@ -6771,14 +6844,18 @@ class ExtractorEngine:
             )
             return sorted(pairs, key=key)[:limit]
 
-        if self._rows_cache is not None and not self._lazy_serve:
-            cand = (
-                (t, sum(int(r["n_postings"]) for r in rows))
-                for t, rows in self._rows_cache.items()
-                if (p is None or t.startswith(p))
-                and (rx is None or rx.fullmatch(t) is not None)
+        if self._store is not None:
+            lo, hi = (
+                (0, len(self._store.terms)) if p is None
+                else self._store.prefix_range(p)
             )
-            return rank(tc for tc in cand if tc[1] >= min_df)
+            cand = zip(
+                self._store.terms[lo:hi], self._store.df[lo:hi].tolist()
+            )
+            return rank(
+                (t, n) for t, n in cand
+                if n >= min_df and (rx is None or rx.fullmatch(t) is not None)
+            )
         seg = self._segments_union()
         if seg is None:
             return []
@@ -7554,7 +7631,12 @@ class ExtractorEngine:
 
     def _gc_orphan_gens(self) -> None:
         """Drop gens/ dirs not in the committed generation list (crashed
-        builds/compactions that staged data but never committed meta)."""
+        builds/compactions that staged data but never committed meta),
+        and the ``<table>.tmp-*`` dirs of a build that failed before its
+        deferred publish."""
+        for d in self.fs.listdir(self.root):
+            if ".tmp-" in d:
+                self.fs.rmtree(self._p(d))
         groot = self._p("gens")
         if not self.fs.isdir(groot):
             return
@@ -7564,9 +7646,8 @@ class ExtractorEngine:
                 self.fs.rmtree(os.path.join(groot, d))
 
     def _term_postings(self, terms: list[str], st: dict) -> list:
-        """TermPostings for `terms` — decoded-LRU, raw-rows cache, or a
-        cold bucket-pruned segment read. Dead postings are dropped at
-        decode."""
+        """TermPostings for `terms` — decoded-LRU, else decoded from
+        :meth:`_rows_by_term`. Dead postings are dropped at decode."""
         from ckanext_extractor_spark.operators.wand import (
             term_postings_from_rows,
         )
@@ -7582,27 +7663,9 @@ class ExtractorEngine:
                 missing.append(t)
         if not missing:
             return out
-        if self._rows_cache is not None and not self._lazy_serve:
-            rows_by_term = {
-                t: self._rows_cache.get(t, []) for t in missing
-            }
-        else:
-            cached = {}
-            to_fetch = []
-            for t in missing:
-                if self._rows_cache is not None and t in self._rows_cache:
-                    cached[t] = self._rows_cache[t]
-                else:
-                    to_fetch.append(t)
-            rows_by_term = dict(cached)
-            if to_fetch:
-                fetched = self._fetch_rows(to_fetch)
-                rows_by_term.update(fetched)
-                if self._rows_cache is not None:
-                    for ft, frows in fetched.items():
-                        self._raw_put(ft, frows)
+        rows_by_term = self._rows_by_term(missing)
         for t in missing:
-            rows = rows_by_term.get(t) or []
+            rows = rows_by_term[t]
             if not rows:
                 continue
             tp = term_postings_from_rows(t, rows, st["n_docs"], st["avgdl"])
@@ -7611,36 +7674,17 @@ class ExtractorEngine:
         return out
 
     def _lazy_term_postings(self, terms: list[str], st: dict):
-        """LazyTermPostings per term from raw segment rows (warm cache,
-        lazy LRU, or a cold bucket-pruned read) — metadata-only until the
-        scorer decodes blocks on demand. Only valid while no generation
-        has a dead ordinal (caller checks)."""
+        """LazyTermPostings per term from :meth:`_rows_by_term` —
+        metadata-only until the scorer decodes blocks on demand. Only
+        valid while no generation has a dead ordinal (caller checks)."""
         from ckanext_extractor_spark.operators.wand import LazyTermPostings
 
-        if self._rows_cache is not None and not self._lazy_serve:
-            rows_by_term = {t: self._rows_cache.get(t, []) for t in terms}
-        else:
-            rows_by_term = {}
-            to_fetch = []
-            for t in terms:
-                if self._rows_cache is not None and t in self._rows_cache:
-                    rows_by_term[t] = self._rows_cache[t]
-                else:
-                    to_fetch.append(t)
-            if to_fetch:
-                fetched = self._fetch_rows(to_fetch)
-                rows_by_term.update(fetched)
-                if self._rows_cache is not None:
-                    for ft, frows in fetched.items():
-                        self._raw_put(ft, frows)
-        out = []
-        for t in terms:
-            rows = rows_by_term.get(t) or []
-            if rows:
-                out.append(
-                    LazyTermPostings(t, rows, st["n_docs"], st["avgdl"])
-                )
-        return out
+        rows_by_term = self._rows_by_term(terms)
+        return [
+            LazyTermPostings(t, rows_by_term[t], st["n_docs"], st["avgdl"])
+            for t in terms
+            if rows_by_term[t]
+        ]
 
     @staticmethod
     def _raw_rows_bytes(rows: list) -> int:
@@ -7652,13 +7696,7 @@ class ExtractorEngine:
     def _raw_put(self, term: str, rows: list) -> None:
         """Insert raw segment rows into the lazy-serving cache with byte
         accounting + LRU eviction (mirror of _lru_put for decoded lists;
-        only used when _lazy_serve — the preload path bounds itself by
-        construction)."""
-        if self._rows_cache is None:
-            return
-        if not self._lazy_serve:
-            self._rows_cache[term] = rows
-            return
+        the preloaded store is bounded before it is loaded)."""
         size = self._raw_rows_bytes(rows)
         old = self._rows_cache.pop(term, None)
         if old is not None:
@@ -7726,7 +7764,9 @@ def _atomic_overwrite_staged(
     overlapped stage group (guide §2.6) run the heavy write concurrently
     with sibling jobs whose lazy plans still read the OLD table, and
     perform the (millisecond) swap only after every sibling has joined —
-    publish order stays exactly the sequential build's. ``write`` (default
+    publish order stays exactly the sequential build's. The callable's
+    ``staged_path`` names the temp dir, which a table derived from this
+    one reads before the swap. ``write`` (default
     :func:`~ckanext_extractor_spark.fsio.write_table`) writes the temp
     dir."""
     fs = FsIO(spark, path)
@@ -7742,6 +7782,7 @@ def _atomic_overwrite_staged(
         if fs.exists(old):
             fs.rmtree(old)
 
+    publish.staged_path = tmp
     return publish
 
 

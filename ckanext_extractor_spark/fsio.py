@@ -82,6 +82,7 @@ class FsIO:
             self._jvm = jvm
             self._gateway = spark.sparkContext._gateway
             hconf = spark._jsc.hadoopConfiguration()
+            self._hconf = hconf
             self._jfs = jvm.org.apache.hadoop.fs.FileSystem.get(
                 jvm.java.net.URI(root), hconf
             )
@@ -276,6 +277,43 @@ class FsIO:
             if it.next().getPath().getName().endswith(".parquet"):
                 return True
         return False
+
+    def parquet_data_bytes(self, path: str) -> int:
+        """Uncompressed bytes of the column data of every parquet file
+        under ``path``, summed over the row groups of their footers: the
+        size of the table once decoded into memory. No data page is
+        read."""
+        if self.is_local:
+            import pyarrow.parquet as pq
+
+            total = 0
+            for dirpath, _, files in os.walk(_lp(path)):
+                for fn in files:
+                    if fn.endswith(".parquet"):
+                        md = pq.read_metadata(os.path.join(dirpath, fn))
+                        total += sum(
+                            md.row_group(i).total_byte_size
+                            for i in range(md.num_row_groups)
+                        )
+            return total
+        hadoop = self._jvm.org.apache.parquet.hadoop
+        total = 0
+        it = self._jfs.listFiles(self._jpath(path), True)
+        while it.hasNext():
+            st = it.next()
+            if not st.getPath().getName().endswith(".parquet"):
+                continue
+            reader = hadoop.ParquetFileReader.open(
+                hadoop.util.HadoopInputFile.fromStatus(st, self._hconf)
+            )
+            try:
+                total += sum(
+                    b.getTotalByteSize()
+                    for b in reader.getFooter().getBlocks()
+                )
+            finally:
+                reader.close()
+        return total
 
     def tree_size(self, path: str) -> int:
         """Total bytes under `path` (0 if absent)."""

@@ -241,6 +241,79 @@ def test_failed_build_counts_no_tombstones(spark, tmp_path, monkeypatch):
         assert e.index_stats()["tombstones"] == 0
 
 
+def test_failed_build_leaves_the_committed_side_tables(
+    spark, tmp_path, monkeypatch
+):
+    """A build whose encode fails publishes none of its side tables, so
+    a reopened engine reads the committed doc_stats, corpus_stats, field
+    tables, manifest and doc store: its stats, the edited doc's row and
+    every exact and slow score are the committed ones. The next build
+    that commits publishes them and leaves no staged dir behind."""
+    pdf = corpus_pdf(40)
+    schema = (
+        "repo string, path string, commit string, lang string, "
+        "content string, metadata map<string, array<string>>"
+    )
+
+    def frame(df, groups):
+        return spark.createDataFrame(
+            [tuple(r) + ({"group": [g]},)
+             for r, g in zip(df.itertuples(index=False), groups)],
+            schema,
+        )
+
+    groups = [f"g{i % 3}" for i in range(len(pdf))]
+    root = str(tmp_path / "failside")
+    kw = dict(n_buckets=8, salt_threshold=50, store_content=True,
+              indexed_fields=("group",))
+    eng = ExtractorEngine(spark, root, **kw)
+    eng.extract(frame(pdf, groups), build_id="c1")
+    [(doc, _)] = eng.search("golden000005x", k=5)
+    queries = [("data value", True), ("data value", False),
+               ("golden000005x", True), ("vector stream batch", False)]
+
+    def state(e):
+        st = e.corpus_stats()
+        return (
+            (int(st["n_docs"]), float(st["avgdl"])),
+            e.show(doc),
+            e.search_field("group", "g2"),
+            {(q, c, m): e.search(q, k=10, conjunctive=c, mode=m)
+             for q, c in queries for m in ("exact", "slow")},
+        )
+
+    def same(got, want):
+        assert got[:3] == want[:3]
+        for key, ref in want[3].items():
+            assert [d for d, _ in got[3][key]] == [d for d, _ in ref], key
+            assert np.allclose([s for _, s in got[3][key]],
+                               [s for _, s in ref], rtol=1e-9), key
+
+    before = state(eng)
+    assert doc in before[2] and before[1]["doc_len"] > 3
+    pdf2 = pdf.copy()
+    pdf2.loc[5, "content"] = "rewritten zzfresh text"
+    groups2 = list(groups)
+    groups2[5] = "g1"
+
+    def boom(*a, **kw):
+        raise RuntimeError("encode failed")
+
+    monkeypatch.setattr(ExtractorEngine, "_encode_and_write_segments", boom)
+    with pytest.raises(RuntimeError, match="encode failed"):
+        eng.extract(frame(pdf2, groups2), build_id="c2")
+    monkeypatch.undo()
+    same(state(ExtractorEngine(spark, root, **kw)), before)
+
+    again = ExtractorEngine(spark, root, **kw)
+    assert again.extract(frame(pdf2, groups2), build_id="c3").n_indexed == 1
+    assert not [d for d in os.listdir(root) if ".tmp-" in d]
+    reopened = ExtractorEngine(spark, root, **kw)
+    assert reopened.show(doc)["doc_len"] == 3
+    assert doc not in reopened.search_field("group", "g2")
+    assert [d for d, _ in reopened.search("zzfresh", k=5)] == [doc]
+
+
 def test_delete_reaches_the_distributed_paths(spark, tmp_path):
     """On one engine object, distributed queries run before a delete
     (building the mask broadcast), and after it none returns the
